@@ -338,9 +338,8 @@ real cluster — is pinned by a hot conversation while the rest idle.
 
 | engine | runs (sec) | notes |
 |---|---|---|
-| arrow (default, fused kernel) | 4.4, 3.3, 3.1 (r3 window); 3.6, 4.1, 4.7 (r5 interleaved A/B, noisier window) | sorted-stream shuffle + ONE fused pass (tokenize→collect→validate→render JSON+XML in a single loop; per-batch vectorized XML text escaping; opt-in Arrow-vectorized JSON lines via SPARK_GRAFT_VEC_JLINES on real clusters — wins at <=8-wide, loses to this host's 32-wide bandwidth ceiling) |
+| arrow (default, fused kernel) | 4.4, 3.3, 3.1 (r3 window); 3.6, 4.1, 4.7 (r5 interleaved A/B, noisier window) | sorted-stream shuffle + ONE fused pass (tokenize→collect→validate→render JSON+XML in a single loop; per-batch vectorized XML text escaping) |
 | sql (all-JVM relational) | 9.4, 9.5, 10.1 (r5 interleaved A/B; r4 code measured 11.0-12.1 in the same session) | round 5: ONE fact-table scan — EXECVE args collected in the main aggregation, validated per conversation behind an explode Generate boundary; fused JSON+XML collect_lists. ~2.2x arrow with both languages; zero Python workers |
-| expr (all-JVM, test-only)  | 66.0 (r2) | Catalyst higher-order-function lambdas run in the interpreted evaluator — kept as the semantics/verification path, byte-equal to arrow by test |
 
 ## Host-generation drift (measured 2026-08-17, late round-5 window)
 

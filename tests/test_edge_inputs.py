@@ -22,7 +22,7 @@ def _df(spark, rows):
     return spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
 
 
-@pytest.mark.parametrize("engine", ["arrow", "arrow_agg", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_empty_input_frame(spark, engine):
     df = spark.createDataFrame([], schema=schemas.TRANSCRIPTS)
     sinks = pipeline.build(
@@ -39,7 +39,7 @@ def test_empty_input_frame(spark, engine):
     }
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_null_text_turns(spark, engine):
     """text is nullable in the input schema; null tokenizes like '' (the
     oracle's `row["text"] or ""`), renders as a null text line, and must

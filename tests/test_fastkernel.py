@@ -3,8 +3,8 @@
 The fused kernel (fastkernel.render_conv) must produce byte-identical docs,
 XML, and error envelopes to the boring single-process reference path
 (oracle.parse_turn → coalesce_conv → doc_object → render.xml_from_doc) for
-every config knob and the grammar's edge cases. The Spark-level 3-engine
-test pins the same equality end-to-end; this one localizes failures."""
+every config knob and the grammar's edge cases. The Spark-level engine
+matrix pins the same equality end-to-end; this one localizes failures."""
 
 from __future__ import annotations
 
@@ -19,8 +19,8 @@ from transcriptpipe import fastkernel, oracle, render, synth
 def oracle_render(conv_id, rows, min_ts, capped, max_doc_bytes, events_per_doc,
                   with_text, with_norm):
     """The pre-round-3 kernel path, verbatim: ParsedTurn + coalesce_conv +
-    doc_object + trim cascade + xml_from_doc (arrow_docs._render_one's
-    semantics driven purely through oracle.py)."""
+    doc_object + trim cascade + xml_from_doc, driven purely through
+    oracle.py."""
     turns = [
         oracle.ParsedTurn(
             conv_id=conv_id, turn_idx=r[0],
@@ -156,25 +156,9 @@ def test_fastkernel_matches_oracle(cfg, capped):
         got2 = fastkernel.render_conv(conv_id, tup, min_ts, capped,
                                       cfg["max_doc_bytes"], 100,
                                       cfg["with_text"], cfg["with_norm"],
-                                      xml_line_frags=frags,
-                                      json_line_frags=
-                                      fastkernel.json_lines_vectorized(texts))
+                                      xml_line_frags=frags)
         assert got2 == got, conv_id
     assert n_docs > 50  # the corpus is non-trivial
-
-
-def test_json_lines_vectorized_byte_equal():
-    """The Arrow-kernel JSON line escaper is byte-equal to json_str on the
-    full escape surface (quotes, backslashes, every control char, unicode,
-    nulls) — round 5."""
-    cases = ['plain', 'with "quote"', 'back\\slash', 'mix "\\" q',
-             'ctrl\nline\tx', '\x00\x1f\x08\x0c\r', '', 'unicode é ☃',
-             'msg="a b" seq=1', None, '"', '\\', '\\"', 'end\\']
-    cases += [f"c{i}\x01" for i in range(3)] + [chr(c) for c in range(0x20)]
-    got = fastkernel.json_lines_vectorized(pd.Series(cases, dtype=object))
-    want = [fastkernel.json_str(t) if t is not None else "null"
-            for t in cases]
-    assert got == want
 
 
 def test_want_xml_false_skips_xml():

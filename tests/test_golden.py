@@ -49,7 +49,7 @@ def test_oracle_reproduces_golden(golden_input, golden_docs, golden_errors):
     assert result["error"] == golden_errors
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_spark_engines_reproduce_golden(spark, golden_input, golden_docs, engine):
     df = spark.createDataFrame(golden_input, schema=schemas.TRANSCRIPTS)
     sinks = pipeline.build(

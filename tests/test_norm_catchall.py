@@ -68,7 +68,7 @@ def _docs(spark, df, engine, **kw):
             sorted((r["conv_id"], r["error_code"]) for r in sinks["error"].collect()))
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_catch_all_unknown_role_in_data(spark, mixed_df, engine):
     docs, _ = _docs(spark, mixed_df, engine)
     d = json.loads(docs["conv-00000001"]["doc"])
@@ -77,7 +77,7 @@ def test_catch_all_unknown_role_in_data(spark, mixed_df, engine):
     assert "system" in d["data"] and "user" in d["data"]
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_repeated_unknown_role_errors(spark, mixed_df, engine):
     docs, errs = _docs(spark, mixed_df, engine)
     d = docs["conv-00000002"]
@@ -86,7 +86,7 @@ def test_repeated_unknown_role_errors(spark, mixed_df, engine):
     assert ("conv-00000002", schemas.ERR_REPEATED_RECORD) in errs
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_empty_event_filter_p2(spark, mixed_df, engine):
     docs, errs = _docs(spark, mixed_df, engine)
     assert "conv-00000003" not in docs
@@ -99,7 +99,7 @@ def test_p2_oracle_agrees(mixed_df):
     assert not any(d["conv_id"] == "conv-00000003" for d in out["json_doc"])
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_norm_section_contents(spark, mixed_df, engine):
     docs, _ = _docs(spark, mixed_df, engine, with_norm=True)
     n = json.loads(docs["conv-00000004"]["doc"])["norm"]
@@ -122,7 +122,7 @@ def test_norm_section_contents(spark, mixed_df, engine):
     assert "object_kind" not in n1
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_norm_in_xml(spark, mixed_df, engine):
     import xml.etree.ElementTree as ET
 
@@ -140,7 +140,7 @@ def test_norm_in_xml(spark, mixed_df, engine):
     assert root1.find("data/moderator") is not None
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_with_text_false_keeps_text_on_error(spark, mixed_df, engine):
     docs, _ = _docs(spark, mixed_df, engine, with_text=False)
     errored = json.loads(docs["conv-00000002"]["doc"])
@@ -149,7 +149,7 @@ def test_with_text_false_keeps_text_on_error(spark, mixed_df, engine):
     assert "text" not in clean
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_partial_text_trim_keeps_prefix(spark, mixed_df, engine):
     """A doc slightly over budget keeps a PREFIX of text lines (per-line
     trim, gbtree.c:468-553 analog) instead of losing all text."""
@@ -191,7 +191,7 @@ def test_prettify_passes(spark, mixed_df):
         ET.fromstring(x)
 
 
-@pytest.mark.parametrize("engine", ["arrow", "sql", "expr"])
+@pytest.mark.parametrize("engine", ["arrow", "sql"])
 def test_hot_conversation_cap_batch(spark, engine):
     """Skew defense: a hot conversation is capped at max_turns_per_conv by a
     NARROW filter (turn_idx is the position), marked trimmed, and cannot

@@ -1,8 +1,9 @@
 """Hypothesis property tests over the shared single-conversation semantics
 (SURVEY.md §5.2): arrival-order invariance, hex slice-split invariance, and
-trim monotonicity. These run on the pure-Python oracle — the engines are
+trim monotonicity. Most run on the pure-Python oracle — the engines are
 pinned byte-equal to it by tests/test_engines.py — so the properties hold
-for the Spark pipeline by transitivity."""
+for the Spark pipeline by transitivity; trim monotonicity drives the
+production render kernel (fastkernel.render_conv) directly."""
 
 from __future__ import annotations
 
@@ -86,21 +87,18 @@ def test_hex_slice_split_invariance(arg, cutpoints, perm):
 @settings(max_examples=40, deadline=None)
 def test_trim_monotonicity(msgs):
     """Smaller byte caps never produce bigger docs, and once trimmed, always
-    trimmed at tighter caps (gbtree trim analog)."""
-    from transcriptpipe import arrow_docs
+    trimmed at tighter caps (gbtree trim analog) — on the production render
+    kernel, fed rows the way the sorted render pass feeds them."""
+    from transcriptpipe import fastkernel
 
     specs = [("system", "msg=hello policy=x")] + [
         ("user", f"msg={m} seq={i}") for i, m in enumerate(msgs)
     ]
-    rows = _mk_rows("conv-00000009", specs)
-    turns = [
-        {"turn_idx": r["turn_idx"], "role_name": r["role"], "text": r["text"],
-         "tool": None, "tool_name": None}
-        for r in rows
-    ]
+    rows = [(r["turn_idx"], r["role"], r["text"], None, None)
+            for r in _mk_rows("conv-00000009", specs)]
     sizes, trims = [], []
     for cap in (10_000, 400, 220, 120, 60):
-        rec = arrow_docs._render_one("conv-00000009", turns, BASE, False, cap, 100)
+        rec = fastkernel.render_conv("conv-00000009", rows, BASE, False, cap, 100)
         assert rec is not None
         sizes.append(len(rec["doc"].encode()))
         trims.append(rec["trimmed"])

@@ -5,10 +5,12 @@ A from-scratch reimagining of the capabilities of Scribery/aushape
 multi-turn conversation/agent transcripts:
 
 * vectorized grok/kv field extraction + hex decoding   (parse.py,   ref lib/record.c, lib/execve_coll.c)
-* per-conversation event coalescing with collectors    (coalesce.py, ref lib/conv_buf.c, lib/*_coll.c)
 * broadcast-dictionary enrichment                      (enrich.py,  ref auparse interpret, lib/field.c:112-114)
-* JSON/XML document rendering + size-capped trimming   (render.py,  ref lib/gbtree.c trim, lib/gbuf.c escape)
-* router fan-out to per-doctype sinks + metrics        (route.py, metrics.py, ref lib/output.c, lib/conv.c)
+* per-conversation coalescing, trimming and JSON/XML   (arrow_docs.py + fastkernel.py, or relational.py;
+  rendering in one pass over the conv_id exchange       ref lib/conv_buf.c, lib/*_coll.c, lib/gbtree.c trim)
+* XML escaping and fold/indent pretty-printing         (render.py,  ref lib/gbuf.c)
+* router fan-out to per-doctype sinks + metrics        (route.py, pipeline.py, ref lib/output.c, lib/conv.c)
+* the layer chain enrich → exchange → render → stage → sinks  (pipeline.py)
 * snapshot-checkpointed, resumable writes              (sinks.py,   new design; north_rule requirement)
 
 Everything here is built on the public PySpark DataFrame API; no code is

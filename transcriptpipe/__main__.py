@@ -102,11 +102,11 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--indent", type=int, default=4,
                    help="spaces per nesting level when folding "
                         "(reference --indent default 4)")
-    p.add_argument("--engine", choices=["arrow", "sql", "expr", "arrow_agg"],
+    p.add_argument("--engine", choices=["arrow", "sql"],
                    default="arrow",
-                   help="arrow: fused Python-kernel Arrow stage (fastest); "
-                        "sql: all-JVM relational engine (no Python workers); "
-                        "expr/arrow_agg: verification paths")
+                   help="render engine. arrow: fused Python-kernel Arrow "
+                        "stage (fastest); sql: all-JVM relational engine "
+                        "(no Python workers)")
     p.add_argument("--run-id", default=None,
                    help="resumable run id (default: derived from input)")
     p.add_argument("--stream", action="store_true",

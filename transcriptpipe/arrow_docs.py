@@ -1,29 +1,23 @@
-"""Arrow-batched document assembly+render — the fast path for the coalesce
-output.
+"""The arrow render: one mapInPandas pass over the sorted exchange that
+assembles, trims and renders every conversation — the default engine's
+render layer (pipeline.render).
 
-Motivation (measured, bench 4.5M turns / 400k convs on local[32]): the pure-
-Catalyst assemble/render path (coalesce.assemble_docs + render.render_json)
-is built from higher-order-function lambdas that Spark evaluates with the
-interpreted expression evaluator — ~43s warm and 3-5x worse cold (JIT ramp).
-The same per-conversation logic as ONE mapInPandas pass over the aggregated
-turn arrays runs in vectorized-batch Python (Arrow transfer, ~1k convs per
-batch) and renders JSON + XML + trim in a single traversal.
-
-Semantics are identical by construction: the per-conversation assembly is
-the SAME code as the single-process oracle (oracle.coalesce_conv), which the
-test suite already holds byte-equal to the Catalyst path. Both engines stay
-available behind PipeConf.engine ("arrow" default, "expr" for the all-JVM
-plan); tests pin their equivalence.
+The exchange (pipeline.exchange) delivers flat raw turns partitioned on
+conv_id and sorted by (conv_id, turn_idx), so a conversation's rows are
+consecutive. This pass groups them, applies the turn cap, and hands each
+conversation to the fused kernel (fastkernel.render_conv), which tokenizes,
+collects, validates and renders JSON + XML + trim in a single traversal.
+Its output is byte-equal to the single-process oracle (oracle.py) — pinned
+by tests/test_fastkernel.py, the golden corpus and the arrow-vs-sql engine
+matrix.
 
 This is exactly the aushape shape: one pass per event, assemble → trim →
-render (/root/reference/lib/conv_buf.c:355-709), vectorized over Arrow
-batches instead of one callback per event.
+render (aushape lib/conv_buf.c:355-709), vectorized over Arrow batches
+instead of one callback per event.
 """
 
 from __future__ import annotations
 
-import json
-import re
 from collections.abc import Iterator
 
 import numpy as np
@@ -31,7 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from . import oracle, render
+# the kernel's input columns (pipeline.exchange selects exactly these)
+SORTED_COLS = ["conv_id", "turn_idx", "role_name", "text", "tool", "tool_name", "ts"]
 
 DOC_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
@@ -54,141 +49,18 @@ DOC_SCHEMA = T.StructType([
     ),
 ])
 
-_SERIAL_RE = re.compile(r"(\d+)$")
 
-# tasks per core in the render stage: waves pack tightly and a skewed
-# (hot-conversation) partition costs a fraction of a core-slot, not a
-# straggler wave (tuned empirically — see BENCH/BASELINE.md)
-PART_MULT = 4
-
-# opt-in vectorized JSON text-line escaping (see the note at the call
-# site); read once at import so executors see a consistent setting
-import os as _os
-
-_VEC_JLINES = _os.environ.get("SPARK_GRAFT_VEC_JLINES", "") == "1"
-
-
-def _fields_dict(fields) -> dict:
-    """Arrow map -> ordered dict of key -> [interpreted, raw?]."""
-    if fields is None:
-        return {}
-    if isinstance(fields, dict):
-        items = fields.items()
-    else:  # list of (k, v) tuples (Arrow map representation)
-        items = fields
-    return {k: list(v) for k, v in items}
-
-
-def _turn_from_struct(conv_id: str, d: dict, min_ts) -> oracle.ParsedTurn:
-    if "fields" in d and d["fields"] is not None:
-        # pre-parsed path (expr-parse upstream): reconstruct the kv view for
-        # arg reassembly — interpreted value, except hex fields where the raw
-        # (last) element is the tokenizer's value
-        fields = _fields_dict(d["fields"])
-        keys = list(fields.keys())
-        vals = [fields[k][-1] if k == "hex" else fields[k][0] for k in keys]
-        item_idx = int(d["item_idx"]) if d["item_idx"] is not None else None
-        row_error = d["row_error"]
-    else:
-        # fast path: raw text shuffled, tokenize here (same code as the
-        # single-process oracle — the vectorized Arrow grok stage)
-        keys, vals, fields, item_idx, row_error = oracle.parse_text(d["text"] or "")
-        if row_error is None and d["tool"] is not None and d["tool_name"] is None:
-            row_error = oracle.schemas.ERR_UNKNOWN_TOOL
-    return oracle.ParsedTurn(
-        conv_id=conv_id,
-        turn_idx=int(d["turn_idx"]),
-        role=d["role_name"],
-        text=d["text"],
-        tool=d.get("tool", d["tool_name"]),
-        tool_name=d["tool_name"],
-        ts=min_ts,
-        keys=keys,
-        vals=vals,
-        fields=fields,
-        item_idx=item_idx,
-        row_error=row_error,
-    )
-
-
-def _render_one(conv_id: str, turns, min_ts, turn_capped: bool,
-                max_doc_bytes: int | None, events_per_doc: int,
-                with_text: bool = True, with_norm: bool = False) -> dict | None:
-    pturns = [_turn_from_struct(conv_id, t, min_ts) for t in turns]
-    conv = oracle.coalesce_conv(pturns)
-    if conv["n_records"] == 0 and conv["error"] is None:
-        return None  # P2 empty-event drop (ref lib/conv_buf.c:570-574)
-
-    last_obj: list = [None]
-
-    def dump(text: bool, norm: bool, data: bool, trimmed: bool,
-             text_lines: int | None = None) -> str:
-        # base text presence = with_text OR errored (conv_buf.c:663-667);
-        # the trim cascade may then drop it (text is trimmed first)
-        obj = oracle.doc_object(conv, with_text=with_text,
-                                with_norm=norm and with_norm)
-        if not text:
-            obj.pop("text", None)
-        elif text_lines is not None and "text" in obj:
-            obj["text"] = obj["text"][:text_lines]
-        if not data:
-            obj.pop("data", None)
-        if trimmed:
-            obj["trimmed"] = True
-        last_obj[0] = obj
-        return json.dumps(obj, ensure_ascii=False, separators=(",", ":"))
-
-    full = dump(True, True, True, False)
-    trimmed = bool(turn_capped)
-    doc = full
-    if max_doc_bytes is not None and len(full.encode("utf-8")) > max_doc_bytes:
-        # priority trim (ref lib/gbtree.c:555-606 drop order): text lines
-        # from the END first (line number = node priority, so a doc slightly
-        # over budget keeps a text prefix — the proportional-trim analog of
-        # gbtree.c:468-553), then the whole text member, then norm, then data
-        trimmed = True
-        k = oracle.max_text_lines(
-            conv["texts"],
-            max_doc_bytes - len(dump(False, True, True, True).encode("utf-8")),
-        ) if (with_text or conv["error"]) else 0
-        if k > 0:
-            doc = dump(True, True, True, True, text_lines=k)
-        else:
-            doc = full
-            for variant in ((False, True, True), (False, False, True),
-                            (False, False, False)):
-                doc = dump(*variant, True)
-                if len(doc.encode("utf-8")) <= max_doc_bytes:
-                    break
-
-    xml = render.xml_from_doc(last_obj[0])
-    return {
-        "conv_id": conv_id,
-        "doc_id": conv["serial"] // events_per_doc if conv["serial"] is not None else None,
-        "serial": conv["serial"],
-        "time": oracle.iso_time(min_ts),
-        "n_turns": conv["n_turns"],
-        "doc": doc,
-        "xml": xml,
-        "trimmed": trimmed,
-        "error": conv["error"],
-        "row_errs": [
-            (t.turn_idx, t.row_error, t.text) for t in pturns if t.row_error
-        ],
-    }
-
-
-def render_docs_sorted(enriched: DataFrame, max_doc_bytes: int | None = 8192,
+def render_docs_sorted(sorted_turns: DataFrame, max_doc_bytes: int | None = 8192,
                        events_per_doc: int = 100, with_text: bool = True,
                        with_norm: bool = False,
                        max_turns_per_conv: int | None = None,
                        want_xml: bool = True) -> DataFrame:
-    """Sorted-stream coalesce+render: repartition by conv_id, Tungsten
-    sortWithinPartitions (binary, spillable — no per-group JVM objects at
-    all), then ONE mapInPandas pass that groups consecutive rows per
-    conversation and assembles/renders each — aushape's sequential
-    event-stream model (lib/conv.c one callback per completed event),
-    vectorized over Arrow batches.
+    """Sorted-stream coalesce+render: ONE mapInPandas pass over the
+    exchange's output (``SORTED_COLS``, partitioned on conv_id, sorted by
+    (conv_id, turn_idx)) that groups consecutive rows per conversation and
+    assembles/renders each — aushape's sequential event-stream model
+    (lib/conv.c one callback per completed event), vectorized over Arrow
+    batches.
 
     This is the 10^12-row shape: the exchange carries flat rows, the sort
     spills, and per-task state is exactly one in-flight conversation
@@ -198,29 +70,10 @@ def render_docs_sorted(enriched: DataFrame, max_doc_bytes: int | None = 8192,
     Turn capping (max_event_size analog): pass ``max_turns_per_conv`` and
     the cap is enforced IN THIS PASS — rows are consecutive per conversation
     after the sort, so beyond-cap rows are dropped and the doc marked
-    trimmed locally, with NO pre-aggregation scan / shuffle / broadcast
-    (pipeline.cap_turns exists for the expr engine, whose grouped
-    collect_list needs the bound upstream). Alternatively a precomputed
-    boolean ``turn_capped`` column is honored.
-
-    Expects columns: conv_id, turn_idx, role_name, text, tool, tool_name,
-    ts, and optionally turn_capped.
+    trimmed locally, with NO pre-aggregation scan / shuffle / broadcast.
     """
-    has_cap = "turn_capped" in enriched.columns
     cap = max_turns_per_conv
-    cols = ["conv_id", "turn_idx", "role_name", "text", "tool", "tool_name", "ts"]
-    if has_cap:
-        cols.append("turn_capped")
-    # explicit partition count: 4 tasks per core so waves pack tightly and a
-    # skewed (hot-conversation) partition costs 1/4 core-slot, not a straggler
-    # wave. Event-log measured: 47 auto partitions on 32 cores = 1.5 waves
-    # with a 14s max task; 4x parallelism cuts wall ~25%.
-    n_parts = enriched.sparkSession.sparkContext.defaultParallelism * PART_MULT
-    df = (
-        enriched.select(*cols)
-        .repartition(n_parts, "conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx")
-    )
+    out_cols = [f.name for f in DOC_SCHEMA.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from . import fastkernel
@@ -230,16 +83,15 @@ def render_docs_sorted(enriched: DataFrame, max_doc_bytes: int | None = 8192,
         carry: list[tuple] | None = None  # [(turn_idx, role, text, tool, tool_name)]
         carry_min_us: int | None = None
         carry_frags: list | None = None
-        carry_jl: list | None = None
         carry_capped = False
         out: list[dict] = []
 
-        def flush(key: str, rows: list[tuple], min_us: int, frags, jl,
+        def flush(key: str, rows: list[tuple], min_us: int, frags,
                   capped: bool) -> None:
             rec = render_conv(key, rows, pd.Timestamp(min_us, unit="us"),
                               capped, max_doc_bytes, events_per_doc,
                               with_text, with_norm, xml_line_frags=frags,
-                              json_line_frags=jl, want_xml=want_xml)
+                              want_xml=want_xml)
             if rec is not None:
                 out.append(rec)
 
@@ -257,9 +109,7 @@ def render_docs_sorted(enriched: DataFrame, max_doc_bytes: int | None = 8192,
             ids = pdf["conv_id"].to_numpy()
             n = len(ids)
             if n == 0:
-                if carry_key is not None and carry_key in capped_ids:
-                    carry_capped = True  # batch held only over-cap rows
-                continue
+                continue  # batch held only over-cap rows (carry marked above)
             data = list(zip(
                 pdf["turn_idx"].to_numpy().tolist(),
                 pdf["role_name"].to_numpy().tolist(),
@@ -269,17 +119,6 @@ def render_docs_sorted(enriched: DataFrame, max_doc_bytes: int | None = 8192,
             ))
             frags_all = (fastkernel.xml_lines_vectorized(pdf["text"])
                          if want_xml else None)
-            # vectorized JSON line literals (round 5) — OPT-IN: the Arrow
-            # replace passes are a measured ~10% kernel win per core and
-            # win end-to-end up to ~8 concurrent workers, but their extra
-            # pandas->Arrow->list conversions are pure memory traffic that
-            # LOSES at 32 workers on the sandbox's bandwidth-starved shared
-            # host (alternating fresh-JVM A/B; see COVERAGE.md round 5).
-            # On a real cluster (few cores per executor, per-node
-            # bandwidth) set SPARK_GRAFT_VEC_JLINES=1.
-            jlines_all = (fastkernel.json_lines_vectorized(pdf["text"])
-                          if (with_text and _VEC_JLINES) else None)
-            caps = pdf["turn_capped"].tolist() if has_cap else None
             # vectorized group boundaries + per-group min(ts): ONE numpy pass
             # instead of materializing 10^5 pd.Timestamp objects per batch
             starts = np.flatnonzero(
@@ -293,63 +132,29 @@ def render_docs_sorted(enriched: DataFrame, max_doc_bytes: int | None = 8192,
                 key = ids[i]
                 rows = data[i:j]
                 row_frags = frags_all[i:j] if frags_all is not None else None
-                row_jl = jlines_all[i:j] if jlines_all is not None else None
                 min_us = int(mins[g])
-                kc = key in capped_ids or bool(caps and caps[i] is not None and caps[i])
+                kc = key in capped_ids
                 if carry_key is not None and key == carry_key:
                     rows = carry + rows
                     if row_frags is not None:
                         row_frags = carry_frags + row_frags
-                    if row_jl is not None:
-                        row_jl = carry_jl + row_jl
                     min_us = min(min_us, carry_min_us)
                     kc = kc or carry_capped
                 elif carry_key is not None:
-                    flush(carry_key, carry, carry_min_us, carry_frags,
-                          carry_jl, carry_capped)
+                    flush(carry_key, carry, carry_min_us, carry_frags, carry_capped)
                 if j == n:  # group may continue in the next batch
-                    (carry_key, carry, carry_min_us, carry_frags, carry_jl,
-                     carry_capped) = (key, rows, min_us, row_frags, row_jl, kc)
+                    carry_key, carry, carry_min_us, carry_frags, carry_capped = (
+                        key, rows, min_us, row_frags, kc)
                 else:
-                    flush(key, rows, min_us, row_frags, row_jl, kc)
-                    (carry_key, carry, carry_min_us, carry_frags, carry_jl,
-                     carry_capped) = (None, None, None, None, None, False)
+                    flush(key, rows, min_us, row_frags, kc)
+                    carry_key, carry, carry_min_us, carry_frags, carry_capped = (
+                        None, None, None, None, False)
             if len(out) >= 256:
-                yield pd.DataFrame(out, columns=[f.name for f in DOC_SCHEMA.fields])
+                yield pd.DataFrame(out, columns=out_cols)
                 out = []
         if carry_key is not None:
-            flush(carry_key, carry, carry_min_us, carry_frags, carry_jl,
-                  carry_capped)
+            flush(carry_key, carry, carry_min_us, carry_frags, carry_capped)
         if out:
-            yield pd.DataFrame(out, columns=[f.name for f in DOC_SCHEMA.fields])
+            yield pd.DataFrame(out, columns=out_cols)
 
-    return df.mapInPandas(run, schema=DOC_SCHEMA)
-
-
-def render_docs_arrow(coalesced: DataFrame, max_doc_bytes: int | None = 8192,
-                      events_per_doc: int = 100, with_text: bool = True,
-                      with_norm: bool = False) -> DataFrame:
-    """coalesce_events output (+ optional turn_capped column) -> doc frame
-    with json, xml, error, and row-error columns, in one Arrow pass."""
-    has_cap = "turn_capped" in coalesced.columns
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            caps = pdf["turn_capped"] if has_cap else None
-            for i in range(len(pdf)):
-                rec = _render_one(
-                    pdf["conv_id"].iat[i],
-                    pdf["turns"].iat[i],
-                    pdf["min_ts"].iat[i],
-                    bool(caps.iat[i]) if caps is not None and pd.notna(caps.iat[i]) else False,
-                    max_doc_bytes,
-                    events_per_doc,
-                    with_text,
-                    with_norm,
-                )
-                if rec is not None:
-                    out.append(rec)
-            yield pd.DataFrame(out, columns=[f.name for f in DOC_SCHEMA.fields])
-
-    return coalesced.mapInPandas(run, schema=DOC_SCHEMA)
+    return sorted_turns.mapInPandas(run, schema=DOC_SCHEMA)

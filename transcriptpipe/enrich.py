@@ -6,9 +6,11 @@ lib/execve_coll.c:242,360. Ours are explicit small dimension tables joined
 with an explicit ``broadcast()`` hint, so at 10^12 rows the lookup is a
 map-side hash probe — no shuffle of the fact table, ever.
 
-Unknown codes are the anti-join case: a non-null ``tool`` code with no
-dictionary hit becomes an UNKNOWN_TOOL row error routed to the error sink
-(the reference would fail interpretation; we route, never throw).
+``enrich`` is the pipeline's first layer. It adds no error column: a
+non-null ``tool`` code with no dictionary hit leaves ``tool_name`` null, and
+each render engine (the Arrow kernel, relational.py) turns that into an
+UNKNOWN_TOOL row error routed to the error sink (the reference would fail
+interpretation; we route, never throw).
 """
 
 from __future__ import annotations
@@ -36,17 +38,17 @@ def enrich_roles(df: DataFrame, roles: DataFrame) -> DataFrame:
     )
 
 
-def enrich_tools(df: DataFrame, tools: DataFrame) -> DataFrame:
-    """Resolve tool codes; unknown non-null codes become UNKNOWN_TOOL errors."""
-    out = df.join(F.broadcast(tools), df["tool"] == tools["tool_code"], "left").drop(
-        "tool_code", "tool_kind"
-    )
-    unknown = F.col("tool").isNotNull() & F.col("tool_name").isNull()
-    return out.withColumn(
-        "row_error",
-        F.coalesce("row_error", F.when(unknown, F.lit(schemas.ERR_UNKNOWN_TOOL))),
-    )
-
-
 def enrich(df: DataFrame, spark: SparkSession) -> DataFrame:
-    return enrich_tools(enrich_roles(df, role_dict_df(spark)), tool_dict_df(spark))
+    """The enrich layer: null text becomes the empty line, then role names
+    and tool names come from two broadcast dictionary joins. Narrow — no
+    shuffle of the fact table.
+
+    A null text is the empty line because the reference's model is a log
+    line stream where 'missing' can only mean empty; the Python oracle
+    coerces ``row["text"] or ""`` the same way (oracle.parse_turn). The RAW
+    sink reads the input before this layer (byte-faithful passthrough)."""
+    df = enrich_roles(df.withColumn("text", F.coalesce("text", F.lit(""))),
+                      role_dict_df(spark))
+    return df.join(
+        F.broadcast(tool_dict_df(spark)), df["tool"] == F.col("tool_code"), "left"
+    ).drop("tool_code", "tool_kind")

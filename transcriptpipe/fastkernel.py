@@ -1,7 +1,7 @@
 """Fused per-conversation render kernel — the fast path inside the Arrow
 mapInPandas stage.
 
-Round-2 profile of the previous kernel (tools/profile_render.py, 185k turns):
+Round-2 profile of the previous per-conversation kernel (185k turns):
 ~36% tokenize + ParsedTurn dataclass construction, ~27% XML rendering, ~20%
 coalesce_conv (multi-pass list comprehensions, norm computed even when
 ``with_norm=False``, iso_time strftime called twice per doc). This module
@@ -26,9 +26,10 @@ conversation's turns with no intermediate per-turn objects:
   cascade re-dumps only the oversized minority
 
 Semantics are pinned byte-equal to the boring reference implementation in
-``oracle.py`` (which stays untouched as the verification path): the 3-engine
-byte-equality test, the golden corpus, and ``test_fastkernel.py`` (direct
-fastkernel-vs-oracle comparison over every fixture config) all assert it.
+``oracle.py`` (which stays untouched as the verification path): the
+arrow-vs-sql byte-equality test, the golden corpus, and
+``test_fastkernel.py`` (direct fastkernel-vs-oracle comparison over every
+fixture config) all assert it.
 
 Reference parity: this is the same one-pass-per-record model as aushape's
 conv_buf (each record touched once, collectors dispatch by type —
@@ -178,40 +179,10 @@ def xml_lines_vectorized(text_series):
     return frags.tolist()
 
 
-def json_lines_vectorized(text_series):
-    """Pre-escape a whole Arrow batch's text column into JSON string
-    literals ('"…"', or 'null' for null text) — the jlines input of
-    render_conv — with Arrow C++ kernels (round 5).
-
-    Unlike the XML side, a flagged-minority Python loop would not pay here:
-    MOST transcript lines contain a double quote (the kv grammar quotes
-    values), so the common backslash+quote rewrite runs as two vectorized
-    replace_substring passes (backslash first, exactly json_str's order);
-    only lines carrying control characters (rare) fall back to the scalar
-    json_str.  Byte-equal to json_str per line (pinned by test)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    arr = pa.Array.from_pandas(text_series)
-    esc = pc.replace_substring(arr, pattern="\\", replacement="\\\\")
-    esc = pc.replace_substring(esc, pattern='"', replacement='\\"')
-    out = pc.fill_null(pc.binary_join_element_wise('"', esc, '"', ""), "null")
-    vals = out.to_pylist()
-    ctrl = pc.fill_null(pc.match_substring_regex(arr, r"[\x00-\x1f]"), False)
-    idx = np.flatnonzero(ctrl.to_numpy(zero_copy_only=False))
-    if idx.size:
-        raw = text_series.to_numpy()
-        for i in idx:
-            vals[i] = json_str(raw[i])
-    return vals
-
-
 def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
                 max_doc_bytes: int | None, events_per_doc: int,
                 with_text: bool = True, with_norm: bool = False,
                 xml_line_frags: list | None = None,
-                json_line_frags: list | None = None,
                 want_xml: bool = True) -> dict | None:
     """One conversation -> doc record (or None for the P2 empty-event drop).
 
@@ -362,7 +333,7 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
                     catch_all.append((key, fields, frag, jf))
         # drop: contributes nothing
 
-    # ---- end-of-event validation (error precedence mirrors assemble_docs:
+    # ---- end-of-event validation (error precedence mirrors oracle.coalesce_conv:
     # add-time errors by earliest turn, then EXECVE, then PATH)
     error = min(add_errs)[1] if add_errs else None
 
@@ -516,8 +487,7 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
 
     jlines = None
     if text_on:
-        jlines = (json_line_frags if json_line_frags is not None
-                  else [jstr(t) if t is not None else "null" for t in texts])
+        jlines = [jstr(t) if t is not None else "null" for t in texts]
 
     def dump_s(n_text, norm_on: bool, data_on: bool, trimmed: bool) -> str:
         parts = [m_serial, m_time]

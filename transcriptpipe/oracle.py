@@ -114,7 +114,9 @@ def parse_turn(row: dict) -> ParsedTurn:
 
 
 def reassemble_args(turns: list[ParsedTurn]):
-    """Mirror of coalesce.reassemble_args — returns (args|None, error|None, seen)."""
+    """EXECVE argument reassembly (ref lib/execve_coll.c) — the rules
+    fastkernel._reassemble and relational._attach_args implement. Returns
+    (args|None, error|None, seen)."""
     whole: dict[int, list[str]] = {}
     lens: dict[int, list[int | None]] = {}
     slices: dict[int, list[tuple[int, str]]] = {}
@@ -218,7 +220,8 @@ def norm_object(conv_id: str, serial: int | None, turns: list[ParsedTurn],
 
 
 def coalesce_conv(turns: list[ParsedTurn]) -> dict:
-    """Mirror of coalesce.coalesce_events + assemble_docs for one conversation."""
+    """Coalesce one conversation's parsed turns into its event (collectors,
+    validation, serial) — what each render engine computes per conv_id."""
     turns = sorted(turns, key=lambda t: t.turn_idx)
     texts = [t.text for t in turns]
     min_ts = min(t.ts for t in turns)

@@ -1,41 +1,54 @@
-"""End-to-end pipeline: parse → enrich → coalesce → render → route.
+"""End-to-end pipeline: one chain of named layers, the same for every
+entry point (``build``, ``run``, ``jvm_stage_frame``, ``rendered_frame``):
 
-Stage boundaries = shuffle boundaries (SURVEY.md §3.3):
+    enrich → exchange → render → stage → sinks
 
-1. scan → parse → enrich      narrow (regexp + broadcast hash joins; stays in
-                              one whole-stage-codegen span)
-2. coalesce                   ONE shuffle of the fact table on conv_id
-3. args branch                explode of tool_call kv entries (small fraction)
-                              → two partial-aggregated shuffles on conv_id →
-                              joined back (AQE-planned, typically broadcast at
-                              small scale, shuffle-hash at large — both sides
-                              are conv_id-partitioned)
-4. render/route               narrow (to_json / XML pandas UDF / filters)
-5. metrics                    map-side-combinable count aggregates
+1. ``enrich``    narrow: null text → '', role and tool names from two
+                 broadcast dictionary joins (enrich.enrich; one
+                 whole-stage-codegen span, no shuffle of the fact table)
+2. ``exchange``  the ONE shuffle of the fact table: flat raw turns
+                 repartitioned on conv_id, then a Tungsten
+                 sortWithinPartitions(conv_id, turn_idx) — binary and
+                 spillable, no per-group JVM object state
+3. ``render``    engine "arrow" (default): one mapInPandas pass over the
+                 sorted stream (arrow_docs + fastkernel) that tokenizes,
+                 coalesces, caps, trims and renders JSON + XML per
+                 conversation. Engine "sql": relational.py, all JVM, with its
+                 own conv_id exchange. Both emit arrow_docs.DOC_SCHEMA.
+4. ``stage``     the rendered frame is written once to parquet
+                 (``stage_dir``) or persisted, so the sinks below are
+                 projections, not recomputations
+5. ``sinks``     fan-out to json_doc / xml_doc / error / raw, then S6 doc
+                 batching and F8 fold re-rendering (``_finish_sinks``)
 
-Skew (north_rule requirement): unbounded ``collect_list`` on a hot conv_id is
-the one operation AQE cannot fix (it re-splits join/sort skew, not grouped
-array assembly). Defense in depth:
-
-* ``cap_turns`` — conversations longer than ``max_turns_per_conv`` are capped
-  by a NARROW filter (turn_idx is already the per-conv position, so no count
-  pass is needed to cap); capped convs are detected with a map-side-combined
-  ``max(turn_idx)`` pre-aggregate whose output (only the offending conv_ids)
-  broadcasts back to mark docs ``trimmed``. This is the analog of aushape's
-  max_event_size trim (format.h:60-63) and bounds per-group state at any
-  scale — the 10^4-turn hot conversation costs at most cap rows of state.
-* AQE skew-join splitting stays on for the join stages.
+Skew (north_rule requirement): a hot conversation is bounded by
+``max_turns_per_conv`` (aushape's max_event_size trim, format.h:60-63). The
+arrow render drops beyond-cap rows inside the sorted pass — rows are
+consecutive per conversation there, so the bound needs no pre-aggregation;
+the sql render caps with ``cap_turns`` before its grouped aggregation. Per
+task, the arrow render holds one in-flight conversation of at most cap rows.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, replace
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import coalesce as C
-from . import enrich, parse, render, route
+from . import arrow_docs, relational, route
+from .enrich import enrich
+from .render import TIME_FMT, prettify_json, prettify_xml
+
+ENGINES = ("arrow", "sql")
+
+# tasks per core in the exchange: waves pack tightly and a skewed
+# (hot-conversation) partition costs 1/4 core-slot, not a straggler wave.
+# Event-log measured: 47 auto partitions on 32 cores = 1.5 waves with a 14s
+# max task; 4x parallelism cuts wall ~25% (see BENCH/BASELINE.md)
+PART_MULT = 4
 
 
 @dataclass
@@ -48,8 +61,8 @@ class PipeConf:
     """--with-norm analog: include the normalized summary section (norm{})
     in each event doc (ref lib/conv_buf.c:185-353; oracle.norm_object)."""
     persist: bool = True
-    """Persist the assembled docs (MEMORY_AND_DISK) so the four sinks don't
-    each recompute the full parse+coalesce when they are materialized as
+    """Persist the rendered docs (MEMORY_AND_DISK) so the four sinks don't
+    each recompute enrich+exchange+render when they are materialized as
     separate actions. At cluster scale the same role is played by a staging
     table; the flag exists so single-sink runs skip it."""
     stage_dir: str | None = None
@@ -60,15 +73,12 @@ class PipeConf:
     cluster pattern (staging table) and makes build() eager for the staging
     write."""
     engine: str = "arrow"
-    """'arrow' (default): assemble+trim+render in ONE fused mapInPandas pass
-    (fastkernel — the fastest path). 'sql': the all-JVM RELATIONAL engine
-    (relational.py — windows + conditional aggregates + native string
-    assembly, no interpreted HOF lambdas on the hot path; the fast JVM
-    alternative when Python workers are the constraint). 'expr': the
-    original Catalyst array-lambda path (coalesce.assemble_docs +
-    render.render_json), kept as the third independent implementation for
-    verification. All engines are semantics-identical; tests pin
-    byte-equality."""
+    """The render layer: 'arrow' (default) assembles, trims and renders in
+    ONE fused mapInPandas pass over the sorted exchange (fastkernel — the
+    fastest path). 'sql' is the all-JVM relational engine (relational.py —
+    windows + conditional aggregates + native string assembly; no Python
+    workers). Both are byte-equal to oracle.py; any other value raises
+    ValueError."""
     doc_batch: int | str | None = None
     """S6 document batching (format.h:52-59): when set, build() adds
     ``json_log`` / ``xml_log`` sinks grouping the per-event docs into
@@ -91,7 +101,11 @@ class PipeConf:
 
 
 def cap_turns(df: DataFrame, cap: int) -> tuple[DataFrame, DataFrame]:
-    """Narrow per-conv turn cap + tiny frame of capped conv_ids."""
+    """Narrow per-conv turn cap + tiny frame of capped conv_ids — the sql
+    render's bound on its grouped aggregation (the arrow render caps inside
+    its sorted pass instead). turn_idx is already the per-conv position, so
+    the cap itself is a filter; the capped ids come from a map-side-combined
+    ``max(turn_idx)`` and broadcast back to mark those docs ``trimmed``."""
     capped = (
         df.groupBy("conv_id")
         .agg(F.max("turn_idx").alias("_max_turn"))
@@ -115,187 +129,104 @@ def check_unique_turns(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def _norm_text(df: DataFrame) -> DataFrame:
-    """Boundary normalization: a null text is the empty line. The input
-    schema declares text nullable, and the reference's model is a log line
-    stream where 'missing' can only mean empty — the Python oracle has
-    always coerced ``row["text"] or ""`` (oracle.parse_turn), but the
-    engines used to carry the null through, rendering ``null`` text lines
-    and dropping the turn's (empty) fields object from the rep collectors
-    — an engine-vs-oracle divergence no fixture exercised until round 4's
-    edge-input probes. Narrow, one expression; the RAW sink is NOT
-    normalized (byte-faithful passthrough)."""
-    return df.withColumn("text", F.coalesce("text", F.lit("")))
+def exchange(enriched: DataFrame) -> DataFrame:
+    """The exchange layer: the render kernel's columns, repartitioned on
+    conv_id and sorted by (conv_id, turn_idx) within each partition — the
+    shape arrow_docs.render_docs_sorted consumes."""
+    n_parts = enriched.sparkSession.sparkContext.defaultParallelism * PART_MULT
+    return (
+        enriched.select(*arrow_docs.SORTED_COLS)
+        .repartition(n_parts, "conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+    )
 
 
-def build(spark: SparkSession, transcripts: DataFrame, conf: PipeConf | None = None
-          ) -> dict[str, DataFrame]:
-    """Build all sink DataFrames (lazy — nothing executes here)."""
-    conf = conf or PipeConf()
-
-    raw_src = transcripts            # raw sink keeps original bytes
-    transcripts = _norm_text(transcripts)
-
-    if conf.engine in ("arrow", "arrow_agg"):
-        # fast path: broadcast-enrich the RAW rows (no JVM tokenization),
-        # one shuffle of raw turns, then parse+assemble+render in the Arrow
-        # stage — the grok/kv tokenizer runs as the vectorized pandas stage
-        from . import arrow_docs
-
-        if conf.engine == "arrow":
-            # sorted-stream shape: flat binary shuffle + spillable sort,
-            # zero per-group JVM object state (the 10^12-row plan). The turn
-            # cap is enforced INSIDE the sorted pass (rows are consecutive
-            # per conversation), so no cap pre-aggregation scan / shuffle /
-            # broadcast is needed at all on this path.
-            enriched = enrich.enrich_roles(transcripts, enrich.role_dict_df(spark))
-            enriched = enriched.join(
-                F.broadcast(enrich.tool_dict_df(spark)),
-                enriched["tool"] == F.col("tool_code"),
-                "left",
-            ).drop("tool_code", "tool_kind")
-            rendered = arrow_docs.render_docs_sorted(
-                enriched,
-                max_doc_bytes=conf.max_doc_bytes,
-                events_per_doc=conf.events_per_doc,
-                with_text=conf.with_text,
-                with_norm=conf.with_norm,
-                max_turns_per_conv=conf.max_turns_per_conv,
-                want_xml="xml" in conf.langs,
-            )
-        else:
-            fact, capped_convs = cap_turns(transcripts, conf.max_turns_per_conv)
-            enriched = enrich.enrich_roles(fact, enrich.role_dict_df(spark))
-            enriched = enriched.join(
-                F.broadcast(enrich.tool_dict_df(spark)),
-                enriched["tool"] == F.col("tool_code"),
-                "left",
-            ).drop("tool_code", "tool_kind")
-            events = C.coalesce_events_raw(enriched)
-            events = events.join(F.broadcast(capped_convs), "conv_id", "left")
-            rendered = arrow_docs.render_docs_arrow(
-                events,
-                max_doc_bytes=conf.max_doc_bytes,
-                events_per_doc=conf.events_per_doc,
-                with_text=conf.with_text,
-                with_norm=conf.with_norm,
-            )
-        # every sink derives from the rendered frame (row errors travel on
-        # the doc row), so parse+coalesce+render must run once even though
-        # the four sinks are materialized as separate actions
-        if conf.stage_dir:
-            # staging is transient per-run scratch read a handful of times
-            # and discarded — cheap codec (lz4) beats the session's durable
-            # zstd here (measured: stage-write 6.3s zstd vs 4.1s lz4, sink
-            # projections 1.5s vs 0.6s at 1.1M turns); the real sinks keep
-            # the session codec through catalog.write
-            (rendered.write.mode("overwrite")
-             .option("compression", "lz4").parquet(conf.stage_dir))
-            rendered = spark.read.parquet(conf.stage_dir)
-        elif conf.persist:
-            from pyspark import StorageLevel
-
-            rendered = rendered.persist(StorageLevel.MEMORY_AND_DISK)
-        doc_cols = ["conv_id", "doc_id", "serial", "time", "n_turns"]
-        sinks = {}
-        if "json" in conf.langs:
-            sinks["json_doc"] = rendered.select(*doc_cols, "doc", "trimmed", "error")
-        if "xml" in conf.langs:
-            sinks["xml_doc"] = rendered.select(
-                *doc_cols, F.col("xml").alias("doc"), "trimmed", "error"
-            )
-        sinks["error"] = route.error_sink(rendered)
-        sinks["raw"] = route.raw_sink(raw_src)
-        _finish_sinks(sinks, conf)
-        return sinks
-
+def render(enriched: DataFrame, conf: PipeConf) -> DataFrame:
+    """The render layer: enriched turns → one doc row per conversation
+    (arrow_docs.DOC_SCHEMA: envelope, JSON doc, XML doc, row errors)."""
+    if conf.engine not in ENGINES:
+        raise ValueError(f"unknown engine {conf.engine!r}; expected one of {ENGINES}")
+    want_xml = "xml" in conf.langs
     if conf.engine == "sql":
-        # all-JVM relational engine: same rendered-frame shape as arrow.
-        # The shuffle carries RAW enriched turns; tokenization runs after.
-        from . import relational
-
-        fact, capped_convs = cap_turns(transcripts, conf.max_turns_per_conv)
-        enriched = enrich.enrich_roles(fact, enrich.role_dict_df(spark))
-        enriched = enriched.join(
-            F.broadcast(enrich.tool_dict_df(spark)),
-            enriched["tool"] == F.col("tool_code"),
-            "left",
-        ).drop("tool_code", "tool_kind")
-        enriched = enriched.join(F.broadcast(capped_convs), "conv_id", "left")
-        rendered = relational.render_docs_relational(
-            enriched,
+        fact, capped_convs = cap_turns(enriched, conf.max_turns_per_conv)
+        return relational.render_docs_relational(
+            fact.join(F.broadcast(capped_convs), "conv_id", "left"),
             max_doc_bytes=conf.max_doc_bytes,
             events_per_doc=conf.events_per_doc,
             with_text=conf.with_text,
             with_norm=conf.with_norm,
-            want_xml="xml" in conf.langs,
+            want_xml=want_xml,
         )
-        if conf.stage_dir:
-            (rendered.write.mode("overwrite")
-             .option("compression", "lz4").parquet(conf.stage_dir))
-            rendered = spark.read.parquet(conf.stage_dir)
-        elif conf.persist:
-            from pyspark import StorageLevel
-
-            rendered = rendered.persist(StorageLevel.MEMORY_AND_DISK)
-        doc_cols = ["conv_id", "doc_id", "serial", "time", "n_turns"]
-        sinks = {}
-        if "json" in conf.langs:
-            sinks["json_doc"] = rendered.select(*doc_cols, "doc", "trimmed", "error")
-        if "xml" in conf.langs:
-            sinks["xml_doc"] = rendered.select(
-                *doc_cols, F.col("xml").alias("doc"), "trimmed", "error"
-            )
-        sinks["error"] = route.error_sink(rendered)
-        sinks["raw"] = route.raw_sink(raw_src)
-        _finish_sinks(sinks, conf)
-        return sinks
-
-    fact, capped_convs = cap_turns(transcripts, conf.max_turns_per_conv)
-    parsed = parse.parse_turns(fact)
-    parsed = enrich.enrich(parsed, spark)
-    events = C.coalesce_events(parsed)
-    docs = C.assemble_docs(events)
-    docs = docs.join(F.broadcast(capped_convs), "conv_id", "left")
-    if conf.persist:
-        from pyspark import StorageLevel
-
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # P5 raw-text suppression (conv_buf.c:662-666) is handled inside
-    # render_json (text survives on errored events, conv_buf.c:663-667)
-    json_doc = render.render_json(
-        docs,
+    return arrow_docs.render_docs_sorted(
+        exchange(enriched),
         max_doc_bytes=conf.max_doc_bytes,
         events_per_doc=conf.events_per_doc,
         with_text=conf.with_text,
         with_norm=conf.with_norm,
+        max_turns_per_conv=conf.max_turns_per_conv,
+        want_xml=want_xml,
     )
 
-    sinks = {}
+
+def stage(rendered: DataFrame, conf: PipeConf) -> DataFrame:
+    """The stage layer: every sink derives from the rendered frame (row
+    errors travel on the doc row), so render must run once even though the
+    sinks are materialized as separate actions. With ``stage_dir`` the frame
+    is written there (eager) and read back; else it is persisted."""
+    if conf.stage_dir:
+        # staging is transient per-run scratch read a handful of times
+        # and discarded — cheap codec (lz4) beats the session's durable
+        # zstd here (measured: stage-write 6.3s zstd vs 4.1s lz4, sink
+        # projections 1.5s vs 0.6s at 1.1M turns); the real sinks keep
+        # the session codec through catalog.write
+        (rendered.write.mode("overwrite")
+         .option("compression", "lz4").parquet(conf.stage_dir))
+        return rendered.sparkSession.read.parquet(conf.stage_dir)
+    if conf.persist:
+        return rendered.persist(StorageLevel.MEMORY_AND_DISK)
+    return rendered
+
+
+def sinks(rendered: DataFrame, transcripts: DataFrame, conf: PipeConf
+          ) -> dict[str, DataFrame]:
+    """The sinks layer: per-language doc projections, the error sink, the
+    raw passthrough of the un-normalized input, then ``_finish_sinks``."""
+    doc_cols = ["conv_id", "doc_id", "serial", "time", "n_turns"]
+    out = {}
     if "json" in conf.langs:
-        sinks["json_doc"] = json_doc
+        out["json_doc"] = rendered.select(*doc_cols, "doc", "trimmed", "error")
     if "xml" in conf.langs:
-        sinks["xml_doc"] = render.render_xml(json_doc)
-    sinks["error"] = route.error_sink(docs)
-    sinks["raw"] = route.raw_sink(raw_src)
-    _finish_sinks(sinks, conf)
-    return sinks
+        out["xml_doc"] = rendered.select(
+            *doc_cols, F.col("xml").alias("doc"), "trimmed", "error"
+        )
+    out["error"] = route.error_sink(rendered)
+    out["raw"] = route.raw_sink(transcripts)
+    _finish_sinks(out, conf)
+    return out
+
+
+def build(spark: SparkSession, transcripts: DataFrame, conf: PipeConf | None = None
+          ) -> dict[str, DataFrame]:
+    """Build all sink DataFrames: enrich → render → stage → sinks. Lazy
+    unless ``conf.stage_dir`` is set (the staging write runs here)."""
+    conf = conf or PipeConf()
+    rendered = stage(render(enrich(transcripts, spark), conf), conf)
+    return sinks(rendered, transcripts, conf)
 
 
 def _finish_sinks(sinks: dict[str, DataFrame], conf: PipeConf) -> None:
-    """Shared sink post-processing for every engine branch: S6 doc batching
-    (from the canonical compact docs), then the optional F8 fold/indent
-    re-render of the per-event doc sinks."""
+    """Sink post-processing: S6 doc batching (from the canonical compact
+    docs), then the optional F8 fold/indent re-render of the per-event doc
+    sinks."""
     _add_doc_batch_sinks(sinks, conf)
     if conf.fold_level is not None:
         if "json_doc" in sinks:
-            sinks["json_doc"] = render.prettify_json(
+            sinks["json_doc"] = prettify_json(
                 sinks["json_doc"], indent=conf.indent,
                 fold_level=conf.fold_level,
             )
         if "xml_doc" in sinks:
-            sinks["xml_doc"] = render.prettify_xml(
+            sinks["xml_doc"] = prettify_xml(
                 sinks["xml_doc"], fold_level=conf.fold_level
             )
 
@@ -319,53 +250,24 @@ def _add_doc_batch_sinks(sinks: dict[str, DataFrame], conf: PipeConf) -> None:
 
 def rendered_frame(spark: SparkSession, transcripts: DataFrame,
                    conf: PipeConf | None = None) -> DataFrame:
-    """The single-pass rendered doc frame (doc + xml + errors + envelope) —
-    everything every sink needs, computed once with no materialization.
-    Used by the scaling harness: on one host the sink writes hit a shared
-    disk that a real 4N cluster would scale, so the CPU-scaling evidence
-    times this frame's computation."""
-    conf = conf or PipeConf(persist=False)
-    from . import arrow_docs
-
-    transcripts = _norm_text(transcripts)
-    enriched = enrich.enrich_roles(transcripts, enrich.role_dict_df(spark))
-    enriched = enriched.join(
-        F.broadcast(enrich.tool_dict_df(spark)),
-        enriched["tool"] == F.col("tool_code"),
-        "left",
-    ).drop("tool_code", "tool_kind")
-    return arrow_docs.render_docs_sorted(
-        enriched,
-        max_doc_bytes=conf.max_doc_bytes,
-        events_per_doc=conf.events_per_doc,
-        with_text=conf.with_text,
-        with_norm=conf.with_norm,
-        max_turns_per_conv=conf.max_turns_per_conv,
-    )
+    """The enrich → render prefix of ``build``: the rendered doc frame (doc
+    + xml + errors + envelope) — everything every sink needs, computed once
+    with no materialization. Used by the scaling harness and perfbench's
+    prefix probes: on one host the sink writes hit a shared disk that a real
+    4N cluster would scale, so the CPU-scaling evidence times this frame's
+    computation."""
+    return render(enrich(transcripts, spark), conf or PipeConf(persist=False))
 
 
 def jvm_stage_frame(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
-    """The all-JVM prefix of the default pipeline — scan → two broadcast
-    dict joins → repartition(conv_id) → Tungsten sortWithinPartitions —
-    WITHOUT the Python render stage. Used by the scaling harness to separate
-    plan scaling from single-host memory-bandwidth effects: if this stage
-    scales across core counts while the full pipeline does not, the gap is
-    Python-worker/host bandwidth, not plan serialization."""
-    from . import arrow_docs
-
-    enriched = enrich.enrich_roles(transcripts, enrich.role_dict_df(spark))
-    enriched = enriched.join(
-        F.broadcast(enrich.tool_dict_df(spark)),
-        enriched["tool"] == F.col("tool_code"),
-        "left",
-    ).drop("tool_code", "tool_kind")
-    n_parts = spark.sparkContext.defaultParallelism * arrow_docs.PART_MULT
-    return (
-        enriched.select("conv_id", "turn_idx", "role_name", "text",
-                        "tool", "tool_name", "ts")
-        .repartition(n_parts, "conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx")
-    )
+    """The enrich → exchange prefix of the default pipeline — scan → two
+    broadcast dict joins → repartition(conv_id) → Tungsten
+    sortWithinPartitions — WITHOUT the Python render stage. Used by the
+    scaling harness to separate plan scaling from single-host
+    memory-bandwidth effects: if this stage scales across core counts while
+    the full pipeline does not, the gap is Python-worker/host bandwidth, not
+    plan serialization."""
+    return exchange(enrich(transcripts, spark))
 
 
 def run(spark: SparkSession, transcripts: DataFrame, catalog, run_id: str,
@@ -378,11 +280,8 @@ def run(spark: SparkSession, transcripts: DataFrame, catalog, run_id: str,
     same run_id writes only the missing ones. Readers go through
     catalog.read(), which sees only manifest-committed files.
     """
-    import os
-
     conf = conf or PipeConf()
-    if (conf.stage_dir is None and conf.engine == "arrow"
-            and os.sep in getattr(catalog, "root", "")):
+    if conf.stage_dir is None and os.sep in getattr(catalog, "root", ""):
         # stage the rendered frame under the warehouse so the four sink
         # writes are projections, not recomputations (and a resumed run
         # reuses nothing stale: staging is per run_id). Path-rooted catalogs
@@ -424,7 +323,7 @@ def metrics_frame(sinks: dict[str, DataFrame], run_id: str) -> DataFrame:
             F.col("n_convs").cast("long"),
             F.col("n_convs_approx").cast("long"),
             F.col("bytes_out").cast("long"),
-            F.date_format(F.current_timestamp(), render.TIME_FMT).alias("committed_at"),
+            F.date_format(F.current_timestamp(), TIME_FMT).alias("committed_at"),
         )
         parts.append(agg)
     out = parts[0]

@@ -2,12 +2,11 @@
 window functions, conditional aggregates, and native array/string
 expressions, with NO higher-order-function lambdas on the hot path.
 
-Motivation (round 3): the "expr" engine expresses the per-conversation
-collectors as array lambdas over a collected turn array; Spark evaluates
-HOF lambdas in the interpreted expression evaluator and pulls them into
-their own eagerly-evaluated projections, which left that engine ~6x slower
-than the Python-kernel arrow engine even after the trim fix. This engine
-expresses the SAME semantics the way the DuckDB oracle SQL does (see
+Motivation (round 3): expressing the per-conversation collectors as array
+lambdas over a collected turn array is slow — Spark evaluates HOF lambdas
+in the interpreted expression evaluator and pulls them into their own
+eagerly-evaluated projections. This engine expresses the SAME semantics
+the way the DuckDB oracle SQL does (see
 __spark_entry__._transcript_cls_sql, validated row-for-row against the
 Python oracle):
 
@@ -24,11 +23,11 @@ Python oracle):
 * document assembly as native string concat of the fragments, with the
   member-composition trick of render.py (to_json of one-field structs) for
   anything needing JSON escaping
-* the per-line trim consumes the native window cumsum (coalesce_events'
-  round-3 fix) and derives the text budget from byte identities
+* the per-line trim consumes a native window cumsum of per-line costs and
+  derives the text budget from byte identities
 
-Byte-equality with the oracle/arrow/expr engines is pinned by
-tests/test_engines.py (the 4-engine matrix) and the golden corpus.
+Byte-equality with the oracle and the arrow engine is pinned by
+tests/test_engines.py (the arrow-vs-sql matrix) and the golden corpus.
 
 Reference parity: same collector semantics as lib/conv_buf.c:355-709 /
 lib/disp_coll.c, same trim order as lib/gbtree.c:555-606.
@@ -73,8 +72,8 @@ def _bare_json(col: Column) -> Column:
 
 
 # ---- native XML escaping (round 4: the sql engine's XML path used to
-# delegate to the render._json_to_xml pandas UDF, so "all-JVM" held only
-# for --lang json; these mirror render.xml_escape_str byte-for-byte with
+# delegate to a JSON-to-XML pandas UDF, so "all-JVM" held only for
+# --lang json; these mirror render.xml_escape_str byte-for-byte with
 # Catalyst string replaces — lib/gbuf.c:282-342 escaping rules)
 _XML_CTRLS = [i for i in range(0x20) if chr(i) not in "\t\n\r"]
 _XML_ESC_RE = "[&<>\"'" + "".join(f"\\x{i:02x}" for i in _XML_CTRLS) + "]"
@@ -292,8 +291,9 @@ def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192
                            events_per_doc: int = 100, with_text: bool = True,
                            with_norm: bool = False,
                            want_xml: bool = True) -> DataFrame:
-    """enriched RAW turns (role_name/tool_name resolved, optional
-    turn_capped column) → rendered doc frame matching arrow_docs.DOC_SCHEMA.
+    """enriched RAW turns (enrich.enrich output, optional turn_capped
+    column from pipeline.cap_turns) → rendered doc frame matching
+    arrow_docs.DOC_SCHEMA.
 
     ONE shuffle of the fact table, carrying RAW rows only — the tokenizer
     runs AFTER the exchange (same exchange-weight discipline as the arrow
@@ -316,7 +316,7 @@ def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192
     ).cast("long")
 
     p = parse_mod.parse_turns(enriched.repartition(n_parts, "conv_id"))
-    # UNKNOWN_TOOL after PARSE_FAIL/INVALID_HEX (enrich.enrich_tools order)
+    # UNKNOWN_TOOL after PARSE_FAIL/INVALID_HEX (the oracle's order)
     p = p.withColumn(
         "row_error",
         F.coalesce(
@@ -330,8 +330,11 @@ def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192
         p = p.withColumn("_xfrag", _xml_fields_frag(F.col("fields")))
     p = p.withColumn("_ukey", ukey)
     w_uniq = Window.partitionBy("conv_id", "_ukey").orderBy("turn_idx")
-    # ROWS frame pinned (default RANGE ties duplicate turn_idx values into
-    # one bucket — see coalesce.coalesce_events; same contract note there)
+    # ROWS frame pinned: the default RANGE frame gives tied turn_idx values
+    # one running sum, breaking the strict per-row prefix sum the per-line
+    # trim assumes. (conv_id, turn_idx) is the declared input key
+    # (pipeline.check_unique_turns), but contract-violating input then still
+    # degrades to a well-defined prefix sum instead of tied buckets
     w_cum = (
         Window.partitionBy("conv_id").orderBy("turn_idx")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -443,7 +446,7 @@ def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192
     main = _attach_args(main)
 
     # ---- end-of-event validation (error precedence = add-time by earliest
-    # turn, EXECVE, PATH — mirrors oracle/assemble_docs)
+    # turn, EXECVE, PATH — mirrors oracle.coalesce_conv)
     rep_struct = F.when(
         F.col("_rep_turn").isNotNull(),
         F.struct(F.col("_rep_turn").alias("ti"),
@@ -728,8 +731,12 @@ def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192
         cap = F.lit(max_doc_bytes)
         main = main.withColumn("_full", full)
         fullc = F.col("_full")
-        # text budget via byte identities (see render.render_json round-3
-        # notes): budget = cap - octet(full) + cum_last - 6
+        # text budget via byte identities, without rendering no_text:
+        # inserting the whole text member costs 9 + cum_last bytes
+        # (oracle.max_text_lines arithmetic) and no_text adds
+        # ',"trimmed":true' (15 bytes), so octet(no_text) =
+        # octet(full) - (9 + cum_last) + 15 and
+        # budget = cap - octet(no_text) = cap - octet(full) + cum_last - 6
         cum = F.col("_cum")
         text_budget = (
             cap - F.octet_length(fullc)

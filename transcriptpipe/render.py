@@ -1,23 +1,19 @@
-"""Render stage — JSON/XML document rendering, trimming, doc batching.
+"""Render helpers shared by the render engines and the sinks.
 
-JSON rendering is Spark's own ``to_json`` (JVM, whole-stage codegen, null
-fields omitted — the analog of aushape's optional event members,
-/root/reference/lib/aushape.schema.json:270-503). XML has no Catalyst
-renderer, so it is one Arrow-batched pandas UDF implementing the escaping
-rules of lib/gbuf.c:282-342 (&quot; &apos; &lt; &gt; &amp;, control chars →
-&#xNN;).
+* ``_member`` — one rendered JSON object member via Spark's own ``to_json``
+  (the composition trick relational.py assembles its docs from);
+  ``TIME_FMT`` — the doc timestamp format.
+* ``xml_from_doc`` / ``xml_escape_str`` — event doc object → XML, with the
+  escaping rules of aushape lib/gbuf.c:282-342 (&quot; &apos; &lt; &gt;
+  &amp;, control chars → &#xNN;); fastkernel and the oracle path share them.
+* ``prettify_json`` / ``prettify_xml`` — the F8 fold/indent re-render of a
+  doc sink (aushape --fold / --indent).
 
-Trimming is the analog of gbtree priority-trim (lib/gbtree.c:555-606,
-invoked at conv_buf.c:668-693): documents over ``max_doc_bytes`` drop
-components in a fixed priority order — text[] first, then the data section —
-and are marked ``trimmed`` (schema.json:293-299). A deterministic `when`
-cascade, not a dynamic priority queue: at Spark scale the cascade costs two
-extra to_json evaluations only on the oversized minority.
-
-Doc batching (S6, lib/conv.c:85-172 / format.h:52-59 events_per_doc): we
-assign ``doc_id = floor(serial / events_per_doc)``. This is deterministic,
-retry-stable, and requires NO global window (a row_number over an unpartitioned
-window would serialize on one task at 10^12 rows — SURVEY.md §7.3.4).
+Trimming — the analog of gbtree priority-trim (lib/gbtree.c:555-606,
+invoked at conv_buf.c:668-693) — lives in each render engine: documents
+over ``max_doc_bytes`` drop text lines from the end, then the whole text
+member, then norm, then the data section, and are marked ``trimmed``
+(aushape.schema.json:293-299).
 """
 
 from __future__ import annotations
@@ -41,140 +37,6 @@ def _member(col: Column, name: str) -> Column:
     Python oracle's json.dumps."""
     j = F.to_json(F.struct(col.alias(name)))
     return F.when(col.isNotNull(), j.substr(F.lit(2), F.length(j) - 2))
-
-
-def _doc_json(text_on: Column, norm_on: bool, data_on: bool,
-              trimmed_attr: bool, with_norm: bool,
-              text_limit: Column | None = None) -> Column:
-    """Assemble the event doc JSON from member pieces. Member order mirrors
-    oracle.doc_object: serial, time, text?, data?(+catch-all), norm?, error?,
-    trimmed?. The catch-all ``extra`` map splices into the end of the data
-    object (unknown record types appear in data{} under their lowercased
-    name, ref lib/conv_buf.c:86-90). ``text_limit`` keeps only the first k
-    text lines (the per-line trim)."""
-    m_serial = F.coalesce(_member(F.col("serial"), "serial"), F.lit('"serial":null'))
-    m_time = _member(F.col("time"), "time")
-    texts_col = (
-        F.slice(F.col("texts"), F.lit(1), text_limit)
-        if text_limit is not None
-        else F.col("texts")
-    )
-    m_text = F.when(text_on, _member(texts_col, "text"))
-
-    data_json = _member(F.col("data"), "data")
-    extra_body = F.to_json(F.col("extra"))
-    extra_body = extra_body.substr(F.lit(2), F.length(extra_body) - 2)
-    has_extra = F.col("extra").isNotNull() & (F.size(F.map_keys(F.col("extra"))) > 0)
-    inner_empty = data_json == F.lit('"data":{}')
-    spliced = F.concat(
-        data_json.substr(F.lit(1), F.length(data_json) - 1),
-        F.when(inner_empty, F.lit("")).otherwise(F.lit(",")),
-        extra_body,
-        F.lit("}"),
-    )
-    if data_on:
-        m_data = F.when(has_extra, spliced).otherwise(data_json)
-    else:
-        m_data = F.lit(None).cast("string")
-
-    m_norm = (
-        _member(F.col("norm"), "norm") if (with_norm and norm_on) else F.lit(None).cast("string")
-    )
-    m_error = _member(F.col("error"), "error")
-    m_trimmed = F.lit('"trimmed":true') if trimmed_attr else F.lit(None).cast("string")
-    return F.concat(
-        F.lit("{"),
-        F.concat_ws(",", m_serial, m_time, m_text, m_data, m_norm, m_error, m_trimmed),
-        F.lit("}"),
-    )
-
-
-def render_json(docs: DataFrame, max_doc_bytes: int | None = None,
-                events_per_doc: int = 100, with_text: bool = True,
-                with_norm: bool = False) -> DataFrame:
-    """Assembled event frame → JSON_DOC sink frame.
-
-    ``with_text=False`` still keeps text on errored events (the reference
-    voids the text node only when no error occurred, conv_buf.c:663-667) —
-    and the size estimate excludes text exactly when the doc excludes it."""
-    df = docs.withColumn("time", F.date_format("min_ts", TIME_FMT))
-    # turn-capped conversations (max_event_size analog) are trimmed by definition
-    pre_trimmed = (
-        F.coalesce(F.col("turn_capped"), F.lit(False))
-        if "turn_capped" in df.columns
-        else F.lit(False)
-    )
-    text_on = F.lit(with_text) | F.col("error").isNotNull()
-    full = _doc_json(text_on, True, True, False, with_norm)
-    no_text = _doc_json(F.lit(False), True, True, True, with_norm)
-    no_norm = _doc_json(F.lit(False), False, True, True, with_norm)
-    envelope = _doc_json(F.lit(False), False, False, True, with_norm)
-    if max_doc_bytes is None:
-        doc, trimmed = full, pre_trimmed
-    else:
-        cap = F.lit(max_doc_bytes)
-        # materialize the full render ONCE as a column: the cascade and the
-        # fit check then reference the string column instead of duplicating
-        # the render tree. (Expression trees containing higher-order
-        # functions get pulled into their own eagerly-evaluated projections
-        # — round-3 measurement: the old per-row quadratic prefix-sum lambda
-        # cost ~80s of the expr engine's 95s render at 1.1M turns.)
-        df = df.withColumn("_full", full)
-        full = F.col("_full")
-        # per-line text trim (gbtree.c:468-553 analog; mirrors
-        # oracle.max_text_lines byte-for-byte): k = max prefix of text lines
-        # such that inserting the member into the no_text doc stays <= cap.
-        # cum_costs is the NATIVE window cumsum computed in coalesce_events;
-        # the budget derives from byte identities instead of rendering
-        # no_text: octet(no_text) = octet(full) - (9 + cum_last) + 15
-        # (whole-text-member insert cost is 9 + cum_last — the
-        # oracle.max_text_lines arithmetic — and no_text adds
-        # ',"trimmed":true' = 15 bytes), so
-        # budget = cap - octet(no_text) = cap - octet(full) + cum_last - 6.
-        cum = F.col("cum_costs")
-        text_budget = (
-            cap - F.octet_length(full)
-            + F.coalesce(F.try_element_at(cum, F.lit(-1)), F.lit(0).cast("long"))
-            - 6
-        )
-        partial_k = F.size(F.filter(cum, lambda p: p + 9 <= text_budget))
-        partial = _doc_json(text_on, True, True, True, with_norm,
-                            text_limit=partial_k)
-        # strict lower bounds computed upstream (raw text / field-value bytes
-        # can only inflate under JSON syntax+escaping), so an oversized doc is
-        # detected WITHOUT rendering it — inverting aushape's format-then-cut
-        # (notes.txt:242-246), which would make a megabyte conversation a
-        # straggler: est > cap ⟹ rendered > cap, skip that render entirely.
-        # errored docs carry no data section (P6), so field bytes don't count;
-        # text bytes count only when the doc will carry text
-        est_data = F.when(
-            F.col("error").isNull(), F.coalesce(F.col("fields_bytes"), F.lit(0))
-        ).otherwise(F.lit(0))
-        est_text = F.when(text_on, F.coalesce(F.col("text_bytes"), F.lit(0))).otherwise(F.lit(0))
-        est_full = est_text + est_data
-        full_fits = (est_full <= cap) & (F.octet_length(full) <= cap)
-        # priority trim (gbtree.c:555-606 analog): drop text, then norm,
-        # then the data section
-        doc = (
-            F.when(full_fits, full)
-            .when(text_on & (partial_k > 0)
-                  & (F.octet_length(no_text) <= cap), partial)
-            .when((est_data <= cap) & (F.octet_length(no_text) <= cap), no_text)
-        )
-        if with_norm:
-            doc = doc.when((est_data <= cap) & (F.octet_length(no_norm) <= cap), no_norm)
-        doc = doc.otherwise(envelope)
-        trimmed = ~full_fits | pre_trimmed
-    return df.select(
-        "conv_id",
-        F.floor(F.col("serial") / events_per_doc).alias("doc_id"),
-        "serial",
-        "time",
-        "n_turns",
-        doc.alias("doc"),
-        trimmed.alias("trimmed"),
-        "error",
-    )
 
 
 _XML_CONTROL = {i: f"&#x{i:X};" for i in range(0x20) if chr(i) not in "\t\n\r"}
@@ -283,19 +145,6 @@ def xml_from_doc(e: dict, _srch=_XML_NEEDS_ESCAPE.search) -> str:
         ap("</norm>")
     ap("</event>")
     return "".join(parts)
-
-
-@pandas_udf(T.StringType())
-def _json_to_xml(doc_json: pd.Series) -> pd.Series:
-    """Render the event JSON into the XML representation (Arrow batches)."""
-    import json
-
-    return doc_json.map(lambda j: xml_from_doc(json.loads(j)))
-
-
-def render_xml(json_docs: DataFrame) -> DataFrame:
-    """JSON_DOC frame → XML_DOC frame (same envelope, doc column is XML)."""
-    return json_docs.withColumn("doc", _json_to_xml("doc"))
 
 
 # ------------------------------------------------------ pretty-print (F8) --

@@ -135,7 +135,7 @@ ALL_ERROR_CODES = [
 # ------------------------------------------------------ collector registry ----
 # The dispatch map (ref lib/conv_buf.c:60-96): role -> collector kind. This is
 # the U1 plugin surface — adding a record type is a registry entry, not an
-# assemble_docs edit; both engines (Catalyst expr + Arrow/oracle) read it.
+# render-engine edit; fastkernel, relational.py and the oracle all read it.
 # Roles NOT in the registry fall through to the catch-all uniq collector
 # (ref lib/conv_buf.c:86-90 wires disp_coll's default to uniq): they appear in
 # data{} under their lowercased name, and a repeat raises REPEATED_RECORD

@@ -231,7 +231,7 @@ def stream_coalesce(spark: SparkSession, input_path: str,
         .option("maxFilesPerTrigger", 1)
         .parquet(input_path)
     )
-    # boundary normalization, same as pipeline._norm_text: null text is the
+    # boundary normalization, same as enrich.enrich: null text is the
     # empty line (the Python oracle's row["text"] or "" coercion)
     raw = raw.withColumn("text", F.coalesce("text", F.lit("")))
     render_opts = dict(with_text=with_text, with_norm=with_norm,
