@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import importlib
 import json
+import os
 
-from transcriptpipe import synth
+from transcriptpipe import session, synth
 from transcriptpipe.__main__ import main, parse_events_per_doc
 
 
@@ -13,6 +15,20 @@ def test_parse_events_per_doc():
     assert parse_events_per_doc("all") == "all"
     assert parse_events_per_doc("50") == 50
     assert parse_events_per_doc("-4096") == -4096
+
+
+def test_default_cpus_follow_affinity(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the session (and the CLI's --cpus default)
+    sizes local[N] to the cores this process may run on."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    try:
+        assert importlib.reload(session).DEFAULT_CPUS == 3
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+        assert importlib.reload(session).DEFAULT_CPUS == 5
+    finally:
+        monkeypatch.undo()
+        importlib.reload(session)
 
 
 def test_cli_batch_run(spark, tmp_path):

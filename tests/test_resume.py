@@ -63,3 +63,43 @@ def test_metrics_match_sink_counts(spark, tiny_df, catalog):
     }
     for name in ("json_doc", "xml_doc", "error", "raw"):
         assert metrics[name] == catalog.total_rows(name), name
+
+
+# (name, type, nullable) of every committed sink, as Spark wrote them into
+# the parquet footers. The doc sinks are projections of the staged parquet
+# table, which Spark reads back all-nullable.
+_DOC_SINK = [("conv_id", "string", True), ("doc_id", "bigint", True),
+             ("serial", "bigint", True), ("time", "string", True),
+             ("n_turns", "int", True), ("doc", "string", True),
+             ("trimmed", "boolean", True), ("error", "string", True)]
+COMMITTED_SCHEMAS = {
+    "json_doc": _DOC_SINK,
+    "xml_doc": _DOC_SINK,
+    "error": [("conv_id", "string", True), ("turn_idx", "int", True),
+              ("error_code", "string", True), ("text", "string", True)],
+    "raw": [("conv_id", "string", False), ("turn_idx", "int", False),
+            ("role", "string", False), ("text", "string", True),
+            ("tool", "string", True), ("ts", "timestamp", False)],
+    "_metrics": [("run_id", "string", False), ("sink", "string", False),
+                 ("n_rows", "bigint", False), ("n_convs", "bigint", False),
+                 ("n_convs_approx", "bigint", False),
+                 ("bytes_out", "bigint", True),
+                 ("committed_at", "string", False)],
+}
+
+
+def test_committed_sink_schemas(spark, tiny_df, catalog):
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    pipeline.run(spark, tiny_df, catalog, run_id="s1")
+    for table, want in COMMITTED_SCHEMAS.items():
+        for f in catalog.manifest(table)["snapshots"][0]["files"]:
+            meta = pq.read_schema(os.path.join(catalog.root, table, f)).metadata
+            st = T.StructType.fromJson(json.loads(
+                meta[b"org.apache.spark.sql.parquet.row.metadata"]))
+            got = [(x.name, x.dataType.simpleString(), x.nullable) for x in st.fields]
+            assert got == want, (table, f)

@@ -264,3 +264,103 @@ def test_stream_xml_matches_batch_xml(spark, split_input, tmp_path):
         assert g["doc"] == render.xml_from_doc(json.loads(w["doc"])), cid
     # sink schema is the per-language one: the doc column IS the xml
     assert "xml" not in spark.read.parquet(out).columns
+
+
+def test_stream_resolves_roles_from_enrich_dictionaries(spark, tmp_path,
+                                                        monkeypatch):
+    """The stream drain reads through the enrich layer: a role code that
+    only the role dictionary knows (R9) resolves exactly as in batch."""
+    from transcriptpipe import pipeline, schemas
+
+    rows = synth.role_dict_rows()
+    monkeypatch.setattr(synth, "role_dict_rows", lambda: rows + [
+        {"role_code": "R9", "role_name": "assistant"}])
+    pdf = synth.gen_transcripts(n_convs=12, seed=3)
+    pdf["role"] = pdf["role"].replace("R1", "R9")
+    assert (pdf["role"] == "R9").any()
+    d = tmp_path / "in_r9"
+    d.mkdir()
+    pdf.to_parquet(d / "0.parquet", index=False)
+
+    out = str(tmp_path / "out_r9")
+    streaming.run_stream_once(spark, str(d), out, str(tmp_path / "ckpt_r9"))
+    got = {r["conv_id"]: r["doc"] for r in spark.read.parquet(out).collect()}
+    batch = pipeline.build(
+        spark, spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS),
+        pipeline.PipeConf(persist=False, max_doc_bytes=None, langs=("json",)))
+    want = {r["conv_id"]: r["doc"] for r in batch["json_doc"].collect()}
+    assert got == want
+    assert any('"assistant"' in doc for doc in want.values())
+
+
+class _StubState:
+    """The slice of GroupState the stateful function uses, in memory."""
+
+    hasTimedOut = False
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+    def remove(self):
+        self.value = None
+
+    def getCurrentWatermarkMs(self):
+        return 0
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+    def setTimeoutTimestamp(self, ms):
+        pass
+
+
+def test_state_holds_cap_plus_one_and_matches_batch(spark):
+    """Beyond-cap rows arrive in a micro-batch before the EOE: the state
+    keeps at most cap+1 rows, and the emitted doc is trimmed and byte-equal
+    to the batch render at the same cap."""
+    from datetime import datetime, timedelta
+
+    from transcriptpipe import enrich, pipeline, schemas
+
+    cap, cid = 4, "conv-00000077"
+    t0 = datetime(2026, 3, 4)
+    pdf = pd.DataFrame([
+        {"conv_id": cid, "turn_idx": i, "role": "R2" if i == 0 else "R0",
+         "text": f"msg=m{i}", "tool": "T01" if i == 2 else None,
+         "ts": t0 + timedelta(seconds=i)}
+        for i in range(9)
+    ] + [{"conv_id": cid, "turn_idx": 9, "role": "EOE", "text": "",
+          "tool": None, "ts": t0 + timedelta(seconds=9)}]).astype(
+        {"turn_idx": "int32", "tool": "string", "ts": "datetime64[us]"})
+    df = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
+    enriched = enrich.enrich(df, spark).toPandas().sort_values("turn_idx")
+    micro_batches = [enriched.iloc[:3], enriched.iloc[3:7], enriched.iloc[7:]]
+
+    fn = streaming._make_coalesce_fn(None, cap, max_doc_bytes=None,
+                                     with_text=True, with_norm=False,
+                                     want_xml=False)
+    state, out = _StubState(), []
+    for mb in micro_batches:
+        out += list(fn((cid,), iter([mb]), state))
+        if state.exists:
+            assert len(state.get[0]) <= cap + 1
+    assert not state.exists
+    (doc,) = pd.concat(out).to_dict("records")
+    assert doc["complete"] and doc["trimmed"] and doc["n_turns"] == cap
+
+    batch = pipeline.build(spark, df, pipeline.PipeConf(
+        persist=False, max_doc_bytes=None, max_turns_per_conv=cap,
+        langs=("json",)))["json_doc"].first()
+    assert batch["trimmed"]
+    assert doc["doc"] == batch["doc"]

@@ -26,7 +26,9 @@ sequential scan):
   sequential — so it runs greedily WITHIN coarse serial ranges
   (``range_id = serial // byte_range_span``); documents never span ranges,
   which keeps assignment retry-stable and the packing embarrassingly
-  parallel (one applyInPandas task per range, bounded state). The oracle
+  parallel: rows are repartitioned on the range and sorted by (range,
+  serial), then one mapInPandas pass packs each range, carrying an open
+  range across Arrow batches within its task (state: one range). The oracle
   equivalence test (tests/test_docbatch.py) pins the per-range packing to a
   pure-Python reimplementation of conv.c's counter semantics.
 * "all" mode is a single output document by definition — it necessarily

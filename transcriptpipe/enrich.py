@@ -15,18 +15,24 @@ interpretation; we route, never throw).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas, synth
 
 
+# The dictionaries are built from pandas so that (with Arrow on) they are
+# local relations: broadcasting one runs no Python job. That matters for
+# the stream drain, which re-plans the stream-static joins every micro-batch.
 def role_dict_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(synth.role_dict_rows(), schema=schemas.ROLE_DICT)
+    return spark.createDataFrame(pd.DataFrame(synth.role_dict_rows()),
+                                 schema=schemas.ROLE_DICT)
 
 
 def tool_dict_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(synth.tool_dict_rows(), schema=schemas.TOOL_DICT)
+    return spark.createDataFrame(pd.DataFrame(synth.tool_dict_rows()),
+                                 schema=schemas.TOOL_DICT)
 
 
 def enrich_roles(df: DataFrame, roles: DataFrame) -> DataFrame:

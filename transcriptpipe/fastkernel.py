@@ -39,7 +39,6 @@ trim of lib/gbtree.c:468-606 applied at render time.
 
 from __future__ import annotations
 
-import json
 import re as _re
 
 from . import schemas
@@ -592,16 +591,3 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
         "error": error,
         "row_errs": row_errs,
     }
-
-
-def _max_text_lines(texts: list, budget: int) -> int:
-    """oracle.max_text_lines, inlined (same arithmetic byte-for-byte)."""
-    used, k = 9, 0
-    jd = json.dumps
-    for line in texts:
-        esc = 4 if line is None else len(jd(line, ensure_ascii=False).encode("utf-8"))
-        if used + esc + 1 > budget:
-            break
-        used += esc + 1
-        k += 1
-    return k

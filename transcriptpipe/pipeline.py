@@ -53,7 +53,6 @@ PART_MULT = 4
 
 @dataclass
 class PipeConf:
-    events_per_doc: int = 100
     max_doc_bytes: int | None = 8192
     max_turns_per_conv: int = 2048
     with_text: bool = True  # --with-text analog (P5): include text[] in docs
@@ -152,7 +151,6 @@ def render(enriched: DataFrame, conf: PipeConf) -> DataFrame:
         return relational.render_docs_relational(
             fact.join(F.broadcast(capped_convs), "conv_id", "left"),
             max_doc_bytes=conf.max_doc_bytes,
-            events_per_doc=conf.events_per_doc,
             with_text=conf.with_text,
             with_norm=conf.with_norm,
             want_xml=want_xml,
@@ -160,7 +158,6 @@ def render(enriched: DataFrame, conf: PipeConf) -> DataFrame:
     return arrow_docs.render_docs_sorted(
         exchange(enriched),
         max_doc_bytes=conf.max_doc_bytes,
-        events_per_doc=conf.events_per_doc,
         with_text=conf.with_text,
         with_norm=conf.with_norm,
         max_turns_per_conv=conf.max_turns_per_conv,
@@ -330,16 +327,3 @@ def metrics_frame(sinks: dict[str, DataFrame], run_id: str) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def error_rollup(error_sink: DataFrame) -> DataFrame:
-    """A7 cube: error counts by (error_code, has_turn) with all subtotal
-    combinations — the ops-dashboard view of the error sink."""
-    return (
-        error_sink.withColumn(
-            "level",
-            F.when(F.col("turn_idx").isNotNull(), "row").otherwise("conversation"),
-        )
-        .cube("error_code", "level")
-        .agg(F.count("*").alias("n"))
-    )

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import schemas
+from .arrow_docs import EVENTS_PER_DOC
 from .parse import strict_int
 from .render import TIME_FMT, _member
 
@@ -288,8 +289,7 @@ def _attach_args(main: DataFrame) -> DataFrame:
 
 
 def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192,
-                           events_per_doc: int = 100, with_text: bool = True,
-                           with_norm: bool = False,
+                           with_text: bool = True, with_norm: bool = False,
                            want_xml: bool = True) -> DataFrame:
     """enriched RAW turns (enrich.enrich output, optional turn_capped
     column from pipeline.cap_turns) → rendered doc frame matching
@@ -300,9 +300,10 @@ def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192
     engine's sorted-stream shape: the shuffle moves (conv_id, turn_idx,
     role, text, tool, ts), not parsed maps)."""
     from . import parse as parse_mod
+    from .pipeline import PART_MULT
 
     has_cap = "turn_capped" in enriched.columns
-    n_parts = enriched.sparkSession.sparkContext.defaultParallelism * 4
+    n_parts = enriched.sparkSession.sparkContext.defaultParallelism * PART_MULT
 
     role = F.col("role_name")
     registered = role.isin(_REGISTERED)
@@ -791,7 +792,7 @@ def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192
 
     out = main.select(
         "conv_id",
-        F.floor(F.col("serial") / events_per_doc).alias("doc_id"),
+        F.floor(F.col("serial") / EVENTS_PER_DOC).alias("doc_id"),
         "serial",
         "time",
         "n_turns",

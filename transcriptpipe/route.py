@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 
 from . import schemas
 
-SINKS = ["json_doc", "xml_doc", "error", "raw"]
-
 CONV_LEVEL_CODES = [
     schemas.ERR_REPEATED_RECORD,
     schemas.ERR_INVALID_EXECVE,

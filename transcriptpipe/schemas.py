@@ -1,9 +1,13 @@
-"""Declared StructTypes for every table the pipeline reads or writes.
+"""Declared StructTypes for the tables the pipeline reads, the error
+taxonomy and the collector registry.
 
 The reference declares its output schema externally (JSON Schema
-/root/reference/lib/aushape.schema.json, XSD lib/aushape.xsd, ES mapping
-lib/aushape.mapping.json — SURVEY.md §1.3). We do the analogous thing in one
-place so tests can validate emitted frames structurally.
+lib/aushape.schema.json, XSD lib/aushape.xsd, ES mapping
+lib/aushape.mapping.json — SURVEY.md §1.3). The output schemas are the ones
+the writers produce: arrow_docs.DOC_SCHEMA for the rendered frame and
+streaming.STREAM_DOC for the stream sink;
+tests/test_resume.py::test_committed_sink_schemas pins what a committed run
+writes.
 """
 
 from __future__ import annotations
@@ -47,73 +51,6 @@ TOOL_DICT = T.StructType(
     ]
 )
 
-# --------------------------------------------------------------- outputs ----
-# A field value is a 1-2 element string array [interpreted, raw?], raw only
-# when it differs (ref lib/field.c:116-130, notes.txt:7-45).
-FIELD_VALUE = T.ArrayType(T.StringType())
-FIELDS = T.MapType(T.StringType(), FIELD_VALUE)
-
-# One turn's contribution to a doc's data section.
-TURN_FIELDS = T.StructType(
-    [
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("fields", FIELDS, True),
-    ]
-)
-
-# The assembled per-conversation event document (analog of the event object,
-# ref lib/aushape.schema.json:270-503: {serial, time, node?, text[], data{},
-# error?, trimmed?}).
-EVENT_DOC_DATA = T.StructType(
-    [
-        T.StructField("system", FIELDS, True),                       # uniq collector
-        T.StructField("user", T.ArrayType(FIELDS), True),            # rep collector
-        T.StructField("assistant", T.ArrayType(FIELDS), True),       # rep collector
-        T.StructField("tool_call", T.ArrayType(FIELDS), True),       # rep collector
-        T.StructField("tool_result", T.ArrayType(FIELDS), True),     # ordered-slot (PATH)
-        T.StructField("args", T.ArrayType(T.StringType()), True),    # EXECVE reassembly
-        T.StructField("tools", T.ArrayType(T.StringType()), True),   # enriched tool names
-    ]
-)
-
-JSON_DOC = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("serial", T.LongType(), False),
-        T.StructField("time", T.StringType(), False),
-        T.StructField("n_turns", T.IntegerType(), False),
-        T.StructField("doc", T.StringType(), False),
-        T.StructField("trimmed", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-XML_DOC = JSON_DOC  # same envelope, `doc` holds XML
-
-ERROR_SINK = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), True),
-        T.StructField("error_code", T.StringType(), False),
-        T.StructField("text", T.StringType(), True),
-    ]
-)
-
-RAW_SINK = TRANSCRIPTS
-
-METRICS = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("sink", T.StringType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_convs", T.LongType(), True),
-        T.StructField("n_convs_approx", T.LongType(), True),
-        T.StructField("bytes_out", T.LongType(), True),
-        T.StructField("committed_at", T.StringType(), False),
-    ]
-)
-
 # Error taxonomy — mirrors the reference's rc codes
 # (/root/reference/include/aushape/rc.h:24-48).
 ERR_INVALID_EXECVE = "INVALID_EXECVE"   # argc mismatch / missing or broken arg
@@ -122,15 +59,6 @@ ERR_REPEATED_RECORD = "REPEATED_RECORD" # duplicate non-repeatable role (system)
 ERR_INVALID_HEX = "INVALID_HEX"         # hex= payload does not decode
 ERR_UNKNOWN_TOOL = "UNKNOWN_TOOL"       # tool code absent from tool_dict
 ERR_PARSE_FAIL = "PARSE_FAIL"           # text tokenizes to nothing
-
-ALL_ERROR_CODES = [
-    ERR_INVALID_EXECVE,
-    ERR_INVALID_PATH,
-    ERR_REPEATED_RECORD,
-    ERR_INVALID_HEX,
-    ERR_UNKNOWN_TOOL,
-    ERR_PARSE_FAIL,
-]
 
 # ------------------------------------------------------ collector registry ----
 # The dispatch map (ref lib/conv_buf.c:60-96): role -> collector kind. This is

@@ -1,6 +1,6 @@
 """SparkSession factory with scale-appropriate defaults.
 
-The sandbox runs local[N] on one 32-core/128GiB host; the design point is a
+Tests and benchmarks run local[N] on one host; the design point is a
 multi-executor cluster reading ~10^12 turns. Every config below is chosen to
 be correct at both scales (AQE re-plans partition counts at runtime, so the
 static shuffle-partition number is a ceiling, not a schedule).
@@ -12,7 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] width: SPARK_GRAFT_CPUS, else the cores this process may run on
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
