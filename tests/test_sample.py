@@ -154,6 +154,22 @@ def test_shard_by_budget_rejects_bad_budget(docs):
         sample.shard_by_budget(docs, 100, partitions=70000)
 
 
+def test_shard_by_budget_default_buckets_clamped(spark, monkeypatch):
+    """On a cluster wider than 32k cores the default bucket count
+    (defaultParallelism * 2) is clamped to 65536 instead of raising; only
+    an explicit out-of-range ``partitions=`` raises
+    (test_shard_by_budget_rejects_bad_budget)."""
+    rows = [(i, " ".join(f"w{j}" for j in range(1 + i % 9))) for i in range(50)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(type(spark.sparkContext), "defaultParallelism",
+                        property(lambda self: 40000))
+    out = sample.shard_by_budget(df, 20)
+    # bucket = u16(prefix) * B / 65536 with B = 65536
+    assert "* cast(65536 as bigint)" in out._jdf.queryExecution().analyzed().toString()
+    got = {r["doc_id"]: (r["n_tokens"], r["shard_id"]) for r in out.collect()}
+    assert got == _shard_reference(rows, budget=20)
+
+
 def test_shard_by_budget_bucket_count_invariant(spark):
     """Round 6 internals (md5-prefix buckets replacing repartitionByRange):
     the global prefix sum — and so every shard assignment — must be

@@ -24,6 +24,7 @@ def split_input(tmp_path):
     for i in range(3):
         chunk = pdf.iloc[cuts[i]:cuts[i + 1]]
         chunk.to_parquet(d / f"part-{i}.parquet", index=False)
+    _order_mtimes(*(d / f"part-{i}.parquet" for i in range(3)))
     return str(d), pdf
 
 
@@ -76,10 +77,18 @@ def _write(pdf, path):
     pdf.to_parquet(path, index=False)
 
 
+def _order_mtimes(*paths):
+    """Give ``paths`` strictly increasing mtimes, 1 s apart, in the given
+    order: the file source reads oldest mtime first and files with equal
+    mtimes (millisecond resolution) in arbitrary order."""
+    t = os.stat(paths[0]).st_mtime_ns
+    for i, p in enumerate(paths):
+        os.utime(p, ns=(t + i * 10**9, t + i * 10**9))
+
+
 def test_watermark_drops_late_rows(spark, tmp_path):
     """ST3: with a watermark, late rows (behind the watermark) are dropped
     deterministically instead of re-opening state for an emitted conv."""
-    import time as _time
     from datetime import datetime, timedelta
 
     d = tmp_path / "in_wm"
@@ -101,11 +110,11 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         rows("conv-00000099", [("system", "msg=clock")], t0 + timedelta(hours=2)),
     ])
     _write(b1, d / "0.parquet")
-    _time.sleep(1.1)  # distinct mtime: file source processes oldest first
     # batch 2: LATE duplicate of conv W (hours behind the watermark), with
     # EOE — without the watermark this would emit a second doc for W
     b2 = rows("conv-00000010", [("system", "msg=late"), ("EOE", "")], t0)
     _write(b2, d / "1.parquet")
+    _order_mtimes(d / "0.parquet", d / "1.parquet")
 
     q = (
         streaming.stream_coalesce(spark, str(d), ckpt, watermark="10 minutes",

@@ -12,9 +12,13 @@ multi-turn conversation/agent transcripts:
 * router fan-out to per-doctype sinks + metrics        (route.py, pipeline.py, ref lib/output.c, lib/conv.c)
 * the layer chain enrich → exchange → render → stage → sinks  (pipeline.py)
 * snapshot-checkpointed, resumable writes              (sinks.py,   new design; north_rule requirement)
+* per-task Python-worker import cost kept off the render (pyworker.py, imported here so every
+  worker that unpickles a transcriptpipe function has it)
 
 Everything here is built on the public PySpark DataFrame API; no code is
 copied from the reference (which is C).
 """
+
+from . import pyworker  # noqa: F401  (patches zipimport on CPython < 3.13)
 
 __version__ = "0.1.0"

@@ -172,6 +172,10 @@ def shard_by_budget(df: DataFrame, budget_tokens: int,
        contiguous ordered key ranges with ascending ids, so offset +
        local prefix IS the global prefix.
 
+    ``partitions`` is the bucket count B, in (0, 65536] (one bucket per
+    4-hex prefix at most); it defaults to ``defaultParallelism * 2``,
+    clamped to 65536 on wider clusters.
+
     Returns (id_col, n_tokens, shard_id); join back on id to write
     ``df.write.partitionBy("shard_id")``. Null texts count 0 tokens."""
     from pyspark.sql.window import Window
@@ -181,8 +185,11 @@ def shard_by_budget(df: DataFrame, budget_tokens: int,
     if budget_tokens <= 0:
         raise ValueError("budget_tokens must be positive")
     spark = df.sparkSession
-    n_parts = partitions or spark.sparkContext.defaultParallelism * 2
-    if not (0 < n_parts <= 65536):
+    if partitions is None:
+        n_parts = min(spark.sparkContext.defaultParallelism * 2, 65536)
+    elif 0 < partitions <= 65536:
+        n_parts = partitions
+    else:
         raise ValueError("partitions must be in (0, 65536]")
     key = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
     bucket = F.floor(

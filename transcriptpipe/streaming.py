@@ -35,8 +35,15 @@ watermark are dropped before they reach the state — an already-emitted
 conversation can no longer be re-opened by stragglers — and un-EOE'd
 conversations flush deterministically once the watermark passes their newest
 under-cap turn + gap (event-time timeout). Without a watermark (drain mode),
-batch order doesn't matter and incomplete conversations simply wait in
-state.
+incomplete conversations simply wait in state.
+
+Input contract: files land in ts order with distinct modification times.
+The file source reads them oldest mtime first, at millisecond resolution,
+and files with equal mtimes in arbitrary order. Batch order therefore
+matters in every mode: if a conversation's EOE file is read before an
+earlier file of the same conversation, the doc is emitted without that
+file's turns, and those stragglers open state that in drain mode never
+completes.
 """
 
 from __future__ import annotations
@@ -194,6 +201,9 @@ def stream_coalesce(spark: SparkSession, input_path: str,
 
     Per-key state is bounded by ``max_turns_per_conv`` (rows past the cap
     are dropped and the doc marked trimmed, as in the batch render).
+
+    ``input_path`` files must land in ts order with distinct mtimes: they
+    are read one per micro-batch in mtime order (see the module docstring).
     """
     raw = (
         spark.readStream.schema(schemas.TRANSCRIPTS)
