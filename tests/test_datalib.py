@@ -447,6 +447,20 @@ def test_dup_clusters_hand_graph(spark):
     assert reps == {1, 4, 5}  # min of {1,2,3}, {4,7,8}, {5,6}
 
 
+def test_dup_clusters_ignores_pair_ids_absent_from_df(spark):
+    """A pair endpoint that is not a df id links nothing and is never a
+    cluster_id: 1 and 2 meet only through 99, and 0 is not in df."""
+    from transcriptpipe.datalib import dedup
+
+    ids = [1, 2, 3, 4, 5]
+    df = spark.createDataFrame([(i, "t") for i in ids], "doc_id long, text string")
+    pairs = [(1, 99), (99, 2), (3, 4), (0, 5)]
+    pdf = spark.createDataFrame(pairs, "a_id long, b_id long")
+    got = {r["doc_id"]: r["cluster_id"]
+           for r in dedup.dup_clusters(df, pdf).collect()}
+    assert got == {1: 1, 2: 2, 3: 3, 4: 3, 5: 5}
+
+
 def test_dup_clusters_random_graphs(spark):
     import random
 

@@ -8,6 +8,8 @@ per-partition lineage in the manifest.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from transcriptpipe import pipeline
@@ -65,6 +67,20 @@ def test_metrics_match_sink_counts(spark, tiny_df, catalog):
         assert metrics[name] == catalog.total_rows(name), name
 
 
+def test_relative_root_stages_and_persists_nothing(spark, tiny_df, tmp_path,
+                                                   monkeypatch):
+    """The CLI's ``-O out`` builds SinkCatalog("out"): a relative root is a
+    path-rooted catalog too, so the run stages the rendered frame under it
+    and leaves no persisted frame in the session."""
+    monkeypatch.chdir(tmp_path)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    res = pipeline.run(spark, tiny_df, SinkCatalog("out"), run_id="rel")
+    assert res["json_doc"] is not None
+    assert os.listdir(tmp_path / "out" / "_staging" / "rel")
+    assert persistent().size() == before
+
+
 # (name, type, nullable) of every committed sink, as Spark wrote them into
 # the parquet footers. The doc sinks are projections of the staged parquet
 # table, which Spark reads back all-nullable.
@@ -90,7 +106,6 @@ COMMITTED_SCHEMAS = {
 
 def test_committed_sink_schemas(spark, tiny_df, catalog):
     import json
-    import os
 
     import pyarrow.parquet as pq
     from pyspark.sql import types as T

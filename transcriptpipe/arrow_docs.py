@@ -4,12 +4,13 @@ renders every conversation — the default engine's render layer
 
 The exchange (pipeline.exchange) delivers flat raw turns partitioned on
 conv_id and sorted by (conv_id, turn_idx), so a conversation's rows are
-consecutive. This pass groups them, applies the turn cap, and hands each
+consecutive. This pass applies the turn cap (``cap_rows``, the one cap
+rule, which the stream state uses too), groups the rows, and hands each
 conversation to the fused kernel (fastkernel.render_conv), which tokenizes,
 collects, validates and renders JSON + XML + trim in a single traversal.
 Its output is byte-equal to the single-process oracle (oracle.py) — pinned
-by tests/test_fastkernel.py, the golden corpus and the arrow-vs-sql engine
-matrix.
+by tests/test_fastkernel.py, tests/test_render_batches.py (every batch
+cut), the golden corpus and the arrow-vs-sql engine matrix.
 
 This is exactly the aushape shape: one pass per event, assemble → trim →
 render (aushape lib/conv_buf.c:355-709), vectorized over Arrow batches
@@ -55,6 +56,23 @@ DOC_SCHEMA = T.StructType([
 ])
 
 
+def cap_rows(pdf: pd.DataFrame, cap: int | None) -> pd.DataFrame:
+    """The turn cap (max_event_size analog), the one rule the batch pass
+    and the stream state share. On rows sorted by (conv_id, turn_idx), keep
+    every row under the cap plus each conversation's first row at or beyond
+    it. That row only marks the doc trimmed: the render pass gives it no
+    turn, no text and no say in ``time``."""
+    if cap is None:
+        return pdf
+    over = pdf["turn_idx"].to_numpy() >= cap
+    if not over.any():
+        return pdf
+    ids = pdf["conv_id"].to_numpy()
+    first = over.copy()
+    first[1:] &= ~(over[:-1] & (ids[1:] == ids[:-1]))
+    return pdf[~over | first]
+
+
 def render_sorted_batches(batches: Iterable[pd.DataFrame],
                           max_doc_bytes: int | None = 8192,
                           with_text: bool = True, with_norm: bool = False,
@@ -62,94 +80,73 @@ def render_sorted_batches(batches: Iterable[pd.DataFrame],
                           want_xml: bool = True) -> Iterator[pd.DataFrame]:
     """The render pass: ``SORTED_COLS`` batches, sorted by (conv_id,
     turn_idx) so a conversation's rows are consecutive, in; DOC_SCHEMA
-    frames out, one row per conversation. Conversations spanning batch
-    boundaries are carried between batches.
+    frames out, one row per conversation. The last conversation of a batch
+    may go on in the next one, so its rows (at most cap + 1 after
+    ``cap_rows``) are carried over and put in front of the next batch.
 
-    Turn capping (max_event_size analog): with ``max_turns_per_conv`` the
-    cap is enforced IN THIS PASS — beyond-cap rows are dropped and the doc
-    marked trimmed locally, with NO pre-aggregation scan / shuffle /
-    broadcast. render_docs_sorted maps it over the exchange; the stream
-    drain (streaming.py) feeds it one finished conversation at a time."""
+    The turn cap is enforced IN THIS PASS by ``cap_rows`` — no
+    pre-aggregation scan, shuffle or broadcast. render_docs_sorted maps it
+    over the exchange; the stream drain (streaming.py) feeds it one finished
+    conversation at a time."""
     from . import fastkernel
 
     cap = max_turns_per_conv
     out_cols = [f.name for f in DOC_SCHEMA.fields]
     render_conv = fastkernel.render_conv
-    carry_key: str | None = None
-    carry: list[tuple] | None = None  # [(turn_idx, role, text, tool, tool_name)]
-    carry_min_us: int | None = None
-    carry_frags: list | None = None
-    carry_capped = False
     out: list[dict] = []
 
-    def flush(key: str, rows: list[tuple], min_us: int, frags,
-              capped: bool) -> None:
-        rec = render_conv(key, rows, pd.Timestamp(min_us, unit="us"),
-                          capped, max_doc_bytes, EVENTS_PER_DOC,
-                          with_text, with_norm, xml_line_frags=frags,
-                          want_xml=want_xml)
-        if rec is not None:
-            out.append(rec)
-
-    for pdf in batches:
-        # in-pass turn cap: drop beyond-cap rows vectorized, remember
-        # which conversations lost rows (bounds per-task carry state)
-        capped_ids: set = set()
-        if cap is not None:
-            over = pdf["turn_idx"] >= cap
-            if bool(over.any()):
-                capped_ids = set(pdf["conv_id"][over].tolist())
-                pdf = pdf[~over]
-            if carry_key is not None and carry_key in capped_ids:
-                carry_capped = True
+    def render(pdf: pd.DataFrame) -> None:
+        """Render every conversation in ``pdf``; each one is complete."""
         ids = pdf["conv_id"].to_numpy()
         n = len(ids)
-        if n == 0:
-            continue  # batch held only over-cap rows (carry marked above)
+        starts = np.flatnonzero(np.concatenate(([True], ids[1:] != ids[:-1])))
+        ends = np.append(starts[1:], n)
+        # cap_rows leaves at most one beyond-cap row, last in its group; it
+        # marks the doc trimmed and is no turn
+        ti = pdf["turn_idx"].to_numpy()
+        over = ti >= cap if cap is not None else np.zeros(n, bool)
+        capped = over[ends - 1]
+        ends = ends - capped
+        # per-group min(ts) over the rendered rows: ONE numpy pass instead
+        # of 10^5 pd.Timestamp objects per batch
+        ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").view("i8")
+        mins = np.minimum.reduceat(
+            np.where(over, np.iinfo(np.int64).max, ts_us), starts)
         data = list(zip(
-            pdf["turn_idx"].to_numpy().tolist(),
+            ti.tolist(),
             pdf["role_name"].to_numpy().tolist(),
             pdf["text"].to_numpy().tolist(),
             pdf["tool"].to_numpy().tolist(),
             pdf["tool_name"].to_numpy().tolist(),
         ))
-        frags_all = (fastkernel.xml_lines_vectorized(pdf["text"])
-                     if want_xml else None)
-        # vectorized group boundaries + per-group min(ts): ONE numpy pass
-        # instead of materializing 10^5 pd.Timestamp objects per batch
-        starts = np.flatnonzero(
-            np.concatenate(([True], ids[1:] != ids[:-1]))
-        )
-        ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").view("i8")
-        mins = np.minimum.reduceat(ts_us, starts)
-        for g in range(len(starts)):
-            i = int(starts[g])
-            j = int(starts[g + 1]) if g + 1 < len(starts) else n
-            key = ids[i]
-            rows = data[i:j]
-            row_frags = frags_all[i:j] if frags_all is not None else None
-            min_us = int(mins[g])
-            kc = key in capped_ids
-            if carry_key is not None and key == carry_key:
-                rows = carry + rows
-                if row_frags is not None:
-                    row_frags = carry_frags + row_frags
-                min_us = min(min_us, carry_min_us)
-                kc = kc or carry_capped
-            elif carry_key is not None:
-                flush(carry_key, carry, carry_min_us, carry_frags, carry_capped)
-            if j == n:  # group may continue in the next batch
-                carry_key, carry, carry_min_us, carry_frags, carry_capped = (
-                    key, rows, min_us, row_frags, kc)
-            else:
-                flush(key, rows, min_us, row_frags, kc)
-                carry_key, carry, carry_min_us, carry_frags, carry_capped = (
-                    None, None, None, None, False)
+        for i, j, kc, min_us in zip(starts.tolist(), ends.tolist(),
+                                    capped.tolist(), mins.tolist()):
+            if i == j:
+                continue  # only beyond-cap rows: no doc
+            rec = render_conv(ids[i], data[i:j], pd.Timestamp(min_us, unit="us"),
+                              kc, max_doc_bytes, EVENTS_PER_DOC,
+                              with_text, with_norm, want_xml=want_xml)
+            if rec is not None:
+                out.append(rec)
+
+    carry: pd.DataFrame | None = None  # the open conversation's rows
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        pdf = cap_rows(pdf, cap)
+        ids = pdf["conv_id"].to_numpy()
+        if len(ids) == 0:
+            continue
+        done = np.flatnonzero(ids != ids[-1])
+        cut = int(done[-1]) + 1 if len(done) else 0
+        carry = pdf.iloc[cut:]
+        if cut:
+            render(pdf.iloc[:cut])
         if len(out) >= 256:
             yield pd.DataFrame(out, columns=out_cols)
             out = []
-    if carry_key is not None:
-        flush(carry_key, carry, carry_min_us, carry_frags, carry_capped)
+    if carry is not None:
+        render(carry)
     if out:
         yield pd.DataFrame(out, columns=out_cols)
 

@@ -606,7 +606,16 @@ def dup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     and direct neighbours — an aggregation, not a join), so convergence
     takes one loop round fewer. Results are identical by construction
     (monotone min-label iteration from a further-advanced state).
+
+    A pair endpoint absent from ``df`` is no vertex: both endpoints are
+    semi-joined against the ``df`` ids first, so such an id neither links
+    two docs nor becomes a ``cluster_id``.
     """
+    ids = df.select(id_col)
+    pairs = (
+        pairs.join(ids.withColumnRenamed(id_col, "a_id"), "a_id", "left_semi")
+        .join(ids.withColumnRenamed(id_col, "b_id"), "b_id", "left_semi")
+    )
     sym = pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
     edges = sym.unionByName(
         pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))

@@ -176,6 +176,13 @@ def shard_by_budget(df: DataFrame, budget_tokens: int,
     4-hex prefix at most); it defaults to ``defaultParallelism * 2``,
     clamped to 65536 on wider clusters.
 
+    Cost: the totals branch (2) and the cumsum branch (3) are different
+    exchanges, so nothing is reused between them and the narrow projection
+    (1) — the source scan, the md5 key and the whitespace token count over
+    the full text — runs twice. That is the price of keeping no persist; if
+    the double scan dominates at some scale, a ``localCheckpoint`` of the
+    narrow frame removes it without the cache leak.
+
     Returns (id_col, n_tokens, shard_id); join back on id to write
     ``df.write.partitionBy("shard_id")``. Null texts count 0 tokens."""
     from pyspark.sql.window import Window

@@ -26,11 +26,11 @@ sequential scan):
   sequential — so it runs greedily WITHIN coarse serial ranges
   (``range_id = serial // byte_range_span``); documents never span ranges,
   which keeps assignment retry-stable and the packing embarrassingly
-  parallel: rows are repartitioned on the range and sorted by (range,
-  serial), then one mapInPandas pass packs each range, carrying an open
-  range across Arrow batches within its task (state: one range). The oracle
-  equivalence test (tests/test_docbatch.py) pins the per-range packing to a
-  pure-Python reimplementation of conv.c's counter semantics.
+  parallel: one ``groupBy(range).applyInPandas`` hands each range (at most
+  ``byte_range_span`` events) to a function that sorts it by serial and
+  packs it. The oracle equivalence test (tests/test_docbatch.py) pins the
+  per-range packing to a pure-Python reimplementation of conv.c's counter
+  semantics.
 * "all" mode is a single output document by definition — it necessarily
   reduces to one task; only sensible for small extracts (same as piping
   aushape's single-doc mode to one file).
@@ -40,8 +40,6 @@ Assembly in count/one/all modes is pure Catalyst (collect_list → array_sort
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -161,58 +159,29 @@ def _batch_by_bytes(ev: DataFrame, budget: int, fmt: str, span: int) -> DataFram
     with_range = ev.withColumn(
         "_range",
         F.coalesce(F.floor(F.col("serial") / F.lit(span)), F.lit(-1)).cast("long"),
-    ).repartition("_range").sortWithinPartitions("_range", "serial")
+    )
+    cols = [f.name for f in BATCH_SCHEMA.fields]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # ranges can span Arrow batches within the task: carry the open range
-        carry: tuple[int, list, list] | None = None  # (range_id, serials, docs)
-        out: list[dict] = []
+    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        """One range, greedily packed in serial order."""
+        pdf = pdf.sort_values("serial", kind="stable")
+        range_id = int(pdf["_range"].iloc[0])
+        # null serials arrive as NaN (pandas promotes nullable int64 to
+        # float64): normalize to None / python int for the output frame
+        serials = [None if pd.isna(x) else int(x) for x in pdf["serial"].tolist()]
+        docs = pdf["doc"].tolist()
+        out = []
+        for seq, idxs in enumerate(pack_greedy(docs, budget, len(sep))):
+            body = sep.join(docs[i] for i in idxs)
+            out.append({
+                "doc_id": range_id * RANGE_STRIDE + seq,
+                "n_events": len(idxs),
+                "first_serial": serials[idxs[0]],
+                "last_serial": serials[idxs[-1]],
+                "event_bytes": sum(len(docs[i].encode("utf-8")) for i in idxs)
+                + len(sep) * (len(idxs) - 1),
+                "doc": pro + body + epi,
+            })
+        return pd.DataFrame(out, columns=cols)
 
-        def flush(range_id: int, serials: list, docs: list) -> None:
-            for seq, idxs in enumerate(pack_greedy(docs, budget, len(sep))):
-                body = sep.join(docs[i] for i in idxs)
-                out.append({
-                    "doc_id": range_id * RANGE_STRIDE + seq,
-                    "n_events": len(idxs),
-                    "first_serial": serials[idxs[0]],
-                    "last_serial": serials[idxs[-1]],
-                    "event_bytes": sum(len(docs[i].encode("utf-8")) for i in idxs)
-                    + len(sep) * (len(idxs) - 1),
-                    "doc": pro + body + epi,
-                })
-
-        for pdf in batches:
-            rids = pdf["_range"].to_numpy()
-            # null serials arrive as NaN (pandas promotes nullable int64 to
-            # float64): normalize to None / python int for the output frame
-            serials = [
-                None if pd.isna(x) else int(x)
-                for x in pdf["serial"].tolist()
-            ]
-            docs = pdf["doc"].to_numpy().tolist()
-            i, n = 0, len(rids)
-            while i < n:
-                j = i
-                rid = rids[i]
-                while j < n and rids[j] == rid:
-                    j += 1
-                s, d = serials[i:j], docs[i:j]
-                if carry is not None and carry[0] == rid:
-                    s, d = carry[1] + s, carry[2] + d
-                elif carry is not None:
-                    flush(*carry)
-                if j == n:
-                    carry = (int(rid), s, d)
-                else:
-                    flush(int(rid), s, d)
-                    carry = None
-                i = j
-            if len(out) >= 64:
-                yield pd.DataFrame(out, columns=[f.name for f in BATCH_SCHEMA.fields])
-                out = []
-        if carry is not None:
-            flush(*carry)
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in BATCH_SCHEMA.fields])
-
-    return with_range.mapInPandas(run, schema=BATCH_SCHEMA)
+    return with_range.groupBy("_range").applyInPandas(pack, schema=BATCH_SCHEMA)

@@ -16,9 +16,11 @@ conversation's turns with no intermediate per-turn objects:
   collection, tool dedup, row errors — all in the same loop
 * per-turn XML field fragments are built IN the token loop (value escaped
   once, name prefix memoized) and the final document XML is a flat join of
-  fragments — no dict re-iteration, no per-field function calls; text-line
-  fragments are pre-escaped VECTORIZED over the whole Arrow batch by the
-  caller (xml_lines_vectorized: one pandas contains() scan + one concat)
+  fragments — no dict re-iteration, no per-field function calls; each
+  ``<line>`` is escaped here too, only for the chosen doc variant's lines
+  and only when one regex scan finds a character that needs it
+* the JSON and XML data sections are joined straight from the per-turn
+  member strings and fragments
 * norm section computed only when ``with_norm`` is on
 * one ISO-8601 format per doc (f-string, not strftime)
 * one ``json.dumps`` on the common (not oversized) path, and the fit check
@@ -161,35 +163,17 @@ def _reassemble(whole, lens, slices, argc_vals):
     return None, _INVALID_EXECVE
 
 
-def xml_lines_vectorized(text_series):
-    """Pre-escape a whole Arrow batch's text column into ``<line>…</line>``
-    fragments with pandas C-level ops: one vectorized contains() scan, one
-    vectorized concat, Python-level escaping only for the flagged minority.
-    Returns a plain list aligned with the input."""
-    import numpy as np
-
-    t = text_series
-    mask = t.str.contains(_XML_NEEDS_ESCAPE, regex=True, na=False).to_numpy()
-    frags = ("<line>" + t.fillna("") + "</line>").to_numpy()
-    if mask.any():
-        raw = t.to_numpy()
-        for i in np.flatnonzero(mask):
-            frags[i] = f"<line>{xml_escape_str(raw[i])}</line>"
-    return frags.tolist()
-
-
 def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
                 max_doc_bytes: int | None, events_per_doc: int,
                 with_text: bool = True, with_norm: bool = False,
-                xml_line_frags: list | None = None,
                 want_xml: bool = True) -> dict | None:
     """One conversation -> doc record (or None for the P2 empty-event drop).
 
     ``rows``: sequence of (turn_idx, role_name, text, tool, tool_name)
-    tuples sorted ascending by turn_idx (the sortWithinPartitions order).
-    ``xml_line_frags``: optional pre-escaped ``<line>…</line>`` fragments
-    aligned with rows (see xml_lines_vectorized). ``want_xml=False`` skips
-    XML entirely (the --lang json path) and leaves the xml field None.
+    tuples sorted ascending by turn_idx (the sortWithinPartitions order),
+    all under the turn cap; ``turn_capped`` marks the doc trimmed.
+    ``want_xml=False`` skips XML entirely (the --lang json path) and leaves
+    the xml field None.
     Output dict matches arrow_docs.DOC_SCHEMA field-for-field and is
     byte-equal to the oracle path (render.xml_from_doc for the XML)."""
     token_findall = TOKEN_RE.findall
@@ -206,11 +190,10 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
     row_errs: list = []          # (turn_idx, code, text) for the error sink
     uniq_seen: set = set()
     sys_insts: list = []         # (fields, fxml, fjson) uniq-collected instances
-    rep_data: dict = {r: [] for r in _REP_ROLES}
     rep_xml: dict = {r: [] for r in _REP_ROLES}
     rep_json: dict = {r: [] for r in _REP_ROLES}
-    slot_rows: list = []         # (item_idx, fields, fxml, fjson) in turn order
-    catch_all: list = []         # (lowered_role, fields, fxml, fjson) first appearance
+    slot_rows: list = []         # (item_idx, fxml, fjson) in turn order
+    catch_all: list = []         # (lowered_role, fxml, fjson) first appearance
     tools: list = []
     tools_seen: set = set()
     # execve token collection (tool_call turns only)
@@ -288,7 +271,6 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
         # absent from the registry fall through to the catch-all uniq)
         coll = collectors_get(role)
         if coll is _REP:
-            rep_data[role].append(fields)
             rep_xml[role].append(frag)
             rep_json[role].append(jf)
             if role == "tool_call":
@@ -316,7 +298,7 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
                 user_msgs.append(mv[0] if mv else None)
         elif coll is _SLOT:
             iv = fields.get("item")
-            slot_rows.append((try_int(iv[0]) if iv else None, fields, frag, jf))
+            slot_rows.append((try_int(iv[0]) if iv else None, frag, jf))
         elif coll is _UNIQ:
             if role in uniq_seen:
                 add_errs.append((turn_idx, _REPEATED))
@@ -329,7 +311,7 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
             else:
                 uniq_seen.add(key)
                 if key not in _RESERVED_DATA_KEYS:
-                    catch_all.append((key, fields, frag, jf))
+                    catch_all.append((key, frag, jf))
         # drop: contributes nothing
 
     # ---- end-of-event validation (error precedence mirrors oracle.coalesce_conv:
@@ -369,23 +351,21 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
     # order: registry order, then args, tools, then catch-all splice. The
     # XML <data> body is assembled alongside from the per-turn fragments,
     # in the same key order (a field frag is one joined <f…> run).
-    data = None
+    # Catch-all keys never collide: _RESERVED_DATA_KEYS and uniq_seen
+    # exclude every key a registered member or earlier catch-all holds.
     data_xml = None
     data_json = None
     if error is None:
-        data = {}
         xp = []
         jp = []
         if len(sys_insts) == 1:
-            f0, x0, j0 = sys_insts[0]
-            data["system"] = f0
+            _, x0, j0 = sys_insts[0]
             if want_xml:
                 xp.append(f"<system>{''.join(x0.values())}</system>")
             jp.append('"system":{' + ",".join(j0.values()) + "}")
         for role in _REP_ROLES:
-            lst = rep_data[role]
+            lst = rep_json[role]
             if lst:
-                data[role] = lst
                 if want_xml:
                     op, cl = _REP_TAGS[role]
                     xp.extend(
@@ -393,23 +373,21 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
                     )
                 jp.append(
                     f'"{role}":[' + ",".join(
-                        "{" + ",".join(j.values()) + "}" for j in rep_json[role]
+                        "{" + ",".join(j.values()) + "}" for j in lst
                     ) + "]"
                 )
         if results:
-            data[_SLOT_ROLE] = [r[1] for r in results]
             if want_xml:
                 xp.extend(
-                    [f"{_SLOT_OPEN}{''.join(r[2].values())}{_SLOT_CLOSE}"
+                    [f"{_SLOT_OPEN}{''.join(r[1].values())}{_SLOT_CLOSE}"
                      for r in results]
                 )
             jp.append(
                 f'"{_SLOT_ROLE}":[' + ",".join(
-                    "{" + ",".join(r[3].values()) + "}" for r in results
+                    "{" + ",".join(r[2].values()) + "}" for r in results
                 ) + "]"
             )
         if args is not None:  # args == [] still renders (oracle keeps non-None)
-            data["args"] = args
             if want_xml:
                 xp.append(
                     "<args>"
@@ -420,7 +398,6 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
                 )
             jp.append('"args":[' + ",".join(jstr(a) for a in args) + "]")
         if tools:
-            data["tools"] = tools
             if want_xml:
                 xp.append(
                     "<tools>"
@@ -430,12 +407,10 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
                     + "</tools>"
                 )
             jp.append('"tools":[' + ",".join(jstr(t) for t in tools) + "]")
-        for key, fields, frag, jfd in catch_all:
-            if key not in data:
-                data[key] = fields
-                if want_xml:
-                    xp.append(f"<{key}>{''.join(frag.values())}</{key}>")
-                jp.append(jstr(key) + ":{" + ",".join(jfd.values()) + "}")
+        for key, frag, jfd in catch_all:
+            if want_xml:
+                xp.append(f"<{key}>{''.join(frag.values())}</{key}>")
+            jp.append(jstr(key) + ":{" + ",".join(jfd.values()) + "}")
         data_xml = "".join(xp) if want_xml else None
         data_json = '"data":{' + ",".join(jp) + "}"
 
@@ -507,7 +482,7 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
     trimmed = bool(turn_capped)
     doc = full
     # the chosen variant's member presence, for the XML rendering below
-    v_text, v_norm, v_data, v_trim = n_full, bool(norm), data is not None, False
+    v_text, v_norm, v_data, v_trim = n_full, bool(norm), data_json is not None, False
     # fit check without encoding: chars <= bytes, so len > cap is a certain
     # miss; len <= cap is a certain fit for ASCII docs (chars == bytes)
     if max_doc_bytes is not None and (
@@ -528,14 +503,14 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
                 k += 1
         if k > 0:
             doc = dump_s(k, True, True, True)
-            v_text, v_norm, v_data, v_trim = k, bool(norm), data is not None, True
+            v_text, v_norm, v_data, v_trim = k, bool(norm), data_json is not None, True
         else:
             for norm_on, data_on in ((True, True), (False, True),
                                      (False, False)):
                 doc = dump_s(None, norm_on, data_on, True)
                 v_text, v_norm, v_data, v_trim = (
                     None, norm_on and bool(norm),
-                    data_on and data is not None, True)
+                    data_on and data_json is not None, True)
                 if len(doc.encode("utf-8")) <= max_doc_bytes:
                     break
 
@@ -552,15 +527,11 @@ def render_conv(conv_id: str, rows, min_ts, turn_capped: bool,
         xb.append(">")
         if v_text is not None:
             xb.append("<text>")
-            if xml_line_frags is not None:
-                xb.extend(xml_line_frags if v_text == len(texts)
-                          else xml_line_frags[:v_text])
-            else:
-                xb.extend(
-                    [f"<line>{t if xsrch(t) is None else xesc(t)}</line>"
-                     if t is not None else "<line></line>"
-                     for t in texts[:v_text]]
-                )
+            xb.extend(
+                [f"<line>{t if xsrch(t) is None else xesc(t)}</line>"
+                 if t is not None else "<line></line>"
+                 for t in texts[:v_text]]
+            )
             xb.append("</text>")
         if v_data:
             xb.append("<data>")

@@ -372,6 +372,8 @@ def run_pipeline(rows: list[dict], max_turns_per_conv: int = 2048,
         crows = sorted(convs[conv_id], key=lambda r: r["turn_idx"])
         capped = any(r["turn_idx"] >= max_turns_per_conv for r in crows)
         crows = [r for r in crows if r["turn_idx"] < max_turns_per_conv]
+        if not crows:
+            continue  # only beyond-cap turns: nothing to coalesce, no doc
         turns = [parse_turn(r) for r in crows]
         conv = coalesce_conv(turns)
         if conv["n_records"] == 0 and conv["error"] is None and not any(

@@ -23,10 +23,11 @@ entry point (``build``, ``run``, ``jvm_stage_frame``, ``rendered_frame``):
 
 Skew (north_rule requirement): a hot conversation is bounded by
 ``max_turns_per_conv`` (aushape's max_event_size trim, format.h:60-63). The
-arrow render drops beyond-cap rows inside the sorted pass — rows are
+arrow render caps inside the sorted pass (arrow_docs.cap_rows) — rows are
 consecutive per conversation there, so the bound needs no pre-aggregation;
 the sql render caps with ``cap_turns`` before its grouped aggregation. Per
-task, the arrow render holds one in-flight conversation of at most cap rows.
+task, the arrow render holds one in-flight conversation of at most cap + 1
+rows.
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ from pyspark.sql import functions as F
 from . import arrow_docs, relational, route
 from .enrich import enrich
 from .render import TIME_FMT, prettify_json, prettify_xml
+from .sinks import SinkCatalog
 
 ENGINES = ("arrow", "sql")
 
@@ -278,7 +280,7 @@ def run(spark: SparkSession, transcripts: DataFrame, catalog, run_id: str,
     catalog.read(), which sees only manifest-committed files.
     """
     conf = conf or PipeConf()
-    if conf.stage_dir is None and os.sep in getattr(catalog, "root", ""):
+    if conf.stage_dir is None and isinstance(catalog, SinkCatalog):
         # stage the rendered frame under the warehouse so the four sink
         # writes are projections, not recomputations (and a resumed run
         # reuses nothing stale: staging is per run_id). Path-rooted catalogs

@@ -38,6 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 class SinkCatalog:
     root: str
 
+    def __post_init__(self) -> None:
+        # Spark resolves a relative path against the JVM's working
+        # directory, this module against the Python process's: pin the
+        # root to the Python cwd at construction so both name one place
+        self.root = os.path.abspath(self.root)
+
     # ---------------------------------------------------------- manifest --
     def _mpath(self, table: str) -> str:
         return os.path.join(self.root, table, "_manifest.json")

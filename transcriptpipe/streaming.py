@@ -25,10 +25,11 @@ AvailableNow query would keep scheduling timer batches and never terminate.
 Un-EOE'd conversations simply stay in the checkpointed state store and
 resume on the next run.
 
-Scale notes: state per key is bounded by max_turns_per_conv — it keeps the
-rows under the cap plus at most one beyond-cap row, which the render pass's
-in-pass cap drops while marking the doc trimmed (one cap, shared with
-batch); the state store shuffles on conv_id exactly like the batch exchange.
+Scale notes: state per key is bounded by max_turns_per_conv — it holds what
+``arrow_docs.cap_rows`` keeps of the conversation in turn order (the rows
+under the cap plus its first beyond-cap row, which only marks the doc
+trimmed), the same rule the batch pass carries between batches; the state
+store shuffles on conv_id exactly like the batch exchange.
 
 Late/out-of-order data (ST3): with ``watermark`` set, rows older than the
 watermark are dropped before they reach the state — an already-emitted
@@ -97,11 +98,17 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
         return pd.DataFrame({c: np.concatenate([p[c].to_numpy() for p in parts])
                              for c in arrow_docs.SORTED_COLS})
 
-    def emit(parts: list[pd.DataFrame], complete: bool) -> Iterator[pd.DataFrame]:
+    def capped(parts: list[pd.DataFrame]) -> pd.DataFrame:
+        """The conversation's rows so far, in turn order, through the batch
+        pass's cap rule: what the state holds and what the render pass
+        gets."""
         pdf = combined(parts)
         ti = pdf["turn_idx"].to_numpy()
         if (ti[1:] < ti[:-1]).any():  # arrival order -> turn order
             pdf = pdf.sort_values("turn_idx", kind="stable")
+        return arrow_docs.cap_rows(pdf, cap)
+
+    def emit(pdf: pd.DataFrame, complete: bool) -> Iterator[pd.DataFrame]:
         # P2 empty-event drop and the trimmed mark happen in the render pass
         for docs in arrow_docs.render_sorted_batches(
                 [pdf], max_turns_per_conv=cap, **render_opts):
@@ -120,10 +127,9 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
             parts.append(pd.DataFrame({"conv_id": conv_id, **held}))
         if state.hasTimedOut:
             state.remove()
-            yield from emit(parts, False)
+            yield from emit(capped(parts), False)
             return
 
-        has_over = bool(parts) and bool((parts[0]["turn_idx"] >= cap).any())
         saw_eoe = False
         wm_ms = state.getCurrentWatermarkMs() if event_time_gap_ms is not None else 0
         for pdf in pdfs:
@@ -134,29 +140,22 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
                 # an already-emitted conversation cannot re-open its state
                 ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").view("i8")
                 pdf = pdf[ts_us >= wm_ms * 1000]
-            # EOE detection runs BEFORE the cap — a capped conversation must
+            # EOE detection sees every row — a capped conversation must
             # still complete when its (possibly beyond-cap) EOE arrives
             if np.isin(pdf["role_name"].to_numpy(), schemas.DROP_ROLES).any():
                 saw_eoe = True
-            over = pdf["turn_idx"].to_numpy() >= cap
-            if over.any():
-                # state cap (max_event_size analog): keep one beyond-cap row
-                # so the render pass's cap marks the doc trimmed
-                keep = ~over
-                if not has_over:
-                    keep[np.argmax(over)] = True
-                    has_over = True
-                pdf = pdf[keep]
             if len(pdf):
                 parts.append(pdf)
+        if not parts:  # all-late batches must not open fresh state
+            return
+        pdf = capped(parts)
 
         if saw_eoe:
             # event complete (the AUPARSE_CB_EVENT_READY moment): emit + clear
             if state.exists:
                 state.remove()
-            yield from emit(parts, True)
-        elif parts:  # all-late batches must not open fresh state
-            pdf = combined(parts)
+            yield from emit(pdf, True)
+        else:
             ti = pdf["turn_idx"].to_numpy()
             ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").view("i8")
             state.update(tuple((ts_us if c == "ts" else pdf[c]).tolist()
@@ -199,8 +198,8 @@ def stream_coalesce(spark: SparkSession, input_path: str,
       conversations), and un-EOE'd conversations flush once the watermark
       passes their newest under-cap turn + event_time_gap_ms.
 
-    Per-key state is bounded by ``max_turns_per_conv`` (rows past the cap
-    are dropped and the doc marked trimmed, as in the batch render).
+    Per-key state is bounded by ``max_turns_per_conv`` through
+    ``arrow_docs.cap_rows``, the batch render's cap rule (cap + 1 rows).
 
     ``input_path`` files must land in ts order with distinct mtimes: they
     are read one per micro-batch in mtime order (see the module docstring).
