@@ -9,8 +9,11 @@ per-partition lineage in the manifest.
 from __future__ import annotations
 
 import os
+import uuid
+from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from transcriptpipe import pipeline
 from transcriptpipe.sinks import SinkCatalog
@@ -70,15 +73,158 @@ def test_metrics_match_sink_counts(spark, tiny_df, catalog):
 def test_relative_root_stages_and_persists_nothing(spark, tiny_df, tmp_path,
                                                    monkeypatch):
     """The CLI's ``-O out`` builds SinkCatalog("out"): a relative root is a
-    path-rooted catalog too, so the run stages the rendered frame under it
-    and leaves no persisted frame in the session."""
+    path-rooted catalog too, so the run stages the rendered frame under it,
+    deletes that staging once the sinks are committed, and leaves no
+    persisted frame in the session."""
     monkeypatch.chdir(tmp_path)
+    stage, staged = pipeline.stage, []
+
+    def recording_stage(rendered, conf):
+        out = stage(rendered, conf)
+        staged.append((conf.stage_dir, os.listdir(conf.stage_dir)))
+        return out
+
+    monkeypatch.setattr(pipeline, "stage", recording_stage)
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = persistent().size()
     res = pipeline.run(spark, tiny_df, SinkCatalog("out"), run_id="rel")
     assert res["json_doc"] is not None
-    assert os.listdir(tmp_path / "out" / "_staging" / "rel")
+    [(stage_dir, files)] = staged
+    assert stage_dir == str(tmp_path / "out" / "_staging" / "rel") and files
+    assert not os.path.exists(stage_dir)
     assert persistent().size() == before
+
+
+class MemoryCatalog:
+    """A catalog that is not a SinkCatalog (as IcebergCatalog is not): the
+    committed rows are kept in memory."""
+
+    def __init__(self):
+        self.tables = {}
+
+    def committed(self, run_id, table):
+        return (run_id, table) in self.tables
+
+    def write(self, df, table, run_id, source_snapshot=None):
+        if self.committed(run_id, table):
+            return None
+        self.tables[run_id, table] = df.collect()
+        return {"run_id": run_id, "n_rows": len(self.tables[run_id, table])}
+
+
+def test_other_catalog_persists_nothing(spark, tiny_df):
+    """With no path to stage under, the run persists the rendered frame
+    for its sink writes and releases it once they are done."""
+    # an input no other test runs: Spark keys its cache by plan, so a frame
+    # another test left persisted would otherwise be this run's cache entry
+    src = tiny_df.where(F.col("turn_idx") >= 0)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    catalog = MemoryCatalog()
+    res = pipeline.run(spark, src, catalog, run_id="mem")
+    assert all(res.values()) and len(catalog.tables) == 5
+    assert persistent().size() == before
+
+
+def test_caller_stage_dir_is_kept(spark, tiny_df, catalog, tmp_path):
+    stage_dir = str(tmp_path / "my_stage")
+    conf = pipeline.PipeConf(stage_dir=stage_dir)
+    pipeline.run(spark, tiny_df, catalog, run_id="k", conf=conf)
+    assert os.listdir(stage_dir)
+    assert not os.path.exists(os.path.join(catalog.root, "_staging", "k"))
+
+
+def _jobs(spark, fn):
+    """``fn()``'s result and the Spark jobs it started on this thread (one
+    job group)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker learns of jobs from the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+# Spark jobs of one fresh committed run of the default pipeline: staging
+# write, four sink writes, _metrics. A later change that removes jobs lowers
+# this pin.
+FRESH_RUN_JOBS = 17
+
+
+def test_job_counts(spark, tiny_df, catalog):
+    """A fresh run takes at most the pinned job count; a re-run of its
+    committed run_id returns the same keys, all None, and starts no job."""
+    def run():
+        return pipeline.run(spark, tiny_df, catalog, run_id="j")
+
+    n_fresh, fresh = _jobs(spark, run)
+    assert 0 < n_fresh <= FRESH_RUN_JOBS
+    n_again, again = _jobs(spark, run)
+    assert n_again == 0
+    assert list(again) == list(fresh) and not any(again.values())
+
+
+TABLES = ("json_doc", "xml_doc", "error", "raw", "_metrics")
+
+
+def _rows(spark, catalog, table):
+    df = catalog.read(spark, table)
+    if table == "_metrics":
+        df = df.drop("committed_at")
+    return Counter(df.collect())
+
+
+@pytest.fixture(scope="module")
+def clean(spark, tiny_df, tmp_path_factory):
+    cat = SinkCatalog(root=str(tmp_path_factory.mktemp("clean")))
+    pipeline.run(spark, tiny_df, cat, run_id="f")
+    return {t: _rows(spark, cat, t) for t in TABLES}
+
+
+class Injected(Exception):
+    pass
+
+
+@pytest.mark.parametrize("point", ["before_data", "before_commit"])
+@pytest.mark.parametrize("table", TABLES)
+def test_fault_injection_resume(spark, tiny_df, catalog, clean, monkeypatch,
+                                table, point):
+    """A run that dies inside SinkCatalog.write for ``table`` (before its
+    data write, or after its data files are written but before the manifest
+    commit) resumes under the same run_id to exactly the clean run's tables:
+    one snapshot each, the earlier commits untouched, no staging left."""
+    write, commit = SinkCatalog.write, SinkCatalog._commit
+
+    def faulty_write(self, df, name, *a, **k):
+        if name == table and point == "before_data":
+            raise Injected(name)
+        return write(self, df, name, *a, **k)
+
+    def faulty_commit(self, name, snapshot):
+        if name == table and point == "before_commit":
+            raise Injected(name)
+        return commit(self, name, snapshot)
+
+    with monkeypatch.context() as m:
+        m.setattr(SinkCatalog, "write", faulty_write)
+        m.setattr(SinkCatalog, "_commit", faulty_commit)
+        with pytest.raises(Injected):
+            pipeline.run(spark, tiny_df, catalog, run_id="f")
+    done = TABLES[:TABLES.index(table)]
+    assert [t for t in TABLES if catalog.committed("f", t)] == list(done)
+    before = {t: catalog.manifest(t) for t in done}
+
+    res = pipeline.run(spark, tiny_df, catalog, run_id="f")
+    assert [t for t in TABLES if res[t] is not None] == list(TABLES[len(done):])
+    for t in TABLES:
+        assert _rows(spark, catalog, t) == clean[t], t
+        assert len(catalog.manifest(t)["snapshots"]) == 1, t
+    assert {t: catalog.manifest(t) for t in done} == before
+    assert not os.path.exists(os.path.join(catalog.root, "_staging", "f"))
 
 
 # (name, type, nullable) of every committed sink, as Spark wrote them into

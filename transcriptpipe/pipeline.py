@@ -18,8 +18,8 @@ entry point (``build``, ``run``, ``jvm_stage_frame``, ``rendered_frame``):
 4. ``stage``     the rendered frame is written once to parquet
                  (``stage_dir``) or persisted, so the sinks below are
                  projections, not recomputations
-5. ``sinks``     fan-out to json_doc / xml_doc / error / raw, then S6 doc
-                 batching and F8 fold re-rendering (``_finish_sinks``)
+5. ``sinks``     one frame per ``sink_names``: json_doc / xml_doc / error /
+                 raw, S6 doc batching, then F8 fold re-rendering
 
 Skew (north_rule requirement): a hot conversation is bounded by
 ``max_turns_per_conv`` (aushape's max_event_size trim, format.h:60-63). The
@@ -33,13 +33,14 @@ rows.
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass, replace
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import arrow_docs, relational, route
+from . import arrow_docs, docbatch, relational, route
 from .enrich import enrich
 from .render import TIME_FMT, prettify_json, prettify_xml
 from .sinks import SinkCatalog
@@ -72,7 +73,9 @@ class PipeConf:
     (11M turns, local[32]): compute 23.5s + parquet stage ~6s, vs +42s for
     the in-memory columnar cache build that persist=True pays. This is the
     cluster pattern (staging table) and makes build() eager for the staging
-    write."""
+    write. ``run`` never deletes a ``stage_dir`` set here; left unset with a
+    SinkCatalog, ``run`` stages under ``<root>/_staging/<run_id>`` and
+    deletes that directory when its commit loop ends."""
     engine: str = "arrow"
     """The render layer: 'arrow' (default) assembles, trims and renders in
     ONE fused mapInPandas pass over the sorted exchange (fastkernel — the
@@ -171,7 +174,10 @@ def stage(rendered: DataFrame, conf: PipeConf) -> DataFrame:
     """The stage layer: every sink derives from the rendered frame (row
     errors travel on the doc row), so render must run once even though the
     sinks are materialized as separate actions. With ``stage_dir`` the frame
-    is written there (eager) and read back; else it is persisted."""
+    is written there (eager) and read back with the schema it was written
+    with, so no schema-inference job runs (Spark reads a parquet table
+    all-nullable either way); else it is persisted. ``run`` removes the
+    staging it derives and releases a persisted frame when it is done."""
     if conf.stage_dir:
         # staging is transient per-run scratch read a handful of times
         # and discarded — cheap codec (lz4) beats the session's durable
@@ -180,71 +186,69 @@ def stage(rendered: DataFrame, conf: PipeConf) -> DataFrame:
         # the session codec through catalog.write
         (rendered.write.mode("overwrite")
          .option("compression", "lz4").parquet(conf.stage_dir))
-        return rendered.sparkSession.read.parquet(conf.stage_dir)
+        return (rendered.sparkSession.read.schema(rendered.schema)
+                .parquet(conf.stage_dir))
     if conf.persist:
         return rendered.persist(StorageLevel.MEMORY_AND_DISK)
     return rendered
 
 
+class SinkFrames(dict):
+    """The sinks layer's result: sink frames by name, in ``sink_names``
+    order, and ``staged``, the stage-layer frame they all project. A caller
+    done with the sinks releases it with ``staged.unpersist()``."""
+
+    def __init__(self, staged: DataFrame):
+        super().__init__()
+        self.staged = staged
+
+
+def sink_names(conf: PipeConf) -> list[str]:
+    """The sink tables a run builds and commits, in commit order: each
+    selected language's per-event doc sink, ``error``, ``raw``, then with
+    ``doc_batch`` each selected language's S6 log sink."""
+    langs = [lang for lang in ("json", "xml") if lang in conf.langs]
+    logs = [f"{lang}_log" for lang in langs] if conf.doc_batch is not None else []
+    return [f"{lang}_doc" for lang in langs] + ["error", "raw"] + logs
+
+
 def sinks(rendered: DataFrame, transcripts: DataFrame, conf: PipeConf
-          ) -> dict[str, DataFrame]:
-    """The sinks layer: per-language doc projections, the error sink, the
-    raw passthrough of the un-normalized input, then ``_finish_sinks``."""
+          ) -> SinkFrames:
+    """The sinks layer, one frame per ``sink_names(conf)``: per-language
+    doc projections, the error sink, the raw passthrough of the
+    un-normalized input, S6 log docs batched from the canonical compact
+    docs, then the optional F8 fold/indent re-render of the per-event doc
+    sinks (the log sinks stay compact)."""
     doc_cols = ["conv_id", "doc_id", "serial", "time", "n_turns"]
-    out = {}
-    if "json" in conf.langs:
-        out["json_doc"] = rendered.select(*doc_cols, "doc", "trimmed", "error")
-    if "xml" in conf.langs:
-        out["xml_doc"] = rendered.select(
-            *doc_cols, F.col("xml").alias("doc"), "trimmed", "error"
-        )
-    out["error"] = route.error_sink(rendered)
-    out["raw"] = route.raw_sink(transcripts)
-    _finish_sinks(out, conf)
+    doc = {"json_doc": F.col("doc"), "xml_doc": F.col("xml").alias("doc")}
+    out = SinkFrames(rendered)
+    for name in sink_names(conf):
+        if name in doc:
+            out[name] = rendered.select(*doc_cols, doc[name], "trimmed", "error")
+        elif name.endswith("_log"):
+            lang = name.removesuffix("_log")
+            out[name] = docbatch.batch_documents(
+                out[f"{lang}_doc"], events_per_doc=conf.doc_batch, fmt=lang)
+        elif name == "error":
+            out[name] = route.error_sink(rendered)
+        else:
+            out[name] = route.raw_sink(transcripts)
+    if conf.fold_level is not None:
+        if "json_doc" in out:
+            out["json_doc"] = prettify_json(
+                out["json_doc"], indent=conf.indent, fold_level=conf.fold_level)
+        if "xml_doc" in out:
+            out["xml_doc"] = prettify_xml(out["xml_doc"], fold_level=conf.fold_level)
     return out
 
 
 def build(spark: SparkSession, transcripts: DataFrame, conf: PipeConf | None = None
-          ) -> dict[str, DataFrame]:
+          ) -> SinkFrames:
     """Build all sink DataFrames: enrich → render → stage → sinks. Lazy
     unless ``conf.stage_dir`` is set (the staging write runs here)."""
     conf = conf or PipeConf()
     rendered = stage(render(enrich(transcripts, spark), conf), conf)
     return sinks(rendered, transcripts, conf)
-
-
-def _finish_sinks(sinks: dict[str, DataFrame], conf: PipeConf) -> None:
-    """Sink post-processing: S6 doc batching (from the canonical compact
-    docs), then the optional F8 fold/indent re-render of the per-event doc
-    sinks."""
-    _add_doc_batch_sinks(sinks, conf)
-    if conf.fold_level is not None:
-        if "json_doc" in sinks:
-            sinks["json_doc"] = prettify_json(
-                sinks["json_doc"], indent=conf.indent,
-                fold_level=conf.fold_level,
-            )
-        if "xml_doc" in sinks:
-            sinks["xml_doc"] = prettify_xml(
-                sinks["xml_doc"], fold_level=conf.fold_level
-            )
-
-
-def _add_doc_batch_sinks(sinks: dict[str, DataFrame], conf: PipeConf) -> None:
-    """S6: multi-event log documents built from the per-event sinks
-    (deselected languages stay deselected — ADVICE r2: --lang must skip)."""
-    if conf.doc_batch is None:
-        return
-    from . import docbatch
-
-    if "json_doc" in sinks:
-        sinks["json_log"] = docbatch.batch_documents(
-            sinks["json_doc"], events_per_doc=conf.doc_batch, fmt="json"
-        )
-    if "xml_doc" in sinks:
-        sinks["xml_log"] = docbatch.batch_documents(
-            sinks["xml_doc"], events_per_doc=conf.doc_batch, fmt="xml"
-        )
 
 
 def rendered_frame(spark: SparkSession, transcripts: DataFrame,
@@ -271,31 +275,45 @@ def jvm_stage_frame(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
 
 def run(spark: SparkSession, transcripts: DataFrame, catalog, run_id: str,
         conf: PipeConf | None = None, source_snapshot: str | None = None) -> dict:
-    """End-to-end committed run: build sinks, write each through the catalog
-    (skipping sinks already committed for this run_id — the resume path),
-    then commit the _metrics table. Returns {sink: snapshot|None}.
+    """End-to-end committed run: one loop over the tables it commits,
+    ``sink_names(conf)`` plus ``_metrics``. Returns {table: snapshot|None}.
 
-    Exactly-once: a killed run leaves some sinks committed; re-running the
-    same run_id writes only the missing ones. Readers go through
-    catalog.read(), which sees only manifest-committed files.
+    Committed set first: if every table is committed for ``run_id``, nothing
+    is built and no Spark job starts. Otherwise it builds the sinks, adds
+    ``metrics_frame`` as one more frame and writes each table through
+    ``catalog.write``, which skips a table already committed for ``run_id``.
+    Exactly-once: re-running a killed run's run_id re-renders and writes
+    only the missing tables. Readers go through catalog.read(), which sees
+    only manifest-committed files.
+
+    With a SinkCatalog and no ``conf.stage_dir`` it stages under
+    ``<root>/_staging/<run_id>`` and deletes that when the loop ends, on the
+    all-committed path too (clearing what a crashed run left); a caller's
+    ``stage_dir`` is never deleted. A persisted frame is released.
     """
     conf = conf or PipeConf()
+    owned_stage = None
     if conf.stage_dir is None and isinstance(catalog, SinkCatalog):
-        # stage the rendered frame under the warehouse so the four sink
-        # writes are projections, not recomputations (and a resumed run
-        # reuses nothing stale: staging is per run_id). Path-rooted catalogs
-        # only: an IcebergCatalog's root is a table namespace — set
+        # stage the rendered frame under the warehouse so the sink writes
+        # are projections, not recomputations. Path-rooted catalogs only:
+        # an IcebergCatalog's root is a table namespace — set
         # conf.stage_dir explicitly (a staging table/location) there.
-        conf = replace(conf, stage_dir=os.path.join(catalog.root, "_staging", run_id))
-    frames = build(spark, transcripts, conf)
-    results = {}
-    for name, df in frames.items():
-        results[name] = catalog.write(df, name, run_id, source_snapshot)
-    if not catalog.committed(run_id, "_metrics"):
-        m = metrics_frame(frames, run_id)
-        results["_metrics"] = catalog.write(m, "_metrics", run_id, source_snapshot)
-    else:
-        results["_metrics"] = None
+        owned_stage = os.path.join(catalog.root, "_staging", run_id)
+        conf = replace(conf, stage_dir=owned_stage)
+    tables = [*sink_names(conf), "_metrics"]
+    results = dict.fromkeys(tables)
+    frames = None
+    try:
+        if not all(catalog.committed(run_id, t) for t in tables):
+            frames = build(spark, transcripts, conf)
+            frames["_metrics"] = metrics_frame(frames, run_id)  # over the sinks
+            for name in tables:
+                results[name] = catalog.write(frames[name], name, run_id, source_snapshot)
+    finally:
+        if frames is not None:
+            frames.staged.unpersist()
+        if owned_stage:
+            shutil.rmtree(owned_stage, ignore_errors=True)
     return results
 
 
