@@ -142,6 +142,58 @@ def test_cli_fold_writes_folded_sink(spark, tmp_path):
     assert allfold == compact
 
 
+def test_cli_xml_fold_follows_indent(spark, tmp_path):
+    """--indent sets the XML fold's nesting indent as it sets the JSON
+    one's: with --lang xml --fold 2 --indent 4 every unfolded element is
+    indented by a multiple of 4 spaces, levels 1 and 2 by 4 and 8."""
+    from transcriptpipe.sinks import SinkCatalog
+
+    inp = str(tmp_path / "in6.parquet")
+    synth.write_transcripts(inp, n_convs=6, seed=8)
+    out = str(tmp_path / "wh6")
+    rc = main([inp, "-O", out, "--lang", "xml", "--fold", "2",
+               "--indent", "4", "--run-id", "t6"])
+    assert rc == 0
+    docs = [r["doc"] for r in SinkCatalog(out).read(spark, "xml_doc").collect()]
+    pads = {len(line) - len(line.lstrip(" "))
+            for doc in docs for line in doc.splitlines()
+            if line.lstrip(" ").startswith("<")}
+    assert {0, 4, 8} <= pads
+    assert all(p % 4 == 0 for p in pads), sorted(pads)
+
+
+def test_cli_default_run_id_is_the_resolved_input(spark, tmp_path):
+    """Without --run-id the run id names the whole resolved input path:
+    two same-named inputs under different directories both commit into one
+    warehouse, and one input reached first by a relative and then by an
+    absolute path commits once."""
+    from transcriptpipe.sinks import SinkCatalog
+
+    tail = os.path.join("landing", "conversations", "2026", "10", "17",
+                        "transcripts.parquet")
+    for i, tenant in enumerate(("tenant-a", "tenant-b")):
+        path = tmp_path / tenant / tail
+        path.parent.mkdir(parents=True)
+        synth.write_transcripts(str(path), n_convs=4 + i, seed=10 + i)
+    out = str(tmp_path / "wh7")
+    # relative to this process's cwd, which the session's JVM shares
+    relative = os.path.relpath(tmp_path / "tenant-a" / tail)
+    assert main([relative, "-O", out, "--lang", "json"]) == 0
+    assert main([str(tmp_path / "tenant-b" / tail), "-O", out, "--lang", "json"]) == 0
+    cat = SinkCatalog(out)
+    tables = ("json_doc", "error", "raw", "_metrics")
+    assert [len(cat.manifest(t)["snapshots"]) for t in tables] == [2] * 4
+    assert cat.read(spark, "json_doc").count() == 4 + 5
+    # the first input again, by its absolute path: nothing new is committed
+    assert main([str(tmp_path / "tenant-a" / tail), "-O", out, "--lang", "json"]) == 0
+    assert [len(cat.manifest(t)["snapshots"]) for t in tables] == [2] * 4
+
+    from transcriptpipe.__main__ import default_run_id
+
+    assert default_run_id("x/y_z") != default_run_id("x_y/z")
+    assert default_run_id("s3://b/in.parquet").startswith("cli-in.parquet-")
+
+
 def test_parse_fold_grammar(capsys):
     """--fold grammar is an argparse type: none/all/N accepted, junk gets a
     usage error (exit 2), not a ValueError traceback (ADVICE r4)."""

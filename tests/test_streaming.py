@@ -117,7 +117,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     _order_mtimes(d / "0.parquet", d / "1.parquet")
 
     q = (
-        streaming.stream_coalesce(spark, str(d), ckpt, watermark="10 minutes",
+        streaming.stream_coalesce(spark, str(d), watermark="10 minutes",
                                   event_time_gap_ms=60_000)
         .writeStream.format("parquet")
         .option("path", out)
@@ -154,7 +154,7 @@ def test_state_cap_marks_trimmed(spark, tmp_path):
     _write(rows, d / "0.parquet")
 
     q = (
-        streaming.stream_coalesce(spark, str(d), ckpt, max_turns_per_conv=10)
+        streaming.stream_coalesce(spark, str(d), max_turns_per_conv=10)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -188,7 +188,7 @@ def test_processing_time_flush_incomplete(spark, tmp_path):
     rows.to_parquet(d / "0.parquet", index=False)
 
     q = (
-        streaming.stream_coalesce(spark, str(d), ckpt, timeout_ms=1000)
+        streaming.stream_coalesce(spark, str(d), timeout_ms=1000)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -273,6 +273,39 @@ def test_stream_xml_matches_batch_xml(spark, split_input, tmp_path):
         assert g["doc"] == render.xml_from_doc(json.loads(w["doc"])), cid
     # sink schema is the per-language one: the doc column IS the xml
     assert "xml" not in spark.read.parquet(out).columns
+
+
+@pytest.mark.parametrize("lang", ["json", "xml"])
+def test_stream_sink_is_the_batch_doc_row(spark, split_input, tmp_path, lang):
+    """The drained stream sink is the batch doc sink plus ``complete``: the
+    same column names and types in the same order, and without
+    ``complete`` the same rows as ``pipeline.build``'s ``<lang>_doc`` for
+    the same input and render options (trim and turn cap included)."""
+    from pyspark.sql import types as T
+
+    from transcriptpipe import pipeline, schemas
+
+    in_dir, pdf = split_input
+    opts = dict(max_turns_per_conv=6, with_norm=True, max_doc_bytes=600)
+    out = str(tmp_path / f"out_row_{lang}")
+    streaming.run_stream_once(spark, in_dir, out,
+                              str(tmp_path / f"ckpt_row_{lang}"), lang=lang,
+                              **opts)
+    got = spark.read.parquet(out)
+    batch = pipeline.build(
+        spark, spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS),
+        pipeline.PipeConf(persist=False, langs=(lang,), **opts))[f"{lang}_doc"]
+
+    def fields(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    assert fields(got) == fields(batch) + [("complete", T.BooleanType())]
+    rows = [r.asDict() for r in got.collect()]
+    assert all(r.pop("complete") for r in rows)
+    want = [r.asDict() for r in batch.collect()]
+    assert any(r["trimmed"] for r in want)
+    assert sorted(rows, key=lambda r: r["conv_id"]) == \
+        sorted(want, key=lambda r: r["conv_id"])
 
 
 def test_stream_resolves_roles_from_enrich_dictionaries(spark, tmp_path,

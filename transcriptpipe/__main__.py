@@ -29,6 +29,8 @@ Option mapping (reference → here):
 from __future__ import annotations
 
 import argparse
+import hashlib
+import os
 import sys
 
 
@@ -72,6 +74,15 @@ def parse_fold(s: str) -> int:
     return lvl
 
 
+def default_run_id(input_path: str) -> str:
+    """The run id without --run-id: the input's basename plus a digest of
+    its resolved path (a ``scheme://`` URI as it is): two inputs never
+    share an id, and one input keeps its id whichever path names it."""
+    real = input_path if "://" in input_path else os.path.realpath(input_path)
+    digest = hashlib.sha256(real.encode()).hexdigest()[:12]
+    return f"cli-{os.path.basename(real)[-40:]}-{digest}"
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="transcriptpipe",
@@ -108,7 +119,7 @@ def build_parser() -> argparse.ArgumentParser:
                         "stage (fastest); sql: all-JVM relational engine "
                         "(no Python workers)")
     p.add_argument("--run-id", default=None,
-                   help="resumable run id (default: derived from input)")
+                   help="resumable run id (default: input basename + path digest)")
     p.add_argument("--stream", action="store_true",
                    help="drain the input dir via Structured Streaming instead "
                         "of batch (EOE-driven stateful coalesce)")
@@ -148,20 +159,17 @@ def main(argv: list[str] | None = None) -> int:
         sink = f"{lang}_doc"
         ckpt = f"{args.out}/_checkpoint_{lang}"
         # 0.3 -> 0.4 migration guard: 0.3 streams checkpointed at
-        # {out}/_checkpoint (one lang-less path) and wrote a doc schema
-        # without the xml column.  Starting a 0.4 stream over such an out
-        # dir would silently begin a FRESH checkpoint and re-append every
-        # input doc into the existing sink — fail loudly instead (see
-        # README "Upgrading" table).
-        import os
-
+        # {out}/_checkpoint (one lang-less path).  Starting a 0.4 stream
+        # over such an out dir would silently begin a FRESH checkpoint and
+        # re-append every input doc into the existing sink — fail loudly
+        # instead (see README "Upgrading" table).
         legacy_ckpt = os.path.join(args.out, "_checkpoint")
         if os.path.isdir(legacy_ckpt):
             print(
                 f"error: legacy 0.3 stream checkpoint found at {legacy_ckpt}; "
-                f"0.4 checkpoints at {ckpt} and its doc schema adds the xml "
-                "column, so resuming would reprocess all input and append "
-                "duplicate docs. Either drain into a NEW --out dir, or (to "
+                f"0.4 checkpoints at {ckpt}, so this run would start a fresh "
+                "checkpoint, reprocess all input and append duplicate docs "
+                "to the existing sink. Either drain into a NEW --out dir, or (to "
                 "accept a one-time rebuild) delete the old checkpoint AND "
                 f"the {sink} sink dir, then rerun.",
                 file=sys.stderr,
@@ -193,12 +201,10 @@ def main(argv: list[str] | None = None) -> int:
         fold_level=args.fold,
         indent=args.indent,
     )
-    run_id = args.run_id or "cli-" + args.input.strip("/").replace("/", "_")[-40:]
+    run_id = args.run_id or default_run_id(args.input)
     catalog = sinks.SinkCatalog(args.out)
     # deployment artifact for a search sink (the reference installs
     # lib/aushape.mapping.json alongside its outputs)
-    import os
-
     from . import docschema
 
     docschema.write_es_mapping(os.path.join(args.out, "_es_mapping.json"))

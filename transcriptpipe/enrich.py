@@ -22,9 +22,10 @@ from pyspark.sql import functions as F
 from . import schemas, synth
 
 
-# The dictionaries are built from pandas so that (with Arrow on) they are
-# local relations: broadcasting one runs no Python job. That matters for
-# the stream drain, which re-plans the stream-static joins every micro-batch.
+# The dictionaries are built from pandas, but broadcasting each one still
+# runs one 4-task Spark job per action (noop write over parquet input: a
+# scan alone is 1 job, with the role join 2, full ``enrich`` 3): 2 of a
+# committed run's build jobs, and 2 per stream micro-batch.
 def role_dict_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame(synth.role_dict_rows()),
                                  schema=schemas.ROLE_DICT)

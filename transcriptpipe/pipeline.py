@@ -37,7 +37,7 @@ import shutil
 from dataclasses import dataclass, replace
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import arrow_docs, docbatch, relational, route
@@ -212,19 +212,27 @@ def sink_names(conf: PipeConf) -> list[str]:
     return [f"{lang}_doc" for lang in langs] + ["error", "raw"] + logs
 
 
+def doc_sink_columns(lang: str) -> list[str | Column]:
+    """A language's per-event doc-sink row over an ``arrow_docs.DOC_SCHEMA``
+    frame: the envelope, that language's body as ``doc``, ``trimmed`` and
+    ``error``. The batch ``json_doc``/``xml_doc`` sinks and the stream sink
+    (streaming.run_stream_once) both select it."""
+    body = {"json": F.col("doc"), "xml": F.col("xml").alias("doc")}[lang]
+    return ["conv_id", "doc_id", "serial", "time", "n_turns", body,
+            "trimmed", "error"]
+
+
 def sinks(rendered: DataFrame, transcripts: DataFrame, conf: PipeConf
           ) -> SinkFrames:
     """The sinks layer, one frame per ``sink_names(conf)``: per-language
-    doc projections, the error sink, the raw passthrough of the
-    un-normalized input, S6 log docs batched from the canonical compact
-    docs, then the optional F8 fold/indent re-render of the per-event doc
-    sinks (the log sinks stay compact)."""
-    doc_cols = ["conv_id", "doc_id", "serial", "time", "n_turns"]
-    doc = {"json_doc": F.col("doc"), "xml_doc": F.col("xml").alias("doc")}
+    doc projections (``doc_sink_columns``), the error sink, the raw
+    passthrough of the un-normalized input, S6 log docs batched from the
+    canonical compact docs, then the optional F8 fold/indent re-render of
+    the per-event doc sinks (the log sinks stay compact)."""
     out = SinkFrames(rendered)
     for name in sink_names(conf):
-        if name in doc:
-            out[name] = rendered.select(*doc_cols, doc[name], "trimmed", "error")
+        if name.endswith("_doc"):
+            out[name] = rendered.select(*doc_sink_columns(name.removesuffix("_doc")))
         elif name.endswith("_log"):
             lang = name.removesuffix("_log")
             out[name] = docbatch.batch_documents(
@@ -234,11 +242,9 @@ def sinks(rendered: DataFrame, transcripts: DataFrame, conf: PipeConf
         else:
             out[name] = route.raw_sink(transcripts)
     if conf.fold_level is not None:
-        if "json_doc" in out:
-            out["json_doc"] = prettify_json(
-                out["json_doc"], indent=conf.indent, fold_level=conf.fold_level)
-        if "xml_doc" in out:
-            out["xml_doc"] = prettify_xml(out["xml_doc"], fold_level=conf.fold_level)
+        for name, pretty in (("json_doc", prettify_json), ("xml_doc", prettify_xml)):
+            if name in out:
+                out[name] = pretty(out[name], conf.indent, conf.fold_level)
     return out
 
 

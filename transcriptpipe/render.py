@@ -186,23 +186,19 @@ def prettify_json(json_docs: DataFrame, indent: int = 2,
                   fold_level: int | None = None) -> DataFrame:
     """F8 fold/indent analog (reference --fold/--indent, lib/gbuf.c space
     helpers): re-render the doc column pretty-printed with `indent` spaces
-    per nesting level. ``fold_level=None`` unfolds fully (reference
-    --fold=none); an integer N unfolds only nesting levels <= N and keeps
-    deeper structures on one line (the reference's intermediate fold
-    levels, default 4 in lib/conf.c:183). A presentation-only pass over the
-    sink — the canonical compact form stays the comparison target."""
+    per nesting level, through ``dumps_folded``. ``fold_level=None`` unfolds
+    fully (reference --fold=none); an integer N unfolds only nesting levels
+    <= N and keeps deeper structures on one line (the reference's
+    intermediate fold levels, default 4 in lib/conf.c:183). A
+    presentation-only pass over the sink — the canonical compact form stays
+    the comparison target."""
+    lvl = float("inf") if fold_level is None else fold_level
 
     @pandas_udf(T.StringType())
     def pretty(doc: pd.Series) -> pd.Series:
         import json
 
-        if fold_level is None:
-            return doc.map(lambda j: json.dumps(json.loads(j),
-                                                ensure_ascii=False,
-                                                indent=indent))
-        return doc.map(
-            lambda j: dumps_folded(json.loads(j), fold_level, nest_indent=indent)
-        )
+        return doc.map(lambda j: dumps_folded(json.loads(j), lvl, nest_indent=indent))
 
     return json_docs.withColumn("doc", pretty("doc"))
 
@@ -212,11 +208,9 @@ def _fold_xml(x: str, fold_level: float, indent: int = 2) -> str:
     element at nesting level <= fold_level starts on its own line; deeper
     elements stay inline. Closing tags take their own line exactly when
     their children were unfolded (space_closing: level+1 <= fold_level)."""
-    import re as _re2
-
     out, depth = [], 0
     pad = " " * indent
-    for tok in _re2.split(r"(<[^>]+>)", x):
+    for tok in _re.split(r"(<[^>]+>)", x):
         if not tok:
             continue
         if tok.startswith("</"):
@@ -236,13 +230,14 @@ def _fold_xml(x: str, fold_level: float, indent: int = 2) -> str:
     return "".join(out).lstrip("\n")
 
 
-def prettify_xml(xml_docs: DataFrame, fold_level: int | None = None) -> DataFrame:
+def prettify_xml(xml_docs: DataFrame, indent: int = 2,
+                 fold_level: int | None = None) -> DataFrame:
     """XML fold: one element per line up to ``fold_level`` (None = unfold
-    fully, reference --fold=none), two-space nesting indent."""
+    fully, reference --fold=none), `indent` spaces per nesting level."""
     lvl = float("inf") if fold_level is None else fold_level
 
     @pandas_udf(T.StringType())
     def pretty(doc: pd.Series) -> pd.Series:
-        return doc.map(lambda x: _fold_xml(x, lvl))
+        return doc.map(lambda x: _fold_xml(x, lvl, indent))
 
     return xml_docs.withColumn("doc", pretty("doc"))

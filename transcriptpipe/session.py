@@ -81,10 +81,11 @@ def get_spark(
         # parallelism, once the input dwarfs the cluster.
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", str(8 * 1024 * 1024)))
-        # collect_list aggregation (the A1 coalesce) runs in ObjectHashAggregate;
-        # the default sort-based fallback threshold (128 keys/partition) forces
-        # a full sort on any realistic key cardinality — measured 2-3x slower on
-        # the bench pipeline. But an UNbounded threshold lets AQE-coalesced fat
+        # collect_list runs in ObjectHashAggregate (docbatch's S6 log sinks,
+        # the sql engine; the default render has no aggregation). The default
+        # sort-based fallback threshold (128 keys/partition) forces a full
+        # sort on any realistic key cardinality — measured 2-3x slower on a
+        # collect_list coalesce. But an UNbounded threshold lets AQE-coalesced fat
         # partitions hold every group as Java objects (GC collapse at 32
         # concurrent tasks — measured). 64k groups/task ≈ 100MB object state:
         # hash-agg speed with sort-fallback safety.

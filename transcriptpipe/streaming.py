@@ -16,7 +16,11 @@ operator keyed by conv_id:
   arrives (AUPARSE_CB_EVENT_READY analog) or the state times out (auparse's
   flush analog); then the conversation goes, as one sorted batch, through
   ``arrow_docs.render_sorted_batches`` — the generator the batch render
-  maps over the exchange.
+  maps over the exchange — and leaves as that render's own row
+  (``arrow_docs.DOC_SCHEMA``) plus ``complete`` (``STREAM_DOC``)
+* writeStream: ``run_stream_once`` writes the batch doc sink's projection
+  of those rows (``pipeline.doc_sink_columns``) plus ``complete``, so a
+  streamed ``json_doc``/``xml_doc`` row is the batch row of the same input
 
 Timeout modes: continuous deployments use ProcessingTimeTimeout so idle
 conversations flush; drain-style runs (Trigger.AvailableNow, used by tests
@@ -54,24 +58,17 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from . import arrow_docs, schemas
 from .enrich import enrich
+from .pipeline import doc_sink_columns
 
-STREAM_DOC = T.StructType([
-    T.StructField("conv_id", T.StringType(), False),
-    T.StructField("serial", T.LongType(), True),
-    T.StructField("time", T.StringType(), True),
-    T.StructField("n_turns", T.IntegerType(), False),
-    T.StructField("doc", T.StringType(), False),
-    T.StructField("xml", T.StringType(), True),         # null unless "xml" in langs
-    T.StructField("error", T.StringType(), True),
-    T.StructField("complete", T.BooleanType(), False),  # EOE seen vs timeout flush
-    T.StructField("trimmed", T.BooleanType(), False),   # state cap hit
-])
+# the state step's output: the batch render's own rows (arrow_docs.DOC_SCHEMA)
+# plus whether the EOE completed the conversation or a timeout flushed it
+STREAM_DOC = T.StructType([*arrow_docs.DOC_SCHEMA.fields,
+                           T.StructField("complete", T.BooleanType(), False)])
 
 # state: the render pass's input columns minus the conv_id key, as parallel
 # arrays (Arrow-friendly); ts is kept as epoch microseconds
@@ -90,7 +87,6 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
     EOE or timeout. ``render_opts`` are render_sorted_batches' rendering
     options."""
     cap = max_turns_per_conv
-    out_cols = [f.name for f in STREAM_DOC.fields]
 
     def combined(parts: list[pd.DataFrame]) -> pd.DataFrame:
         if len(parts) == 1:
@@ -112,9 +108,7 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
         # P2 empty-event drop and the trimmed mark happen in the render pass
         for docs in arrow_docs.render_sorted_batches(
                 [pdf], max_turns_per_conv=cap, **render_opts):
-            # columns are matched to STREAM_DOC by name
-            yield pd.DataFrame({c: complete if c == "complete" else docs[c]
-                                for c in out_cols})
+            yield docs.assign(complete=complete)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -176,15 +170,16 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
 
 
 def stream_coalesce(spark: SparkSession, input_path: str,
-                    checkpoint: str, timeout_ms: int | None = None,
+                    timeout_ms: int | None = None,
                     max_turns_per_conv: int = 2048,
                     watermark: str | None = None,
                     event_time_gap_ms: int = 60_000,
                     with_text: bool = True, with_norm: bool = False,
                     max_doc_bytes: int | None = None,
                     langs: tuple = ("json",)) -> DataFrame:
-    """readStream(files) -> stateful EOE-driven coalesce. Returns the
-    streaming DataFrame; caller attaches writeStream (see run_stream_once).
+    """readStream(files) -> stateful EOE-driven coalesce: the streaming
+    DataFrame of ``STREAM_DOC`` rows. The caller attaches writeStream and
+    its checkpoint (see run_stream_once).
 
     Modes (ST3 late/out-of-order policy):
 
@@ -192,39 +187,34 @@ def stream_coalesce(spark: SparkSession, input_path: str,
       conversations wait in the state store for the next run.
     * timeout_ms=N (continuous, processing time): idle conversations flush
       as incomplete after N ms.
-    * watermark="10 minutes" (continuous, event time): rows later than the
-      watermark are DROPPED before they reach the state (the deterministic
-      late-data policy — they no longer re-open state for already-emitted
-      conversations), and un-EOE'd conversations flush once the watermark
-      passes their newest under-cap turn + event_time_gap_ms.
+    * watermark="10 minutes" (continuous, event time; takes precedence over
+      timeout_ms): rows later than the watermark are DROPPED before they
+      reach the state (the deterministic late-data policy — they no longer
+      re-open state for already-emitted conversations), and un-EOE'd
+      conversations flush once the watermark passes their newest under-cap
+      turn + event_time_gap_ms.
 
     Per-key state is bounded by ``max_turns_per_conv`` through
     ``arrow_docs.cap_rows``, the batch render's cap rule (cap + 1 rows).
-
-    ``input_path`` files must land in ts order with distinct mtimes: they
-    are read one per micro-batch in mtime order (see the module docstring).
+    The ``xml`` column is null unless "xml" is in ``langs``. ``input_path``
+    files are read one per micro-batch in mtime order (module docstring).
     """
     raw = (
         spark.readStream.schema(schemas.TRANSCRIPTS)
         .option("maxFilesPerTrigger", 1)
         .parquet(input_path)
     )
-    render_opts = dict(with_text=with_text, with_norm=with_norm,
-                       max_doc_bytes=max_doc_bytes,
-                       want_xml="xml" in langs)
+    timeout_conf = GroupStateTimeout.NoTimeout
     if watermark is not None:
         raw = raw.withWatermark("ts", watermark)
         timeout_conf = GroupStateTimeout.EventTimeTimeout
-        fn = _make_coalesce_fn(None, max_turns_per_conv,
-                               event_time_gap_ms=event_time_gap_ms,
-                               **render_opts)
-    else:
-        timeout_conf = (
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_ms
-            else GroupStateTimeout.NoTimeout
-        )
-        fn = _make_coalesce_fn(timeout_ms, max_turns_per_conv, **render_opts)
+    elif timeout_ms:
+        timeout_conf = GroupStateTimeout.ProcessingTimeTimeout
+    fn = _make_coalesce_fn(
+        timeout_ms, max_turns_per_conv,
+        event_time_gap_ms=event_time_gap_ms if watermark is not None else None,
+        with_text=with_text, with_norm=with_norm,
+        max_doc_bytes=max_doc_bytes, want_xml="xml" in langs)
     # the state operator takes the render pass's columns, as the exchange does
     enriched = enrich(raw, spark).select(*arrow_docs.SORTED_COLS)
     return enriched.groupBy("conv_id").applyInPandasWithState(
@@ -246,24 +236,19 @@ def run_stream_once(spark: SparkSession, input_path: str, out_path: str,
     parquet sink — the batch-ish smoke path used by tests and the CLI's
     --stream mode (all rendering options thread through).
 
-    ``lang`` selects which doc language the single streaming sink carries
-    ("json" or "xml" — round 4: XML streams through the same fused kernel;
-    the xml rendering replaces the doc column so the sink schema stays the
-    per-language one). One streaming query has one sink; to stream BOTH
-    languages run two queries with separate checkpoints, or use batch."""
-    df = stream_coalesce(spark, input_path, checkpoint,
+    ``lang`` ("json" or "xml") selects the one doc language the sink
+    carries. Its rows are the batch ``json_doc``/``xml_doc`` sink's row
+    (``pipeline.doc_sink_columns``) plus ``complete``. One streaming query
+    has one sink; to stream BOTH languages run two queries with separate
+    checkpoints, or use batch."""
+    df = stream_coalesce(spark, input_path,
                          max_turns_per_conv=max_turns_per_conv,
                          watermark=watermark, with_text=with_text,
                          with_norm=with_norm, max_doc_bytes=max_doc_bytes,
-                         langs=(lang,) if lang != "xml" else ("json", "xml"))
-    if lang == "xml":
-        df = df.select("conv_id", "serial", "time", "n_turns",
-                       F.col("xml").alias("doc"), "error", "complete",
-                       "trimmed")
-    else:
-        df = df.drop("xml")
+                         langs=(lang,))
     q = (
-        df.writeStream.format("parquet")
+        df.select(*doc_sink_columns(lang), "complete")
+        .writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
