@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -31,3 +32,23 @@ def tiny_df(spark, tiny_pdf):
 @pytest.fixture(scope="session")
 def tiny_rows(tiny_pdf):
     return tiny_pdf.to_dict("records")
+
+
+@pytest.fixture()
+def jobs(spark):
+    """``jobs(fn)``: ``fn()``'s result and the number of Spark jobs it
+    started on this thread (one job group)."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker learns of jobs from the listener bus, asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return count

@@ -241,3 +241,50 @@ def test_parse_size_reference_grammar():
     assert parse_size("unlimited") is None
     with pytest.raises(ValueError):
         parse_size("512")  # below the reference's 1024 minimum
+
+
+def test_cli_batch_jobs_are_the_pipeline_run_jobs(spark, tmp_path, jobs):
+    """The CLI reads its input with the declared schema: a batch run starts
+    as many Spark jobs as ``pipeline.run`` on the same input read with
+    ``schemas.TRANSCRIPTS`` (no schema-inference job of its own)."""
+    from transcriptpipe import pipeline, schemas
+    from transcriptpipe.sinks import SinkCatalog
+
+    inp = str(tmp_path / "in_jobs.parquet")
+    synth.write_transcripts(inp, n_convs=12, seed=9)
+    n_cli, rc = jobs(lambda: main([inp, "-O", str(tmp_path / "wh_cli"),
+                                   "--run-id", "j"]))
+    assert rc == 0
+    n_run, _ = jobs(lambda: pipeline.run(
+        spark, spark.read.schema(schemas.TRANSCRIPTS).parquet(inp),
+        SinkCatalog(str(tmp_path / "wh_run")), "j"))
+    assert n_cli == n_run > 0
+
+
+def test_cli_commits_through_catalog_for(spark, tmp_path, monkeypatch):
+    """The CLI picks its catalog with ``sinks.catalog_for``: with the
+    Iceberg extension on the session every table is committed through
+    ``IcebergCatalog``; ``_es_mapping.json`` still lands under ``-O``."""
+    from transcriptpipe import pipeline, sinks
+
+    written = []
+
+    class Recording:
+        def __init__(self, spark, *args, **kwargs):
+            self.root = "spark_catalog.transcriptpipe"
+
+        def committed(self, run_id, table):
+            return False
+
+        def write(self, df, table, run_id, source_snapshot=None):
+            written.append(table)
+            return {"run_id": run_id}
+
+    monkeypatch.setattr(sinks, "has_iceberg", lambda spark: True)
+    monkeypatch.setattr(sinks, "IcebergCatalog", Recording)
+    inp = str(tmp_path / "in_ice.parquet")
+    synth.write_transcripts(inp, n_convs=4, seed=12)
+    out = tmp_path / "wh_ice"
+    assert main([inp, "-O", str(out), "--run-id", "ice"]) == 0
+    assert written == [*pipeline.sink_names(pipeline.PipeConf()), "_metrics"]
+    assert os.listdir(out) == ["_es_mapping.json"]

@@ -9,7 +9,6 @@ per-partition lineage in the manifest.
 from __future__ import annotations
 
 import os
-import uuid
 from collections import Counter
 
 import pytest
@@ -134,36 +133,21 @@ def test_caller_stage_dir_is_kept(spark, tiny_df, catalog, tmp_path):
     assert not os.path.exists(os.path.join(catalog.root, "_staging", "k"))
 
 
-def _jobs(spark, fn):
-    """``fn()``'s result and the Spark jobs it started on this thread (one
-    job group)."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status tracker learns of jobs from the listener bus, asynchronously
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
 # Spark jobs of one fresh committed run of the default pipeline: staging
 # write, four sink writes, _metrics. A later change that removes jobs lowers
 # this pin.
 FRESH_RUN_JOBS = 17
 
 
-def test_job_counts(spark, tiny_df, catalog):
+def test_job_counts(spark, tiny_df, catalog, jobs):
     """A fresh run takes at most the pinned job count; a re-run of its
     committed run_id returns the same keys, all None, and starts no job."""
     def run():
         return pipeline.run(spark, tiny_df, catalog, run_id="j")
 
-    n_fresh, fresh = _jobs(spark, run)
+    n_fresh, fresh = jobs(run)
     assert 0 < n_fresh <= FRESH_RUN_JOBS
-    n_again, again = _jobs(spark, run)
+    n_again, again = jobs(run)
     assert n_again == 0
     assert list(again) == list(fresh) and not any(again.values())
 

@@ -308,6 +308,52 @@ def test_stream_sink_is_the_batch_doc_row(spark, split_input, tmp_path, lang):
         sorted(want, key=lambda r: r["conv_id"])
 
 
+def test_stream_defaults_are_the_batch_defaults(spark, tmp_path):
+    """With no render options the stream renders at ``PipeConf()``'s: a
+    conversation whose doc exceeds the default 8192-byte cap is trimmed as
+    in batch, and the sink rows are ``pipeline.build``'s ``json_doc`` rows
+    plus ``complete``."""
+    from transcriptpipe import pipeline, schemas
+
+    pdf = synth.gen_transcripts(n_convs=8, seed=11, hot_frac=0.125,
+                                hot_turns=300)
+    d = tmp_path / "in_defaults"
+    d.mkdir()
+    pdf.to_parquet(d / "0.parquet", index=False)
+    out = str(tmp_path / "out_defaults")
+    streaming.run_stream_once(spark, str(d), out, str(tmp_path / "ckpt_defaults"))
+    rows = [r.asDict() for r in spark.read.parquet(out).collect()]
+    assert all(r.pop("complete") for r in rows)
+
+    batch = pipeline.build(
+        spark, spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS),
+        pipeline.PipeConf(persist=False))["json_doc"]
+    want = [r.asDict() for r in batch.collect()]
+    assert any(r["trimmed"] for r in want)
+    assert sorted(rows, key=lambda r: r["conv_id"]) == \
+        sorted(want, key=lambda r: r["conv_id"])
+
+
+def test_stream_renders_once_above_the_state(spark, tmp_path):
+    """The state operator renders nothing: the stream's plan has exactly
+    one MapInPandas, the batch render operator, above it."""
+    d = tmp_path / "in_plan"
+    d.mkdir()
+    synth.gen_transcripts(n_convs=2).to_parquet(d / "0.parquet", index=False)
+    plan = streaming.stream_coalesce(spark, str(d))._jdf.queryExecution().analyzed()
+    ops = [line.lstrip(" :+-~").split(" ")[0]
+           for line in plan.toString().splitlines()]
+    assert ops.count("MapInPandas") == 1
+    assert ops.index("MapInPandas") < ops.index("FlatMapGroupsInPandasWithState")
+
+
+@pytest.mark.parametrize("field", [dict(engine="sql"), dict(doc_batch=10),
+                                   dict(fold_level=2), dict(stage_dir="stage")])
+def test_stream_rejects_batch_only_fields(spark, tmp_path, field):
+    with pytest.raises(ValueError):
+        streaming.stream_coalesce(spark, str(tmp_path), **field)
+
+
 def test_stream_resolves_roles_from_enrich_dictionaries(spark, tmp_path,
                                                         monkeypatch):
     """The stream drain reads through the enrich layer: a role code that
@@ -373,7 +419,7 @@ def test_state_holds_cap_plus_one_and_matches_batch(spark):
     to the batch render at the same cap."""
     from datetime import datetime, timedelta
 
-    from transcriptpipe import enrich, pipeline, schemas
+    from transcriptpipe import arrow_docs, enrich, pipeline, schemas
 
     cap, cid = 4, "conv-00000077"
     t0 = datetime(2026, 3, 4)
@@ -389,16 +435,16 @@ def test_state_holds_cap_plus_one_and_matches_batch(spark):
     enriched = enrich.enrich(df, spark).toPandas().sort_values("turn_idx")
     micro_batches = [enriched.iloc[:3], enriched.iloc[3:7], enriched.iloc[7:]]
 
-    fn = streaming._make_coalesce_fn(None, cap, max_doc_bytes=None,
-                                     with_text=True, with_norm=False,
-                                     want_xml=False)
+    fn = streaming._make_coalesce_fn(None, cap)
     state, out = _StubState(), []
     for mb in micro_batches:
         out += list(fn((cid,), iter([mb]), state))
         if state.exists:
             assert len(state.get[0]) <= cap + 1
     assert not state.exists
-    (doc,) = pd.concat(out).to_dict("records")
+    (doc,) = pd.concat(arrow_docs.render_sorted_batches(
+        out, max_doc_bytes=None, max_turns_per_conv=cap,
+        want_xml=False)).to_dict("records")
     assert doc["complete"] and doc["trimmed"] and doc["n_turns"] == cap
 
     batch = pipeline.build(spark, df, pipeline.PipeConf(

@@ -20,7 +20,9 @@ Option mapping (reference → here):
                            semantics, lib/conf.c:43-70 + gbuf.c:242-280;
                            defaults conf.c:183-190). Omitted = canonical
                            compact docs (the comparison target)
-    -o/--output/syslog   → sinks are parquet directories under --out; the
+    -o/--output/syslog   → sinks are parquet directories under --out, or
+                           Iceberg tables when the session carries the
+                           Iceberg extension (sinks.catalog_for); the
                            output vtable analog is sinks.py/route.py
     (new) --stream       → Structured Streaming drain over a file source
     (new) --run-id       → resumable exactly-once run (snapshot manifest)
@@ -131,16 +133,20 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
-    from . import pipeline, sinks
+    from . import pipeline, schemas, sinks
     from .session import get_spark
 
     spark = get_spark(app_name="transcriptpipe-cli", cpus=args.cpus)
+    # the PipeConf render fields both modes share
+    render_fields = dict(max_doc_bytes=args.max_doc_bytes,
+                         max_turns_per_conv=args.max_turns_per_conv,
+                         with_text=not args.no_text, with_norm=args.with_norm)
 
     if args.stream:
         from . import streaming
 
-        # stream mode honors the rendering options via the shared kernel;
-        # options it cannot honor are rejected loudly, not ignored
+        # stream mode renders through the batch render operator with the
+        # same render fields; a batch-only flag draws a warning
         for opt, flag in ((args.events_per_doc, "--events-per-doc"),
                           (args.run_id, "--run-id"),
                           (args.fold, "--fold")):
@@ -177,12 +183,7 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         streaming.run_stream_once(
             spark, args.input, f"{args.out}/{sink}", ckpt,
-            watermark=args.watermark,
-            max_turns_per_conv=args.max_turns_per_conv,
-            with_text=not args.no_text, with_norm=args.with_norm,
-            max_doc_bytes=args.max_doc_bytes,
-            lang=lang,
-        )
+            watermark=args.watermark, lang=lang, **render_fields)
         print(f"streamed -> {args.out}/{sink}", file=sys.stderr)
         return 0
 
@@ -190,10 +191,7 @@ def main(argv: list[str] | None = None) -> int:
         print("warning: --watermark only applies to --stream mode", file=sys.stderr)
     langs = ("json", "xml") if args.lang == "both" else (args.lang,)
     conf = pipeline.PipeConf(
-        max_doc_bytes=args.max_doc_bytes,
-        max_turns_per_conv=args.max_turns_per_conv,
-        with_text=not args.no_text,
-        with_norm=args.with_norm,
+        **render_fields,
         engine=args.engine,
         doc_batch=(parse_events_per_doc(args.events_per_doc)
                    if args.events_per_doc is not None else None),
@@ -202,13 +200,13 @@ def main(argv: list[str] | None = None) -> int:
         indent=args.indent,
     )
     run_id = args.run_id or default_run_id(args.input)
-    catalog = sinks.SinkCatalog(args.out)
+    catalog = sinks.catalog_for(spark, args.out)
     # deployment artifact for a search sink (the reference installs
     # lib/aushape.mapping.json alongside its outputs)
     from . import docschema
 
     docschema.write_es_mapping(os.path.join(args.out, "_es_mapping.json"))
-    tdf = spark.read.parquet(args.input)
+    tdf = spark.read.schema(schemas.TRANSCRIPTS).parquet(args.input)
     # deselected languages are never built or written (their render work is
     # skipped inside the kernel) — ref -l semantics, lib/conf.c:31-81
     results = pipeline.run(spark, tdf, catalog, run_id, conf)

@@ -1,6 +1,7 @@
 """The arrow render: one pass over sorted turns that assembles, trims and
-renders every conversation — the default engine's render layer
-(pipeline.render) and the stream drain's emit step (streaming.py).
+renders every conversation — the default engine's render layer, mapped over
+the exchange (pipeline.render) or over the stream's state output
+(streaming.py).
 
 The exchange (pipeline.exchange) delivers flat raw turns partitioned on
 conv_id and sorted by (conv_id, turn_idx), so a conversation's rows are
@@ -80,18 +81,20 @@ def render_sorted_batches(batches: Iterable[pd.DataFrame],
                           want_xml: bool = True) -> Iterator[pd.DataFrame]:
     """The render pass: ``SORTED_COLS`` batches, sorted by (conv_id,
     turn_idx) so a conversation's rows are consecutive, in; DOC_SCHEMA
-    frames out, one row per conversation. The last conversation of a batch
-    may go on in the next one, so its rows (at most cap + 1 after
-    ``cap_rows``) are carried over and put in front of the next batch.
+    frames out, one row per conversation. Input columns beyond
+    ``SORTED_COLS`` follow the doc columns, with the conversation's first
+    value. The last conversation of a batch may go on in the next one, so
+    its rows (at most cap + 1 after ``cap_rows``) are carried over and put
+    in front of the next batch.
 
     The turn cap is enforced IN THIS PASS by ``cap_rows`` — no
     pre-aggregation scan, shuffle or broadcast. render_docs_sorted maps it
-    over the exchange; the stream drain (streaming.py) feeds it one finished
-    conversation at a time."""
+    over the exchange (batch) and over the state output (stream)."""
     from . import fastkernel
 
     cap = max_turns_per_conv
-    out_cols = [f.name for f in DOC_SCHEMA.fields]
+    doc_cols = [f.name for f in DOC_SCHEMA.fields]
+    extra: list[str] = []  # input columns carried to the doc row
     render_conv = fastkernel.render_conv
     out: list[dict] = []
 
@@ -119,6 +122,7 @@ def render_sorted_batches(batches: Iterable[pd.DataFrame],
             pdf["tool"].to_numpy().tolist(),
             pdf["tool_name"].to_numpy().tolist(),
         ))
+        carried = {c: pdf[c].to_numpy() for c in extra}
         for i, j, kc, min_us in zip(starts.tolist(), ends.tolist(),
                                     capped.tolist(), mins.tolist()):
             if i == j:
@@ -127,10 +131,13 @@ def render_sorted_batches(batches: Iterable[pd.DataFrame],
                               kc, max_doc_bytes, EVENTS_PER_DOC,
                               with_text, with_norm, want_xml=want_xml)
             if rec is not None:
+                for c, v in carried.items():
+                    rec[c] = v[i]
                 out.append(rec)
 
     carry: pd.DataFrame | None = None  # the open conversation's rows
     for pdf in batches:
+        extra = [c for c in pdf.columns if c not in SORTED_COLS]
         if carry is not None:
             pdf = pd.concat([carry, pdf], ignore_index=True)
         pdf = cap_rows(pdf, cap)
@@ -143,29 +150,30 @@ def render_sorted_batches(batches: Iterable[pd.DataFrame],
         if cut:
             render(pdf.iloc[:cut])
         if len(out) >= 256:
-            yield pd.DataFrame(out, columns=out_cols)
+            yield pd.DataFrame(out, columns=doc_cols + extra)
             out = []
     if carry is not None:
         render(carry)
     if out:
-        yield pd.DataFrame(out, columns=out_cols)
+        yield pd.DataFrame(out, columns=doc_cols + extra)
 
 
-def render_docs_sorted(sorted_turns: DataFrame, max_doc_bytes: int | None = 8192,
-                       with_text: bool = True, with_norm: bool = False,
-                       max_turns_per_conv: int | None = None,
-                       want_xml: bool = True) -> DataFrame:
-    """Sorted-stream coalesce+render: ONE mapInPandas pass of
-    ``render_sorted_batches`` over the exchange's output (``SORTED_COLS``,
-    partitioned on conv_id, sorted by (conv_id, turn_idx)) — aushape's
-    sequential event-stream model (lib/conv.c one callback per completed
-    event), vectorized over Arrow batches.
+def render_docs_sorted(rows: DataFrame, conf) -> DataFrame:
+    """The render operator: ONE mapInPandas pass of ``render_sorted_batches``
+    over ``SORTED_COLS`` rows partitioned on conv_id and sorted by
+    (conv_id, turn_idx) — the exchange's output in batch, the state's
+    released conversations in the stream. Further columns of ``rows`` (the
+    stream's ``complete``) follow the ``DOC_SCHEMA`` fields. ``conf`` is a
+    ``pipeline.PipeConf``, read by attribute (this module does not import
+    pipeline): the one place its render options become arguments.
 
     This is the 10^12-row shape: the exchange carries flat rows, the sort
     spills, and per-task state is exactly one in-flight conversation
     (bounded by the turn cap)."""
-    return sorted_turns.mapInPandas(
-        partial(render_sorted_batches, max_doc_bytes=max_doc_bytes,
-                with_text=with_text, with_norm=with_norm,
-                max_turns_per_conv=max_turns_per_conv, want_xml=want_xml),
-        schema=DOC_SCHEMA)
+    extra = [f for f in rows.schema.fields if f.name not in SORTED_COLS]
+    return rows.mapInPandas(
+        partial(render_sorted_batches, max_doc_bytes=conf.max_doc_bytes,
+                with_text=conf.with_text, with_norm=conf.with_norm,
+                max_turns_per_conv=conf.max_turns_per_conv,
+                want_xml="xml" in conf.langs),
+        schema=T.StructType([*DOC_SCHEMA.fields, *extra]))

@@ -80,24 +80,16 @@ def batch_documents(events: DataFrame, events_per_doc: int | str = 100,
         raise ValueError(f"fmt must be one of {sorted(PROLOGUE)}")
     ev = events.select("serial", "doc")
 
-    if events_per_doc == 0:  # bare: no wrapping, no separators
+    if events_per_doc in (0, 1):  # one event per document — narrow, no shuffle
+        # bare (0): no wrapping, no separators
+        doc = _wrap(F.col("doc"), fmt) if events_per_doc else F.col("doc")
         return ev.select(
             F.col("serial").alias("doc_id"),
             F.lit(1).alias("n_events"),
             F.col("serial").alias("first_serial"),
             F.col("serial").alias("last_serial"),
             F.octet_length("doc").cast("long").alias("event_bytes"),
-            F.col("doc"),
-        )
-
-    if events_per_doc == 1:  # one event per document — narrow, no shuffle
-        return ev.select(
-            F.col("serial").alias("doc_id"),
-            F.lit(1).alias("n_events"),
-            F.col("serial").alias("first_serial"),
-            F.col("serial").alias("last_serial"),
-            F.octet_length("doc").cast("long").alias("event_bytes"),
-            _wrap(F.col("doc"), fmt).alias("doc"),
+            doc.alias("doc"),
         )
 
     if isinstance(events_per_doc, int) and events_per_doc < 0:

@@ -150,7 +150,6 @@ def render(enriched: DataFrame, conf: PipeConf) -> DataFrame:
     (arrow_docs.DOC_SCHEMA: envelope, JSON doc, XML doc, row errors)."""
     if conf.engine not in ENGINES:
         raise ValueError(f"unknown engine {conf.engine!r}; expected one of {ENGINES}")
-    want_xml = "xml" in conf.langs
     if conf.engine == "sql":
         fact, capped_convs = cap_turns(enriched, conf.max_turns_per_conv)
         return relational.render_docs_relational(
@@ -158,16 +157,9 @@ def render(enriched: DataFrame, conf: PipeConf) -> DataFrame:
             max_doc_bytes=conf.max_doc_bytes,
             with_text=conf.with_text,
             with_norm=conf.with_norm,
-            want_xml=want_xml,
+            want_xml="xml" in conf.langs,
         )
-    return arrow_docs.render_docs_sorted(
-        exchange(enriched),
-        max_doc_bytes=conf.max_doc_bytes,
-        with_text=conf.with_text,
-        with_norm=conf.with_norm,
-        max_turns_per_conv=conf.max_turns_per_conv,
-        want_xml=want_xml,
-    )
+    return arrow_docs.render_docs_sorted(exchange(enriched), conf)
 
 
 def stage(rendered: DataFrame, conf: PipeConf) -> DataFrame:

@@ -18,6 +18,8 @@ member, then norm, then the data section, and are marked ``trimmed``
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
@@ -193,14 +195,8 @@ def prettify_json(json_docs: DataFrame, indent: int = 2,
     presentation-only pass over the sink — the canonical compact form stays
     the comparison target."""
     lvl = float("inf") if fold_level is None else fold_level
-
-    @pandas_udf(T.StringType())
-    def pretty(doc: pd.Series) -> pd.Series:
-        import json
-
-        return doc.map(lambda j: dumps_folded(json.loads(j), lvl, nest_indent=indent))
-
-    return json_docs.withColumn("doc", pretty("doc"))
+    return _refold(json_docs, lambda j: dumps_folded(json.loads(j), lvl,
+                                                     nest_indent=indent))
 
 
 def _fold_xml(x: str, fold_level: float, indent: int = 2) -> str:
@@ -235,9 +231,15 @@ def prettify_xml(xml_docs: DataFrame, indent: int = 2,
     """XML fold: one element per line up to ``fold_level`` (None = unfold
     fully, reference --fold=none), `indent` spaces per nesting level."""
     lvl = float("inf") if fold_level is None else fold_level
+    return _refold(xml_docs, lambda x: _fold_xml(x, lvl, indent))
+
+
+def _refold(docs: DataFrame, fold_one) -> DataFrame:
+    """The F8 re-render pass: ``doc`` mapped through ``fold_one`` (one
+    doc string to its folded form) in a pandas UDF."""
 
     @pandas_udf(T.StringType())
     def pretty(doc: pd.Series) -> pd.Series:
-        return doc.map(lambda x: _fold_xml(x, lvl, indent))
+        return doc.map(fold_one)
 
-    return xml_docs.withColumn("doc", pretty("doc"))
+    return docs.withColumn("doc", pretty("doc"))

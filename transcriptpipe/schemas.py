@@ -4,8 +4,8 @@ taxonomy and the collector registry.
 The reference declares its output schema externally (JSON Schema
 lib/aushape.schema.json, XSD lib/aushape.xsd, ES mapping
 lib/aushape.mapping.json — SURVEY.md §1.3). The output schemas are the ones
-the writers produce: arrow_docs.DOC_SCHEMA for the rendered frame (the
-stream's state step emits it plus ``complete``, streaming.STREAM_DOC);
+the writers produce: arrow_docs.DOC_SCHEMA for the rendered frame, which
+the render operator emits in batch and, plus ``complete``, in the stream;
 tests/test_resume.py::test_committed_sink_schemas pins what a committed run
 writes.
 """

@@ -57,10 +57,9 @@ def get_spark(
         # (pandas construction, group-carry bookkeeping, IPC framing) a
         # visible fraction of the kernel. 30k rows ≈ 3 MB/batch — measured
         # ~10% faster warm and ~2x faster first run at 1.1M turns, still
-        # tiny per-worker memory; raise/lower via env for wider rows
+        # tiny per-worker memory; lower it through extra_conf for wider rows
         # (guide: raise maxRecordsPerBatch for narrow data, lower for wide).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "30000"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "30000")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         # zstd beats snappy on the rendered-doc tables BOTH ways (measured on
         # the staged frame: 4.7s/48MB vs 7.1s/76MB): JSON/XML doc strings are
@@ -76,11 +75,10 @@ def get_spark(
         # cores the "cluster" has — it was the round-1 scaling-efficiency
         # killer (a fixed serial stage at both N and 4N). 8MB keeps the scan
         # parallelism ≥ cores for sandbox-sized inputs; at 100TB (thousands
-        # of files, millions of splits at any setting) raise it back via
-        # SPARK_GRAFT_MAX_PART_BYTES — split size trades task overhead, not
-        # parallelism, once the input dwarfs the cluster.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", str(8 * 1024 * 1024)))
+        # of files, millions of splits at any setting) raise it back through
+        # extra_conf — split size trades task overhead, not parallelism,
+        # once the input dwarfs the cluster.
+        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
         # collect_list runs in ObjectHashAggregate (docbatch's S6 log sinks,
         # the sql engine; the default render has no aggregation). The default
         # sort-based fallback threshold (128 keys/partition) forces a full

@@ -11,13 +11,14 @@ operator keyed by conv_id:
 * readStream (file source here; Kafka/Iceberg-CDC on a cluster)
 * ``enrich.enrich`` — the batch enrich layer, as stream-static broadcast
   joins (the same role/tool dictionaries, the same null-text rule)
-* ``applyInPandasWithState`` keyed by conv_id: the state holds the render
-  pass's own input columns (``arrow_docs.SORTED_COLS``) until the EOE marker
-  arrives (AUPARSE_CB_EVENT_READY analog) or the state times out (auparse's
-  flush analog); then the conversation goes, as one sorted batch, through
-  ``arrow_docs.render_sorted_batches`` — the generator the batch render
-  maps over the exchange — and leaves as that render's own row
-  (``arrow_docs.DOC_SCHEMA``) plus ``complete`` (``STREAM_DOC``)
+* ``applyInPandasWithState`` keyed by conv_id, the exchange's stand-in: the
+  state holds the render pass's own input rows (``arrow_docs.SORTED_COLS``)
+  until the EOE marker arrives (AUPARSE_CB_EVENT_READY analog) or the state
+  times out (auparse's flush analog); then it releases the conversation's
+  rows, capped and in turn order, plus ``complete``. It renders nothing.
+* ``arrow_docs.render_docs_sorted`` — the batch render operator, mapped
+  over the released rows as the batch maps it over the exchange; it carries
+  ``complete`` to the doc row (``arrow_docs.DOC_SCHEMA`` plus ``complete``)
 * writeStream: ``run_stream_once`` writes the batch doc sink's projection
   of those rows (``pipeline.doc_sink_columns``) plus ``complete``, so a
   streamed ``json_doc``/``xml_doc`` row is the batch row of the same input
@@ -63,12 +64,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from . import arrow_docs, schemas
 from .enrich import enrich
-from .pipeline import doc_sink_columns
-
-# the state step's output: the batch render's own rows (arrow_docs.DOC_SCHEMA)
-# plus whether the EOE completed the conversation or a timeout flushed it
-STREAM_DOC = T.StructType([*arrow_docs.DOC_SCHEMA.fields,
-                           T.StructField("complete", T.BooleanType(), False)])
+from .pipeline import PipeConf, doc_sink_columns
 
 # state: the render pass's input columns minus the conv_id key, as parallel
 # arrays (Arrow-friendly); ts is kept as epoch microseconds
@@ -80,13 +76,12 @@ STREAM_STATE = T.StructType([
 ])
 
 
-def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
-                      event_time_gap_ms: int | None = None, **render_opts):
-    """The stateful function: collect a conversation's enriched rows (as
-    ``SORTED_COLS`` frames), emit its doc through the batch render pass on
-    EOE or timeout. ``render_opts`` are render_sorted_batches' rendering
-    options."""
-    cap = max_turns_per_conv
+def _make_coalesce_fn(timeout_ms: int | None, cap: int,
+                      event_time_gap_ms: int | None = None):
+    """The stateful function: hold a conversation's enriched rows (as
+    ``SORTED_COLS`` frames) and on EOE or timeout release them, capped and
+    in turn order, with ``complete`` (whether the EOE completed the
+    conversation or a timeout flushed it)."""
 
     def combined(parts: list[pd.DataFrame]) -> pd.DataFrame:
         if len(parts) == 1:
@@ -96,19 +91,12 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
 
     def capped(parts: list[pd.DataFrame]) -> pd.DataFrame:
         """The conversation's rows so far, in turn order, through the batch
-        pass's cap rule: what the state holds and what the render pass
-        gets."""
+        pass's cap rule: what the state holds and what it releases."""
         pdf = combined(parts)
         ti = pdf["turn_idx"].to_numpy()
         if (ti[1:] < ti[:-1]).any():  # arrival order -> turn order
             pdf = pdf.sort_values("turn_idx", kind="stable")
         return arrow_docs.cap_rows(pdf, cap)
-
-    def emit(pdf: pd.DataFrame, complete: bool) -> Iterator[pd.DataFrame]:
-        # P2 empty-event drop and the trimmed mark happen in the render pass
-        for docs in arrow_docs.render_sorted_batches(
-                [pdf], max_turns_per_conv=cap, **render_opts):
-            yield docs.assign(complete=complete)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -121,7 +109,7 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
             parts.append(pd.DataFrame({"conv_id": conv_id, **held}))
         if state.hasTimedOut:
             state.remove()
-            yield from emit(capped(parts), False)
+            yield capped(parts).assign(complete=False)
             return
 
         saw_eoe = False
@@ -145,10 +133,11 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
         pdf = capped(parts)
 
         if saw_eoe:
-            # event complete (the AUPARSE_CB_EVENT_READY moment): emit + clear
+            # event complete (the AUPARSE_CB_EVENT_READY moment): release +
+            # clear; the render operator drops an empty event (P2)
             if state.exists:
                 state.remove()
-            yield from emit(pdf, True)
+            yield pdf.assign(complete=True)
         else:
             ti = pdf["turn_idx"].to_numpy()
             ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").view("i8")
@@ -170,16 +159,20 @@ def _make_coalesce_fn(timeout_ms: int | None, max_turns_per_conv: int = 2048,
 
 
 def stream_coalesce(spark: SparkSession, input_path: str,
-                    timeout_ms: int | None = None,
-                    max_turns_per_conv: int = 2048,
+                    timeout_ms: int | None = None, *,
                     watermark: str | None = None,
                     event_time_gap_ms: int = 60_000,
-                    with_text: bool = True, with_norm: bool = False,
-                    max_doc_bytes: int | None = None,
-                    langs: tuple = ("json",)) -> DataFrame:
-    """readStream(files) -> stateful EOE-driven coalesce: the streaming
-    DataFrame of ``STREAM_DOC`` rows. The caller attaches writeStream and
-    its checkpoint (see run_stream_once).
+                    **conf_fields) -> DataFrame:
+    """readStream(files) -> stateful EOE-driven coalesce -> the batch render
+    operator: the streaming DataFrame of ``arrow_docs.DOC_SCHEMA`` rows plus
+    ``complete``. The caller attaches writeStream and its checkpoint (see
+    run_stream_once).
+
+    ``conf_fields`` are ``pipeline.PipeConf`` fields by name, built into one
+    ``PipeConf`` with the batch defaults (``max_doc_bytes`` 8192, both
+    languages; the ``xml`` column is null unless "xml" is in ``langs``).
+    Fields only the batch chain honours raise ValueError: an ``engine``
+    other than "arrow", ``doc_batch``, ``fold_level`` and ``stage_dir``.
 
     Modes (ST3 late/out-of-order policy):
 
@@ -196,9 +189,16 @@ def stream_coalesce(spark: SparkSession, input_path: str,
 
     Per-key state is bounded by ``max_turns_per_conv`` through
     ``arrow_docs.cap_rows``, the batch render's cap rule (cap + 1 rows).
-    The ``xml`` column is null unless "xml" is in ``langs``. ``input_path``
-    files are read one per micro-batch in mtime order (module docstring).
+    ``input_path`` files are read one per micro-batch in mtime order
+    (module docstring).
     """
+    conf = PipeConf(**conf_fields)
+    if conf.engine != "arrow":
+        raise ValueError(f"the stream renders with the arrow engine, "
+                         f"not {conf.engine!r}")
+    for name in ("doc_batch", "fold_level", "stage_dir"):
+        if getattr(conf, name) is not None:
+            raise ValueError(f"{name} is batch-only; the stream cannot honour it")
     raw = (
         spark.readStream.schema(schemas.TRANSCRIPTS)
         .option("maxFilesPerTrigger", 1)
@@ -211,41 +211,37 @@ def stream_coalesce(spark: SparkSession, input_path: str,
     elif timeout_ms:
         timeout_conf = GroupStateTimeout.ProcessingTimeTimeout
     fn = _make_coalesce_fn(
-        timeout_ms, max_turns_per_conv,
-        event_time_gap_ms=event_time_gap_ms if watermark is not None else None,
-        with_text=with_text, with_norm=with_norm,
-        max_doc_bytes=max_doc_bytes, want_xml="xml" in langs)
-    # the state operator takes the render pass's columns, as the exchange does
-    enriched = enrich(raw, spark).select(*arrow_docs.SORTED_COLS)
-    return enriched.groupBy("conv_id").applyInPandasWithState(
+        timeout_ms, conf.max_turns_per_conv,
+        event_time_gap_ms=event_time_gap_ms if watermark is not None else None)
+    # the state operator takes and releases the render pass's columns, as
+    # the exchange does
+    rows = enrich(raw, spark).select(*arrow_docs.SORTED_COLS)
+    released = rows.groupBy("conv_id").applyInPandasWithState(
         fn,
-        outputStructType=STREAM_DOC,
+        outputStructType=T.StructType([
+            *rows.schema.fields, T.StructField("complete", T.BooleanType(), False)]),
         stateStructType=STREAM_STATE,
         outputMode="append",
         timeoutConf=timeout_conf,
     )
+    return arrow_docs.render_docs_sorted(released, conf)
 
 
 def run_stream_once(spark: SparkSession, input_path: str, out_path: str,
-                    checkpoint: str, watermark: str | None = None,
-                    max_turns_per_conv: int = 2048,
-                    with_text: bool = True, with_norm: bool = False,
-                    max_doc_bytes: int | None = None,
-                    lang: str = "json") -> None:
+                    checkpoint: str, watermark: str | None = None, *,
+                    lang: str = "json", **conf_fields) -> None:
     """Drain all currently-available input (Trigger.AvailableNow) into a
     parquet sink — the batch-ish smoke path used by tests and the CLI's
-    --stream mode (all rendering options thread through).
+    --stream mode. ``conf_fields`` are ``pipeline.PipeConf`` fields, as in
+    ``stream_coalesce``.
 
     ``lang`` ("json" or "xml") selects the one doc language the sink
     carries. Its rows are the batch ``json_doc``/``xml_doc`` sink's row
     (``pipeline.doc_sink_columns``) plus ``complete``. One streaming query
     has one sink; to stream BOTH languages run two queries with separate
     checkpoints, or use batch."""
-    df = stream_coalesce(spark, input_path,
-                         max_turns_per_conv=max_turns_per_conv,
-                         watermark=watermark, with_text=with_text,
-                         with_norm=with_norm, max_doc_bytes=max_doc_bytes,
-                         langs=(lang,))
+    df = stream_coalesce(spark, input_path, watermark=watermark,
+                         langs=(lang,), **conf_fields)
     q = (
         df.select(*doc_sink_columns(lang), "complete")
         .writeStream.format("parquet")
