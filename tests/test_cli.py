@@ -227,6 +227,20 @@ def test_stream_legacy_checkpoint_guard(tmp_path, capsys):
     assert "legacy 0.3 stream checkpoint" in err and "_checkpoint_json" in err
 
 
+def test_stream_rejects_sql_engine(spark, tmp_path):
+    """--stream passes --engine to the library: the stream renders with the
+    arrow operator only, so --engine sql raises and no sink is written."""
+    import pytest
+
+    inp = tmp_path / "in_sql"
+    inp.mkdir()
+    synth.write_transcripts(str(inp / "0.parquet"), n_convs=3, seed=5)
+    out = tmp_path / "wh_sql"
+    with pytest.raises(ValueError, match="arrow"):
+        main([str(inp), "-O", str(out), "--stream", "--engine", "sql"])
+    assert not (out / "json_doc").exists()
+
+
 def test_parse_size_reference_grammar():
     """--max-doc-bytes accepts the reference --max-event-size grammar
     (conf.c:56-63): N / Nk / Nm / unlimited, minimum 1024."""

@@ -36,7 +36,7 @@ def test_full_run_commits_all_sinks(spark, tiny_df, catalog):
 
 def test_kill_and_resume_exactly_once(spark, tiny_df, catalog):
     # simulate a run killed after the first two sinks committed
-    frames = pipeline.build(spark, tiny_df)
+    frames = pipeline.build(spark, tiny_df, pipeline.PipeConf(persist=False))
     catalog.write(frames["json_doc"], "json_doc", "r2")
     catalog.write(frames["error"], "error", "r2")
     pre = catalog.total_rows("json_doc")

@@ -117,8 +117,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     _order_mtimes(d / "0.parquet", d / "1.parquet")
 
     q = (
-        streaming.stream_coalesce(spark, str(d), watermark="10 minutes",
-                                  event_time_gap_ms=60_000)
+        streaming.stream_coalesce(spark, str(d), watermark="10 minutes")
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -382,12 +381,15 @@ def test_stream_resolves_roles_from_enrich_dictionaries(spark, tmp_path,
 
 
 class _StubState:
-    """The slice of GroupState the stateful function uses, in memory."""
+    """The slice of GroupState the stateful function uses, in memory, at a
+    settable processing time and watermark; ``timeout`` is the last timer
+    set."""
 
     hasTimedOut = False
 
-    def __init__(self):
-        self.value = None
+    def __init__(self, now_ms=0, wm_ms=0):
+        self.value, self.timeout = None, None
+        self.now_ms, self.wm_ms = now_ms, wm_ms
 
     @property
     def exists(self):
@@ -404,13 +406,16 @@ class _StubState:
         self.value = None
 
     def getCurrentWatermarkMs(self):
-        return 0
+        return self.wm_ms
+
+    def getCurrentProcessingTimeMs(self):
+        return self.now_ms
 
     def setTimeoutDuration(self, ms):
-        pass
+        self.timeout = ms
 
     def setTimeoutTimestamp(self, ms):
-        pass
+        self.timeout = ms
 
 
 def test_state_holds_cap_plus_one_and_matches_batch(spark):
@@ -438,7 +443,7 @@ def test_state_holds_cap_plus_one_and_matches_batch(spark):
     fn = streaming._make_coalesce_fn(None, cap)
     state, out = _StubState(), []
     for mb in micro_batches:
-        out += list(fn((cid,), iter([mb]), state))
+        out += list(fn((0,), iter([mb]), state))  # the bucket key is unused
         if state.exists:
             assert len(state.get[0]) <= cap + 1
     assert not state.exists
@@ -452,3 +457,111 @@ def test_state_holds_cap_plus_one_and_matches_batch(spark):
         langs=("json",)))["json_doc"].first()
     assert batch["trimmed"]
     assert doc["doc"] == batch["doc"]
+
+
+T_BUCKET = pd.Timestamp("2026-03-05")
+
+
+def _sorted_rows(cid, turns, start_s=0, eoe_at=None):
+    """``SORTED_COLS`` rows of ``cid``: turn ``i`` at ``start_s + i``
+    seconds after ``T_BUCKET``, the turn ``eoe_at`` an EOE."""
+    return pd.DataFrame([
+        {"conv_id": cid, "turn_idx": i,
+         "role_name": "EOE" if i == eoe_at else "user", "text": f"msg=m{i}",
+         "tool": None, "tool_name": None,
+         "ts": T_BUCKET + pd.Timedelta(seconds=start_s + i)}
+        for i in turns
+    ]).astype({"turn_idx": "int32", "ts": "datetime64[us]"})
+
+
+def _call(fn, state, *frames):
+    """One call of the bucket function with ``frames`` as its new rows:
+    the released rows as one frame (possibly empty)."""
+    out = list(fn((0,), iter(frames), state))
+    return pd.concat(out) if out else pd.DataFrame(columns=["conv_id"])
+
+
+def _held(state):
+    """conv_id -> number of rows the bucket's state holds for it."""
+    if not state.exists:
+        return {}
+    return pd.Series(state.get[0]).value_counts().to_dict()
+
+
+def test_bucket_releases_on_eoe_and_holds_the_rest():
+    """One bucket, two conversations: the one whose EOE arrives is released
+    complete with all its turns in order; the other stays held."""
+    fn = streaming._make_coalesce_fn(None, 2048)
+    state = _StubState()
+    assert _call(fn, state, _sorted_rows("a", [0, 1]),
+                 _sorted_rows("b", [0, 1])).empty
+    got = _call(fn, state, pd.concat([_sorted_rows("b", [2]),
+                                      _sorted_rows("a", [3, 2], eoe_at=3)]))
+    assert set(got["conv_id"]) == {"a"}
+    assert got["turn_idx"].tolist() == [0, 1, 2, 3]
+    assert got["complete"].all()
+    assert _held(state) == {"b": 3}
+
+
+def test_bucket_state_holds_cap_plus_one_per_open_conversation():
+    """State never exceeds cap + 1 rows per open conversation, however many
+    beyond-cap rows arrive."""
+    cap = 3
+    fn = streaming._make_coalesce_fn(None, cap)
+    state = _StubState()
+    for lo in range(0, 12, 2):
+        assert _call(fn, state, _sorted_rows("a", [lo, lo + 1]),
+                     _sorted_rows("b", [lo + 1, lo])).empty
+        assert max(_held(state).values()) <= cap + 1
+    assert _held(state) == {"a": cap + 1, "b": cap + 1}
+    got = _call(fn, state, _sorted_rows("a", [12], eoe_at=12))
+    assert got["turn_idx"].tolist() == [0, 1, 2, 3]
+    assert _held(state) == {"b": cap + 1}
+
+
+def test_bucket_processing_time_flushes_the_idle_conversation_only():
+    """Processing time: an idle conversation flushes incomplete once its
+    last arrival plus the timeout is behind the clock, while a busy one in
+    the same bucket stays held; the timer follows the earliest held
+    deadline, and a timer call flushes the rest."""
+    fn = streaming._make_coalesce_fn(1000, 2048)
+    state = _StubState(now_ms=10_000)
+    assert _call(fn, state, _sorted_rows("idle", [0, 1]),
+                 _sorted_rows("busy", [0])).empty
+    assert state.timeout == 1000
+    state.now_ms = 10_800
+    assert _call(fn, state, _sorted_rows("busy", [1])).empty
+    assert state.timeout == 200  # idle's deadline, 11_000
+    state.now_ms = 11_500
+    got = _call(fn, state, _sorted_rows("busy", [2]))
+    assert set(got["conv_id"]) == {"idle"}
+    assert got["turn_idx"].tolist() == [0, 1]
+    assert not got["complete"].any()
+    assert _held(state) == {"busy": 3}
+    assert state.timeout == 1000
+    state.now_ms = 12_600
+    got = _call(fn, state)  # the timer call: no new rows
+    assert got["turn_idx"].tolist() == [0, 1, 2]
+    assert not got["complete"].any() and not state.exists
+
+
+def test_bucket_event_time_flushes_the_idle_conversation_only():
+    """Event time: an idle conversation flushes incomplete once the
+    watermark passes its newest under-cap ts plus EVENT_TIME_GAP_MS, while
+    a busy one in the same bucket stays held; rows behind the watermark
+    are dropped."""
+    gap = streaming.EVENT_TIME_GAP_MS
+    t0_ms = T_BUCKET.value // 10**6
+    fn = streaming._make_coalesce_fn(None, 2048, event_time=True)
+    state = _StubState(wm_ms=t0_ms)
+    assert _call(fn, state, _sorted_rows("idle", [0, 1]),
+                 _sorted_rows("busy", [0])).empty
+    assert state.timeout == t0_ms + gap  # busy's newest turn, at t0
+    state.wm_ms = t0_ms + 1000 + gap + 1  # past idle's newest turn + gap
+    got = _call(fn, state, _sorted_rows("busy", [1, 2], start_s=120),
+                _sorted_rows("idle", [2]))  # idle's turn 2 is late
+    assert set(got["conv_id"]) == {"idle"}
+    assert got["turn_idx"].tolist() == [0, 1]
+    assert not got["complete"].any()
+    assert _held(state) == {"busy": 3}
+    assert state.timeout == t0_ms + 122_000 + gap

@@ -137,8 +137,9 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
 
     spark = get_spark(app_name="transcriptpipe-cli", cpus=args.cpus)
-    # the PipeConf render fields both modes share
-    render_fields = dict(max_doc_bytes=args.max_doc_bytes,
+    # the PipeConf fields both modes share; the stream raises ValueError
+    # for an engine it cannot honour
+    render_fields = dict(engine=args.engine, max_doc_bytes=args.max_doc_bytes,
                          max_turns_per_conv=args.max_turns_per_conv,
                          with_text=not args.no_text, with_norm=args.with_norm)
 
@@ -192,7 +193,6 @@ def main(argv: list[str] | None = None) -> int:
     langs = ("json", "xml") if args.lang == "both" else (args.lang,)
     conf = pipeline.PipeConf(
         **render_fields,
-        engine=args.engine,
         doc_batch=(parse_events_per_doc(args.events_per_doc)
                    if args.events_per_doc is not None else None),
         langs=langs,

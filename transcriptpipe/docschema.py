@@ -5,6 +5,8 @@ tests to validate every emitted doc structurally (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
+from . import schemas
+
 FIELDS_SCHEMA = {
     "type": "object",
     # field name -> [interpreted, raw?] (ref lib/field.c:116-130)
@@ -69,12 +71,7 @@ EVENT_DOC_SCHEMA = {
             "additionalProperties": FIELDS_SCHEMA,
         },
         "norm": NORM_SCHEMA,
-        "error": {
-            "enum": [
-                "INVALID_EXECVE", "INVALID_PATH", "REPEATED_RECORD",
-                "INVALID_HEX", "UNKNOWN_TOOL", "PARSE_FAIL",
-            ]
-        },
+        "error": {"enum": list(schemas.ERROR_CODES)},
         "trimmed": {"const": True},
     },
 }
@@ -103,8 +100,6 @@ def validate_doc(doc_json: str) -> None:
 import re as _re
 
 _TIME_RE = _re.compile(r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}Z$")
-_ERRORS = {"INVALID_EXECVE", "INVALID_PATH", "REPEATED_RECORD",
-           "INVALID_HEX", "UNKNOWN_TOOL", "PARSE_FAIL"}
 
 
 class XmlSchemaError(ValueError):
@@ -147,7 +142,7 @@ def validate_xml_doc(xml: str) -> None:
         _fail(f"serial must be an integer or None, got {ev.attrib['serial']!r}")
     if not _TIME_RE.match(ev.attrib["time"]):
         _fail(f"bad time format: {ev.attrib['time']!r}")
-    if "error" in attrs and ev.attrib["error"] not in _ERRORS:
+    if "error" in attrs and ev.attrib["error"] not in schemas.ERROR_CODES:
         _fail(f"unknown error code {ev.attrib['error']!r}")
     if "trimmed" in attrs and ev.attrib["trimmed"] != "true":
         _fail("trimmed attribute must be 'true'")
@@ -194,8 +189,6 @@ def es_mapping() -> dict:
     string/not_analyzed of the reference's 2.x-era file); the structure —
     typed envelope + per-collector data properties + catch-all dynamic
     templates — mirrors the reference file section for section."""
-    from . import schemas
-
     data_props: dict = {}
     for role, coll in schemas.COLLECTORS.items():
         if coll == schemas.COLL_DROP:

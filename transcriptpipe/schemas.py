@@ -59,6 +59,8 @@ ERR_REPEATED_RECORD = "REPEATED_RECORD" # duplicate non-repeatable role (system)
 ERR_INVALID_HEX = "INVALID_HEX"         # hex= payload does not decode
 ERR_UNKNOWN_TOOL = "UNKNOWN_TOOL"       # tool code absent from tool_dict
 ERR_PARSE_FAIL = "PARSE_FAIL"           # text tokenizes to nothing
+ERROR_CODES = (ERR_INVALID_EXECVE, ERR_INVALID_PATH, ERR_REPEATED_RECORD,
+               ERR_INVALID_HEX, ERR_UNKNOWN_TOOL, ERR_PARSE_FAIL)
 
 # ------------------------------------------------------ collector registry ----
 # The dispatch map (ref lib/conv_buf.c:60-96): role -> collector kind. This is

@@ -6,16 +6,18 @@ event is complete (EOE marker or timeout) and then fires the event-ready
 callback (aushape lib/conv.c:72-173, SURVEY.md §2.9); single-shot and
 streaming input share one assembly (lib/conv.c:303-323 → conv_buf). Here
 the stream runs the batch layers with the exchange swapped for a stateful
-operator keyed by conv_id:
+operator keyed by a bucket of conv_id:
 
 * readStream (file source here; Kafka/Iceberg-CDC on a cluster)
 * ``enrich.enrich`` — the batch enrich layer, as stream-static broadcast
   joins (the same role/tool dictionaries, the same null-text rule)
-* ``applyInPandasWithState`` keyed by conv_id, the exchange's stand-in: the
-  state holds the render pass's own input rows (``arrow_docs.SORTED_COLS``)
-  until the EOE marker arrives (AUPARSE_CB_EVENT_READY analog) or the state
-  times out (auparse's flush analog); then it releases the conversation's
-  rows, capped and in turn order, plus ``complete``. It renders nothing.
+* ``applyInPandasWithState`` keyed by ``pmod(hash(conv_id), BUCKETS)``, the
+  exchange's stand-in: one call per bucket holds many conversations as one
+  sorted run of the render pass's own input rows (``arrow_docs.SORTED_COLS``)
+  and releases each conversation, capped and in turn order, plus
+  ``complete``: with ``complete`` once its EOE marker has arrived
+  (AUPARSE_CB_EVENT_READY analog), without once it is due (auparse's flush
+  analog). It renders nothing.
 * ``arrow_docs.render_docs_sorted`` — the batch render operator, mapped
   over the released rows as the batch maps it over the exchange; it carries
   ``complete`` to the doc row (``arrow_docs.DOC_SCHEMA`` plus ``complete``)
@@ -23,25 +25,27 @@ operator keyed by conv_id:
   of those rows (``pipeline.doc_sink_columns``) plus ``complete``, so a
   streamed ``json_doc``/``xml_doc`` row is the batch row of the same input
 
-Timeout modes: continuous deployments use ProcessingTimeTimeout so idle
-conversations flush; drain-style runs (Trigger.AvailableNow, used by tests
-and backfills) use NoTimeout — with a processing-time timeout the
-AvailableNow query would keep scheduling timer batches and never terminate.
-Un-EOE'd conversations simply stay in the checkpointed state store and
-resume on the next run.
+Keying by bucket keeps the state step cheap: ``applyInPandasWithState``
+pays its framing and state handling per key. Scale: state per bucket is at
+most (max_turns_per_conv + 1) rows × its open conversations
+(``arrow_docs.cap_rows``, the batch pass's cap rule: the rows under the cap
+plus the first beyond-cap row, which only marks the doc trimmed), and the
+state step runs at most ``BUCKETS`` tasks.
 
-Scale notes: state per key is bounded by max_turns_per_conv — it holds what
-``arrow_docs.cap_rows`` keeps of the conversation in turn order (the rows
-under the cap plus its first beyond-cap row, which only marks the doc
-trimmed), the same rule the batch pass carries between batches; the state
-store shuffles on conv_id exactly like the batch exchange.
+Timeout modes, applied per conversation inside its bucket's call; the
+bucket's timer follows its earliest held deadline, so an idle conversation
+flushes while a busy one in the same bucket stays held:
 
-Late/out-of-order data (ST3): with ``watermark`` set, rows older than the
-watermark are dropped before they reach the state — an already-emitted
-conversation can no longer be re-opened by stragglers — and un-EOE'd
-conversations flush deterministically once the watermark passes their newest
-under-cap turn + gap (event-time timeout). Without a watermark (drain mode),
-incomplete conversations simply wait in state.
+* drain (Trigger.AvailableNow; tests, backfills, the CLI): NoTimeout — with
+  a timeout the AvailableNow query would keep scheduling timer batches and
+  never terminate. Un-EOE'd conversations stay in the checkpointed state
+  store and resume on the next run.
+* processing time (``timeout_ms``, continuous): due when the last arrival
+  plus ``timeout_ms`` is behind the batch time.
+* event time (``watermark``, ST3 late/out-of-order policy): rows behind the
+  watermark are dropped before they reach the state, so stragglers cannot
+  re-open an emitted conversation; due when the newest under-cap turn plus
+  ``EVENT_TIME_GAP_MS`` (60 s) is behind the watermark.
 
 Input contract: files land in ts order with distinct modification times.
 The file source reads them oldest mtime first, at millisecond resolution,
@@ -59,6 +63,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -66,10 +71,17 @@ from . import arrow_docs, schemas
 from .enrich import enrich
 from .pipeline import PipeConf, doc_sink_columns
 
-# state: the render pass's input columns minus the conv_id key, as parallel
-# arrays (Arrow-friendly); ts is kept as epoch microseconds
-STATE_COLS = arrow_docs.SORTED_COLS[1:]
-_STATE_TYPES = {"turn_idx": T.IntegerType(), "ts": T.LongType()}
+# state keys: pmod(hash(conv_id), BUCKETS). A constant, so that a resumed
+# checkpoint keeps its keys
+BUCKETS = 64
+EVENT_TIME_GAP_MS = 60_000  # event time: the flush gap after the newest turn
+
+# state: a bucket's held rows, the render pass's input columns as parallel
+# arrays (Arrow-friendly), ts as epoch microseconds, plus ``due_ms``, the
+# row's conversation deadline
+STATE_COLS = [*arrow_docs.SORTED_COLS, "due_ms"]
+_STATE_TYPES = {"turn_idx": T.IntegerType(), "ts": T.LongType(),
+                "due_ms": T.LongType()}
 STREAM_STATE = T.StructType([
     T.StructField(c, T.ArrayType(_STATE_TYPES.get(c, T.StringType())), True)
     for c in STATE_COLS
@@ -77,83 +89,70 @@ STREAM_STATE = T.StructType([
 
 
 def _make_coalesce_fn(timeout_ms: int | None, cap: int,
-                      event_time_gap_ms: int | None = None):
-    """The stateful function: hold a conversation's enriched rows (as
-    ``SORTED_COLS`` frames) and on EOE or timeout release them, capped and
-    in turn order, with ``complete`` (whether the EOE completed the
-    conversation or a timeout flushed it)."""
+                      event_time: bool = False):
+    """The stateful function, called once per bucket with its new
+    ``SORTED_COLS`` rows (none on a timer call): the held and new rows are
+    sorted by (conv_id, turn_idx) and capped by ``arrow_docs.cap_rows``, as
+    in the batch render pass. Then one rule per conversation: released with
+    ``complete`` once its EOE has been seen, without once it is due (its
+    ``due_ms`` is behind the watermark or the batch time; module
+    docstring), held otherwise. It renders nothing."""
 
-    def combined(parts: list[pd.DataFrame]) -> pd.DataFrame:
-        if len(parts) == 1:
-            return parts[0]
-        return pd.DataFrame({c: np.concatenate([p[c].to_numpy() for p in parts])
-                             for c in arrow_docs.SORTED_COLS})
-
-    def capped(parts: list[pd.DataFrame]) -> pd.DataFrame:
-        """The conversation's rows so far, in turn order, through the batch
-        pass's cap rule: what the state holds and what it releases."""
-        pdf = combined(parts)
-        ti = pdf["turn_idx"].to_numpy()
-        if (ti[1:] < ti[:-1]).any():  # arrival order -> turn order
-            pdf = pdf.sort_values("turn_idx", kind="stable")
-        return arrow_docs.cap_rows(pdf, cap)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
+    def fn(_key: tuple, pdfs: Iterator[pd.DataFrame],
+           state: GroupState) -> Iterator[pd.DataFrame]:
+        clock = (state.getCurrentWatermarkMs() if event_time else
+                 state.getCurrentProcessingTimeMs() if timeout_ms else None)
         parts = []
         if state.exists:
             held = dict(zip(STATE_COLS, state.get))
             held["ts"] = np.array(held["ts"], dtype="datetime64[us]")
-            parts.append(pd.DataFrame({"conv_id": conv_id, **held}))
-        if state.hasTimedOut:
-            state.remove()
-            yield capped(parts).assign(complete=False)
-            return
-
-        saw_eoe = False
-        wm_ms = state.getCurrentWatermarkMs() if event_time_gap_ms is not None else 0
+            parts.append(pd.DataFrame(held))
         for pdf in pdfs:
-            if wm_ms > 0:
-                # ST3 late-data policy: the engine does NOT pre-filter late
-                # rows for applyInPandasWithState — the documented pattern is
-                # dropping rows behind the watermark here, so stragglers for
-                # an already-emitted conversation cannot re-open its state
-                ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").view("i8")
-                pdf = pdf[ts_us >= wm_ms * 1000]
-            # EOE detection sees every row — a capped conversation must
-            # still complete when its (possibly beyond-cap) EOE arrives
-            if np.isin(pdf["role_name"].to_numpy(), schemas.DROP_ROLES).any():
-                saw_eoe = True
-            if len(pdf):
-                parts.append(pdf)
+            if event_time:
+                # ST3 late-data policy: the engine does NOT drop late rows
+                # for applyInPandasWithState; dropped here, stragglers
+                # cannot re-open an emitted conversation
+                ts_ms = pdf["ts"].to_numpy(dtype="datetime64[us]").view("i8") // 1000
+                pdf, ts_ms = pdf[ts_ms >= clock], ts_ms[ts_ms >= clock]
+                under = pdf["turn_idx"].to_numpy() < cap
+                due = np.where(under, ts_ms, 0) + EVENT_TIME_GAP_MS
+            else:  # processing time: last arrival + timeout_ms (drain: unread)
+                due = clock + timeout_ms if timeout_ms else 0
+            if len(pdf):  # without the grouping column, "bucket"
+                parts.append(pdf[arrow_docs.SORTED_COLS].assign(due_ms=due))
         if not parts:  # all-late batches must not open fresh state
             return
-        pdf = capped(parts)
+        pdf = pd.concat(parts, ignore_index=True).sort_values(
+            ["conv_id", "turn_idx"], kind="stable", ignore_index=True)
 
-        if saw_eoe:
-            # event complete (the AUPARSE_CB_EVENT_READY moment): release +
-            # clear; the render operator drops an empty event (P2)
+        # per conversation, over every row (the EOE may be beyond the cap):
+        # whether its EOE has been seen, and its deadline
+        ids = pdf["conv_id"].to_numpy()
+        first = np.concatenate(([True], ids[1:] != ids[:-1]))
+        conv = np.cumsum(first) - 1  # row -> its conversation
+        starts = np.flatnonzero(first)
+        eoe = np.logical_or.reduceat(
+            np.isin(pdf["role_name"].to_numpy(), schemas.DROP_ROLES), starts)
+        due = np.maximum.reduceat(pdf["due_ms"].to_numpy(), starts)
+        pdf = arrow_docs.cap_rows(pdf.assign(due_ms=due[conv]), cap)
+        conv = conv[pdf.index]  # cap_rows keeps the positional index
+        release = eoe | (due < clock if clock is not None else False)
+        out = release[conv]
+        if out.any():
+            yield pdf[out].drop(columns="due_ms").assign(complete=eoe[conv[out]])
+        held = pdf[~out]
+        if not len(held):
             if state.exists:
                 state.remove()
-            yield pdf.assign(complete=True)
-        else:
-            ti = pdf["turn_idx"].to_numpy()
-            ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").view("i8")
-            state.update(tuple((ts_us if c == "ts" else pdf[c]).tolist()
-                               for c in STATE_COLS))
-            if event_time_gap_ms is not None:
-                # event-time flush: when the watermark passes the newest
-                # under-cap turn + gap, the conversation is assumed
-                # complete-without-EOE (must stay ahead of the current
-                # watermark or Spark rejects)
-                newest_us = int(ts_us[ti < cap].max(initial=0))
-                state.setTimeoutTimestamp(
-                    max(newest_us // 1000 + event_time_gap_ms, wm_ms + 1)
-                )
-            elif timeout_ms:
-                state.setTimeoutDuration(timeout_ms)  # flush-on-idle analog
+            return
+        ts_us = held["ts"].to_numpy(dtype="datetime64[us]").view("i8")
+        state.update(tuple((ts_us if c == "ts" else held[c].to_numpy()).tolist()
+                           for c in STATE_COLS))
+        nxt = int(held["due_ms"].min())
+        if event_time:
+            state.setTimeoutTimestamp(max(nxt, 1))
+        elif timeout_ms:
+            state.setTimeoutDuration(max(nxt - clock, 1))
 
     return fn
 
@@ -161,7 +160,6 @@ def _make_coalesce_fn(timeout_ms: int | None, cap: int,
 def stream_coalesce(spark: SparkSession, input_path: str,
                     timeout_ms: int | None = None, *,
                     watermark: str | None = None,
-                    event_time_gap_ms: int = 60_000,
                     **conf_fields) -> DataFrame:
     """readStream(files) -> stateful EOE-driven coalesce -> the batch render
     operator: the streaming DataFrame of ``arrow_docs.DOC_SCHEMA`` rows plus
@@ -174,23 +172,13 @@ def stream_coalesce(spark: SparkSession, input_path: str,
     Fields only the batch chain honours raise ValueError: an ``engine``
     other than "arrow", ``doc_batch``, ``fold_level`` and ``stage_dir``.
 
-    Modes (ST3 late/out-of-order policy):
-
-    * timeout_ms=None, watermark=None (drain / AvailableNow): incomplete
-      conversations wait in the state store for the next run.
-    * timeout_ms=N (continuous, processing time): idle conversations flush
-      as incomplete after N ms.
-    * watermark="10 minutes" (continuous, event time; takes precedence over
-      timeout_ms): rows later than the watermark are DROPPED before they
-      reach the state (the deterministic late-data policy — they no longer
-      re-open state for already-emitted conversations), and un-EOE'd
-      conversations flush once the watermark passes their newest under-cap
-      turn + event_time_gap_ms.
-
-    Per-key state is bounded by ``max_turns_per_conv`` through
-    ``arrow_docs.cap_rows``, the batch render's cap rule (cap + 1 rows).
-    ``input_path`` files are read one per micro-batch in mtime order
-    (module docstring).
+    Modes (module docstring): drain with neither ``timeout_ms`` nor
+    ``watermark``; processing time with ``timeout_ms``; event time with
+    ``watermark`` (e.g. "10 minutes"; it takes precedence). Complete
+    conversations are released with ``complete`` in every mode, due ones
+    without. Each of the ``BUCKETS`` state keys holds at most
+    ``max_turns_per_conv`` + 1 rows per open conversation. ``input_path``
+    files are read one per micro-batch in mtime order (module docstring).
     """
     conf = PipeConf(**conf_fields)
     if conf.engine != "arrow":
@@ -210,13 +198,14 @@ def stream_coalesce(spark: SparkSession, input_path: str,
         timeout_conf = GroupStateTimeout.EventTimeTimeout
     elif timeout_ms:
         timeout_conf = GroupStateTimeout.ProcessingTimeTimeout
-    fn = _make_coalesce_fn(
-        timeout_ms, conf.max_turns_per_conv,
-        event_time_gap_ms=event_time_gap_ms if watermark is not None else None)
+    fn = _make_coalesce_fn(timeout_ms, conf.max_turns_per_conv,
+                           event_time=watermark is not None)
     # the state operator takes and releases the render pass's columns, as
     # the exchange does
     rows = enrich(raw, spark).select(*arrow_docs.SORTED_COLS)
-    released = rows.groupBy("conv_id").applyInPandasWithState(
+    released = rows.withColumn(
+        "bucket", F.pmod(F.hash("conv_id"), F.lit(BUCKETS))
+    ).groupBy("bucket").applyInPandasWithState(
         fn,
         outputStructType=T.StructType([
             *rows.schema.fields, T.StructField("complete", T.BooleanType(), False)]),
