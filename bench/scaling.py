@@ -56,7 +56,7 @@ def stat():
 
 warm = spark.createDataFrame(synth.gen_transcripts(n_convs=2000, seed=1),
                              schema=schemas.TRANSCRIPTS)
-ws = pipeline.build(spark, warm, pipeline.PipeConf(persist=False))
+ws = pipeline.build(spark, warm)
 noop(ws["json_doc"]); noop(ws["error"])
 
 tdf = spark.read.parquet(path)
@@ -100,7 +100,7 @@ def noop(df): df.write.format("noop").mode("overwrite").save()
 
 warm = spark.createDataFrame(synth.gen_transcripts(n_convs=2000, seed=1),
                              schema=schemas.TRANSCRIPTS)
-noop(pipeline.build(spark, warm, pipeline.PipeConf(persist=False))["json_doc"])
+noop(pipeline.build(spark, warm)["json_doc"])
 
 tdf = spark.read.parquet(path)
 noop(pipeline.rendered_frame(spark, tdf))  # untimed warmup

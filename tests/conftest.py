@@ -14,7 +14,7 @@ from transcriptpipe.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="transcriptpipe-tests", cpus=4, shuffle_partitions=8)
+    s = get_spark(app_name="transcriptpipe-tests", cpus=4)
     yield s
 
 

@@ -6,6 +6,8 @@ import importlib
 import json
 import os
 
+import pytest
+
 from transcriptpipe import session, synth
 from transcriptpipe.__main__ import main, parse_events_per_doc
 
@@ -86,7 +88,7 @@ def test_lang_xml_only_build(spark, tmp_path):
                                schema=__import__("transcriptpipe.schemas",
                                                  fromlist=["TRANSCRIPTS"]).TRANSCRIPTS)
     sinks = pipeline.build(spark, df,
-                           pipeline.PipeConf(persist=False, langs=("xml",)))
+                           pipeline.PipeConf(langs=("xml",)))
     assert "json_doc" not in sinks and "xml_doc" in sinks
     rows = sinks["xml_doc"].collect()
     assert len(rows) == 8
@@ -212,6 +214,22 @@ def test_parse_fold_grammar(capsys):
         build_parser().parse_args(["in", "-O", "out", "--fold", "deep"])
     assert ei.value.code == 2
     assert "--fold" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("flag,value", [("--events-per-doc", "x"),
+                                        ("--max-turns-per-conv", "0")])
+def test_bad_value_is_usage_error_before_the_session(monkeypatch, capsys,
+                                                     flag, value):
+    """A value the run cannot honour is an argparse usage error (exit 2):
+    no session starts and no traceback is printed."""
+    def no_session(**kw):
+        raise AssertionError("the session started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as ei:
+        main(["in", "-O", "out", flag, value])
+    assert ei.value.code == 2
+    assert flag in capsys.readouterr().err
 
 
 def test_stream_legacy_checkpoint_guard(tmp_path, capsys):

@@ -28,7 +28,7 @@ def _run_one(spark, **gen_kw):
     pdf = pd.DataFrame(rows)
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
     df = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
-    sinks = pipeline.build(spark, df, pipeline.PipeConf(persist=False, max_doc_bytes=None))
+    sinks = pipeline.build(spark, df, pipeline.PipeConf(max_doc_bytes=None))
     doc = sinks["json_doc"].collect()[0]
     errs = sinks["error"].collect()
     return doc, errs
@@ -81,7 +81,7 @@ def test_slot_order_insensitive(spark):
     for perm_seed in (0, 1):
         shuffled = pdf.sample(frac=1.0, random_state=perm_seed)
         df = spark.createDataFrame(shuffled, schema=schemas.TRANSCRIPTS)
-        sinks = pipeline.build(spark, df, pipeline.PipeConf(persist=False, max_doc_bytes=None))
+        sinks = pipeline.build(spark, df, pipeline.PipeConf(max_doc_bytes=None))
         doc = sinks["json_doc"].collect()[0]["doc"]
         if base is None:
             base = doc

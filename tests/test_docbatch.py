@@ -132,7 +132,7 @@ def test_pipeline_doc_batch_sink(spark):
     tdf = spark.createDataFrame(synth.gen_transcripts(n_convs=30),
                                 schema=schemas.TRANSCRIPTS)
     sinks = pipeline.build(spark, tdf,
-                           pipeline.PipeConf(persist=False, doc_batch=8))
+                           pipeline.PipeConf(doc_batch=8))
     logs = sinks["json_log"].collect()
     assert sum(r["n_events"] for r in logs) == 30
     for r in logs:

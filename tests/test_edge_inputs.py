@@ -26,7 +26,7 @@ def _df(spark, rows):
 def test_empty_input_frame(spark, engine):
     df = spark.createDataFrame([], schema=schemas.TRANSCRIPTS)
     sinks = pipeline.build(
-        spark, df, pipeline.PipeConf(engine=engine, persist=False)
+        spark, df, pipeline.PipeConf(engine=engine)
     )
     assert sinks["json_doc"].count() == 0
     assert sinks["xml_doc"].count() == 0
@@ -52,7 +52,7 @@ def test_null_text_turns(spark, engine):
     ]
     out = pipeline.build(
         spark, _df(spark, rows),
-        pipeline.PipeConf(engine=engine, persist=False, max_doc_bytes=None),
+        pipeline.PipeConf(engine=engine, max_doc_bytes=None),
     )
     docs = out["json_doc"].collect()
     assert len(docs) == 1 and docs[0]["error"] is None, engine
@@ -62,6 +62,19 @@ def test_null_text_turns(spark, engine):
     )["json_doc"][0]["doc"]
     assert docs[0]["doc"] == want, engine
     assert out["error"].count() == 0
+
+
+def test_turn_cap_below_one_raises(spark, tmp_path):
+    """A cap below 1 leaves each conversation only its trimmed marker row,
+    which renders no doc and no error. PipeConf rejects it, so build, run,
+    the stream and both engines raise before any job."""
+    from transcriptpipe import streaming
+
+    for cap in (0, -3):
+        with pytest.raises(ValueError, match="max_turns_per_conv"):
+            pipeline.PipeConf(max_turns_per_conv=cap)
+        with pytest.raises(ValueError, match="max_turns_per_conv"):
+            streaming.stream_coalesce(spark, str(tmp_path), max_turns_per_conv=cap)
 
 
 def test_empty_streaming_drain(spark, tmp_path):

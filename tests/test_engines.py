@@ -57,13 +57,13 @@ def test_all_engines_agree(spark, tiny_df):
 @pytest.mark.parametrize("engine", ["Arrow", "expr", "arrow_agg", ""])
 def test_unknown_engine_raises(spark, tiny_df, engine):
     with pytest.raises(ValueError, match="unknown engine"):
-        pipeline.build(spark, tiny_df, pipeline.PipeConf(engine=engine, persist=False))
+        pipeline.build(spark, tiny_df, pipeline.PipeConf(engine=engine))
 
 
 def test_default_plan_one_exchange_broadcast_dicts(spark, tiny_df):
     """The default json_doc plan shuffles the fact table exactly once (the
     conv_id exchange) and joins both dictionaries by broadcast."""
-    jd = pipeline.build(spark, tiny_df, pipeline.PipeConf(persist=False))["json_doc"]
+    jd = pipeline.build(spark, tiny_df)["json_doc"]
     plan = jd._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"\bExchange hashpartitioning\(conv_id#\d+", plan)) == 1, plan
     assert len(re.findall(r"(?<!Broadcast)Exchange\b", plan)) == 1, plan

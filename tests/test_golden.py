@@ -54,7 +54,7 @@ def test_spark_engines_reproduce_golden(spark, golden_input, golden_docs, engine
     df = spark.createDataFrame(golden_input, schema=schemas.TRANSCRIPTS)
     sinks = pipeline.build(
         spark, df,
-        pipeline.PipeConf(engine=engine, persist=False, with_norm=True,
+        pipeline.PipeConf(engine=engine, with_norm=True,
                           max_doc_bytes=8192),
     )
     jd = {r["conv_id"]: r for r in sinks["json_doc"].collect()}
@@ -77,7 +77,7 @@ def test_pipeline_output_validates_against_schema(spark, tiny_df):
     """Every doc the pipeline emits (incl. trimmed variants) validates."""
     sinks = pipeline.build(
         spark, tiny_df,
-        pipeline.PipeConf(persist=False, with_norm=True, max_doc_bytes=600),
+        pipeline.PipeConf(with_norm=True, max_doc_bytes=600),
     )
     for r in sinks["json_doc"].collect():
         docschema.validate_doc(r["doc"])

@@ -62,7 +62,7 @@ def mixed_df(spark):
 
 
 def _docs(spark, df, engine, **kw):
-    conf = pipeline.PipeConf(engine=engine, persist=False, **kw)
+    conf = pipeline.PipeConf(engine=engine, **kw)
     sinks = pipeline.build(spark, df, conf)
     return ({r["conv_id"]: r for r in sinks["json_doc"].collect()},
             sorted((r["conv_id"], r["error_code"]) for r in sinks["error"].collect()))
@@ -126,7 +126,7 @@ def test_norm_section_contents(spark, mixed_df, engine):
 def test_norm_in_xml(spark, mixed_df, engine):
     import xml.etree.ElementTree as ET
 
-    conf = pipeline.PipeConf(engine=engine, persist=False, with_norm=True)
+    conf = pipeline.PipeConf(engine=engine, with_norm=True)
     sinks = pipeline.build(spark, mixed_df, conf)
     xml = {r["conv_id"]: r["doc"] for r in sinks["xml_doc"].collect()}
     root = ET.fromstring(xml["conv-00000004"])
@@ -176,7 +176,7 @@ def test_prettify_passes(spark, mixed_df):
     from transcriptpipe import render
 
     sinks = pipeline.build(spark, mixed_df,
-                           pipeline.PipeConf(persist=False, with_norm=True))
+                           pipeline.PipeConf(with_norm=True))
     compact = {r["conv_id"]: r["doc"] for r in sinks["json_doc"].collect()}
     pretty = {r["conv_id"]: r["doc"]
               for r in render.prettify_json(sinks["json_doc"], indent=2).collect()}
@@ -208,7 +208,7 @@ def test_hot_conversation_cap_batch(spark, engine):
     pdf = pd.DataFrame(rows).astype(
         {"turn_idx": "int32", "tool": "string", "ts": "datetime64[us]"})
     df = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
-    conf = pipeline.PipeConf(engine=engine, persist=False, max_turns_per_conv=16)
+    conf = pipeline.PipeConf(engine=engine, max_turns_per_conv=16)
     sinks = pipeline.build(spark, df, conf)
     d = sinks["json_doc"].collect()
     assert len(d) == 1
@@ -227,7 +227,7 @@ def test_fold_levels(spark, mixed_df):
     from transcriptpipe import render
 
     sinks = pipeline.build(spark, mixed_df,
-                           pipeline.PipeConf(persist=False, with_norm=True))
+                           pipeline.PipeConf(with_norm=True))
     compact = {r["conv_id"]: r["doc"] for r in sinks["json_doc"].collect()}
     lvl1 = {r["conv_id"]: r["doc"]
             for r in render.prettify_json(sinks["json_doc"], indent=2,

@@ -17,7 +17,7 @@ from transcriptpipe import oracle, pipeline
 
 @pytest.fixture(scope="module")
 def spark_sinks(spark, tiny_df):
-    sinks = pipeline.build(spark, tiny_df, pipeline.PipeConf(persist=False, max_doc_bytes=None))
+    sinks = pipeline.build(spark, tiny_df, pipeline.PipeConf(max_doc_bytes=None))
     return {
         "json_doc": sinks["json_doc"].collect(),
         "xml_doc": sinks["xml_doc"].collect(),

@@ -47,7 +47,7 @@ def test_sql_args_last_win_duplicate_keys(spark):
     outs = {}
     for engine in ("sql", "arrow"):
         sinks = pipeline.build(
-            spark, df, pipeline.PipeConf(persist=False, engine=engine))
+            spark, df, pipeline.PipeConf(engine=engine))
         outs[engine] = {r["conv_id"]: (r["doc"], r["error"])
                         for r in sinks["json_doc"].collect()}
     assert outs["sql"] == outs["arrow"]
@@ -62,9 +62,9 @@ def test_sql_args_last_win_duplicate_keys(spark):
 @pytest.mark.parametrize("cfg", CONFIGS, ids=[str(c) for c in CONFIGS])
 def test_sql_equals_arrow_on_malformed_corpus(spark, mal_df, cfg):
     sinks_s = pipeline.build(spark, mal_df,
-                             pipeline.PipeConf(persist=False, engine="sql", **cfg))
+                             pipeline.PipeConf(engine="sql", **cfg))
     sinks_a = pipeline.build(spark, mal_df,
-                             pipeline.PipeConf(persist=False, engine="arrow", **cfg))
+                             pipeline.PipeConf(engine="arrow", **cfg))
     a = {r["conv_id"]: r for r in sinks_s["json_doc"].collect()}
     b = {r["conv_id"]: r for r in sinks_a["json_doc"].collect()}
     assert set(a) == set(b)

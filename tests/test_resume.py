@@ -36,7 +36,7 @@ def test_full_run_commits_all_sinks(spark, tiny_df, catalog):
 
 def test_kill_and_resume_exactly_once(spark, tiny_df, catalog):
     # simulate a run killed after the first two sinks committed
-    frames = pipeline.build(spark, tiny_df, pipeline.PipeConf(persist=False))
+    frames = pipeline.build(spark, tiny_df)
     catalog.write(frames["json_doc"], "json_doc", "r2")
     catalog.write(frames["error"], "error", "r2")
     pre = catalog.total_rows("json_doc")
@@ -122,6 +122,42 @@ def test_other_catalog_persists_nothing(spark, tiny_df):
     catalog = MemoryCatalog()
     res = pipeline.run(spark, src, catalog, run_id="mem")
     assert all(res.values()) and len(catalog.tables) == 5
+    assert persistent().size() == before
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_build_caches_nothing(spark, tiny_df):
+    """With the default conf ``build`` is a lazy plan: writing two of its
+    sinks leaves no persisted frame and json_doc reads no cache."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    frames = pipeline.build(spark, tiny_df)
+    for name in ("json_doc", "error"):
+        frames[name].write.format("noop").mode("overwrite").save()
+    assert persistent().size() == before
+    assert "InMemoryRelation" not in _optimized(frames["json_doc"])
+
+
+def test_run_without_a_path_renders_once(spark, tiny_df):
+    """A catalog with no path to stage under gets sink frames that all read
+    one persisted render, released when the run ends."""
+    plans = {}
+
+    class PlanCatalog(MemoryCatalog):
+        def write(self, df, table, run_id, source_snapshot=None):
+            plans[table] = _optimized(df)
+            return super().write(df, table, run_id, source_snapshot)
+
+    # an input no other test runs, so no other frame is its cache entry
+    src = tiny_df.where(F.col("turn_idx") < 1 << 30)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    pipeline.run(spark, src, PlanCatalog(), run_id="once")
+    for name in ("json_doc", "xml_doc", "error", "_metrics"):
+        assert "InMemoryRelation" in plans[name], name
     assert persistent().size() == before
 
 

@@ -293,7 +293,7 @@ def test_stream_sink_is_the_batch_doc_row(spark, split_input, tmp_path, lang):
     got = spark.read.parquet(out)
     batch = pipeline.build(
         spark, spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS),
-        pipeline.PipeConf(persist=False, langs=(lang,), **opts))[f"{lang}_doc"]
+        pipeline.PipeConf(langs=(lang,), **opts))[f"{lang}_doc"]
 
     def fields(df):
         return [(f.name, f.dataType) for f in df.schema.fields]
@@ -325,8 +325,7 @@ def test_stream_defaults_are_the_batch_defaults(spark, tmp_path):
     assert all(r.pop("complete") for r in rows)
 
     batch = pipeline.build(
-        spark, spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS),
-        pipeline.PipeConf(persist=False))["json_doc"]
+        spark, spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS))["json_doc"]
     want = [r.asDict() for r in batch.collect()]
     assert any(r["trimmed"] for r in want)
     assert sorted(rows, key=lambda r: r["conv_id"]) == \
@@ -347,7 +346,8 @@ def test_stream_renders_once_above_the_state(spark, tmp_path):
 
 
 @pytest.mark.parametrize("field", [dict(engine="sql"), dict(doc_batch=10),
-                                   dict(fold_level=2), dict(stage_dir="stage")])
+                                   dict(fold_level=2), dict(stage_dir="stage"),
+                                   dict(persist=True)])
 def test_stream_rejects_batch_only_fields(spark, tmp_path, field):
     with pytest.raises(ValueError):
         streaming.stream_coalesce(spark, str(tmp_path), **field)
@@ -374,7 +374,7 @@ def test_stream_resolves_roles_from_enrich_dictionaries(spark, tmp_path,
     got = {r["conv_id"]: r["doc"] for r in spark.read.parquet(out).collect()}
     batch = pipeline.build(
         spark, spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS),
-        pipeline.PipeConf(persist=False, max_doc_bytes=None, langs=("json",)))
+        pipeline.PipeConf(max_doc_bytes=None, langs=("json",)))
     want = {r["conv_id"]: r["doc"] for r in batch["json_doc"].collect()}
     assert got == want
     assert any('"assistant"' in doc for doc in want.values())
@@ -453,7 +453,7 @@ def test_state_holds_cap_plus_one_and_matches_batch(spark):
     assert doc["complete"] and doc["trimmed"] and doc["n_turns"] == cap
 
     batch = pipeline.build(spark, df, pipeline.PipeConf(
-        persist=False, max_doc_bytes=None, max_turns_per_conv=cap,
+        max_doc_bytes=None, max_turns_per_conv=cap,
         langs=("json",)))["json_doc"].first()
     assert batch["trimmed"]
     assert doc["doc"] == batch["doc"]

@@ -49,7 +49,7 @@ def frame_key(df: pd.DataFrame) -> list[tuple]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(app_name="check-contract", cpus=8, shuffle_partitions=16)
+    spark = get_spark(app_name="check-contract", cpus=8)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

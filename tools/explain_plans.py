@@ -34,7 +34,7 @@ def plan_of(df) -> str:
 
 
 def main() -> None:
-    spark = get_spark(app_name="explain", cpus=4, shuffle_partitions=8)
+    spark = get_spark(app_name="explain", cpus=4)
     spark.sparkContext.setLogLevel("ERROR")
     out = ["# PLANS — physical plans for the headline operators\n"]
     checks: list[tuple[str, bool, str]] = []
@@ -50,7 +50,7 @@ def main() -> None:
         not the details section repeating each operator)."""
         return len(_re.findall(r"\(\d+\) Exchange\b", plan))
 
-    jd = pipeline.build(spark, tdf, pipeline.PipeConf(persist=False))["json_doc"]
+    jd = pipeline.build(spark, tdf)["json_doc"]
     p = plan_of(jd)
     out.append("## transcript pipeline -> json_doc\n```\n" + p + "\n```\n")
     n_exch = shuffle_exchanges(p)
@@ -60,8 +60,7 @@ def main() -> None:
     # sql engine: window + aggregation + args branch must share the ONE
     # conv_id exchange (ReusedExchange), not re-shuffle the fact table
     jd_sql = pipeline.build(
-        spark, tdf, pipeline.PipeConf(persist=False, engine="sql",
-                                      langs=("json",)))["json_doc"]
+        spark, tdf, pipeline.PipeConf(engine="sql", langs=("json",)))["json_doc"]
     p_sql = plan_of(jd_sql)
     out.append("## transcript pipeline (sql engine) -> json_doc\n```\n" + p_sql + "\n```\n")
     n_sql = shuffle_exchanges(p_sql)

@@ -37,6 +37,8 @@ import sys
 
 
 def parse_events_per_doc(s: str):
+    """--events-per-doc value grammar (format.h:52-59): "none", "all", N
+    events, or -BYTES. An argparse `type`: a non-integer is a usage error."""
     if s == "none":
         return 0
     if s == "all":
@@ -76,6 +78,15 @@ def parse_fold(s: str) -> int:
     return lvl
 
 
+def parse_turn_cap(s: str) -> int:
+    """--max-turns-per-conv: an integer of at least 1 (PipeConf's bound),
+    checked as an argparse `type` so 0 is a usage error."""
+    n = int(s)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1 (got {n})")
+    return n
+
+
 def default_run_id(input_path: str) -> str:
     """The run id without --run-id: the input's basename plus a digest of
     its resolved path (a ``scheme://`` URI as it is): two inputs never
@@ -94,14 +105,14 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("input", help="input transcripts parquet path")
     p.add_argument("-O", "--out", required=True, help="output warehouse dir")
     p.add_argument("-l", "--lang", choices=["json", "xml", "both"], default="both")
-    p.add_argument("--events-per-doc", default=None,
+    p.add_argument("--events-per-doc", type=parse_events_per_doc, default=None,
                    help='"none", "all", N (count), or negative bytes budget')
     p.add_argument("-v", "--version", action="version",
                    version="transcriptpipe 0.4")
     p.add_argument("--max-doc-bytes", type=parse_size, default=8192,
                    help='trim cap per event doc: N, Nk, Nm, or "unlimited" '
                         "(reference --max-event-size grammar, min 1024)")
-    p.add_argument("--max-turns-per-conv", type=int, default=2048)
+    p.add_argument("--max-turns-per-conv", type=parse_turn_cap, default=2048)
     p.add_argument("--no-text", action="store_true",
                    help="exclude source text from docs (reference default; "
                         "--with-text inverse)")
@@ -193,8 +204,7 @@ def main(argv: list[str] | None = None) -> int:
     langs = ("json", "xml") if args.lang == "both" else (args.lang,)
     conf = pipeline.PipeConf(
         **render_fields,
-        doc_batch=(parse_events_per_doc(args.events_per_doc)
-                   if args.events_per_doc is not None else None),
+        doc_batch=args.events_per_doc,
         langs=langs,
         fold_level=args.fold,
         indent=args.indent,

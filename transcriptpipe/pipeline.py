@@ -15,9 +15,10 @@ entry point (``build``, ``run``, ``jvm_stage_frame``, ``rendered_frame``):
                  coalesces, caps, trims and renders JSON + XML per
                  conversation. Engine "sql": relational.py, all JVM, with its
                  own conv_id exchange. Both emit arrow_docs.DOC_SCHEMA.
-4. ``stage``     the rendered frame is written once to parquet
-                 (``stage_dir``) or persisted, so the sinks below are
-                 projections, not recomputations
+4. ``stage``     ``build`` leaves the rendered frame a lazy plan; ``run``
+                 stages it once to parquet (``stage_dir``) or persists it,
+                 so the sinks it commits are projections, not
+                 recomputations, and releases it when its loop ends
 5. ``sinks``     one frame per ``sink_names``: json_doc / xml_doc / error /
                  raw, S6 doc batching, then F8 fold re-rendering
 
@@ -62,11 +63,13 @@ class PipeConf:
     with_norm: bool = False
     """--with-norm analog: include the normalized summary section (norm{})
     in each event doc (ref lib/conv_buf.c:185-353; oracle.norm_object)."""
-    persist: bool = True
-    """Persist the rendered docs (MEMORY_AND_DISK) so the four sinks don't
-    each recompute enrich+exchange+render when they are materialized as
-    separate actions. At cluster scale the same role is played by a staging
-    table; the flag exists so single-sink runs skip it."""
+    persist: bool = False
+    """Persist the rendered docs (MEMORY_AND_DISK) so sinks materialized as
+    separate actions don't each recompute enrich+exchange+render; the
+    caller releases the cache with ``SinkFrames.staged.unpersist()``. Read
+    only by ``build`` (through ``stage``): ``run`` decides for itself — it
+    stages under a SinkCatalog and persists only for a catalog it cannot
+    stage under."""
     stage_dir: str | None = None
     """If set, the rendered doc frame is written once to this parquet path
     and every sink becomes a cheap projection of the staged table. Measured
@@ -102,6 +105,14 @@ class PipeConf:
     indent: int = 4
     """--indent analog (spaces per nesting level when folding; reference
     default 4, lib/conf.c:183-190)."""
+
+    def __post_init__(self):
+        # arrow_docs.cap_rows keeps each conversation's first row at or
+        # beyond the cap only as its trimmed marker: below 1 that is every
+        # conversation's only row, and every doc would vanish without error
+        if self.max_turns_per_conv < 1:
+            raise ValueError(f"max_turns_per_conv must be at least 1 "
+                             f"(got {self.max_turns_per_conv})")
 
 
 def cap_turns(df: DataFrame, cap: int) -> tuple[DataFrame, DataFrame]:
@@ -168,8 +179,9 @@ def stage(rendered: DataFrame, conf: PipeConf) -> DataFrame:
     sinks are materialized as separate actions. With ``stage_dir`` the frame
     is written there (eager) and read back with the schema it was written
     with, so no schema-inference job runs (Spark reads a parquet table
-    all-nullable either way); else it is persisted. ``run`` removes the
-    staging it derives and releases a persisted frame when it is done."""
+    all-nullable either way); with ``persist`` it is cached; else it stays
+    a lazy plan. ``run`` removes the staging it derives and releases a
+    persisted frame when it is done."""
     if conf.stage_dir:
         # staging is transient per-run scratch read a handful of times
         # and discarded — cheap codec (lz4) beats the session's durable
@@ -187,8 +199,9 @@ def stage(rendered: DataFrame, conf: PipeConf) -> DataFrame:
 
 class SinkFrames(dict):
     """The sinks layer's result: sink frames by name, in ``sink_names``
-    order, and ``staged``, the stage-layer frame they all project. A caller
-    done with the sinks releases it with ``staged.unpersist()``."""
+    order, and ``staged``, the stage-layer frame they all project. With the
+    default conf ``staged`` is a lazy plan and nothing needs releasing; a
+    caller that set ``persist`` releases it with ``staged.unpersist()``."""
 
     def __init__(self, staged: DataFrame):
         super().__init__()
@@ -242,8 +255,9 @@ def sinks(rendered: DataFrame, transcripts: DataFrame, conf: PipeConf
 
 def build(spark: SparkSession, transcripts: DataFrame, conf: PipeConf | None = None
           ) -> SinkFrames:
-    """Build all sink DataFrames: enrich → render → stage → sinks. Lazy
-    unless ``conf.stage_dir`` is set (the staging write runs here)."""
+    """Build all sink DataFrames: enrich → render → stage → sinks. Lazy and
+    cached nowhere with the default conf; ``conf.stage_dir`` makes the
+    staging write run here, ``conf.persist`` caches the rendered frame."""
     conf = conf or PipeConf()
     rendered = stage(render(enrich(transcripts, spark), conf), conf)
     return sinks(rendered, transcripts, conf)
@@ -257,7 +271,7 @@ def rendered_frame(spark: SparkSession, transcripts: DataFrame,
     prefix probes: on one host the sink writes hit a shared disk that a real
     4N cluster would scale, so the CPU-scaling evidence times this frame's
     computation."""
-    return render(enrich(transcripts, spark), conf or PipeConf(persist=False))
+    return render(enrich(transcripts, spark), conf or PipeConf())
 
 
 def jvm_stage_frame(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
@@ -284,20 +298,25 @@ def run(spark: SparkSession, transcripts: DataFrame, catalog, run_id: str,
     only the missing tables. Readers go through catalog.read(), which sees
     only manifest-committed files.
 
-    With a SinkCatalog and no ``conf.stage_dir`` it stages under
-    ``<root>/_staging/<run_id>`` and deletes that when the loop ends, on the
-    all-committed path too (clearing what a crashed run left); a caller's
-    ``stage_dir`` is never deleted. A persisted frame is released.
+    The run renders once and owns that materialization: with a SinkCatalog
+    and no ``conf.stage_dir`` it stages under ``<root>/_staging/<run_id>``
+    and deletes that when the loop ends, on the all-committed path too
+    (clearing what a crashed run left); a caller's ``stage_dir`` is used and
+    never deleted; with neither it persists the rendered frame and releases
+    it when the loop ends.
     """
     conf = conf or PipeConf()
     owned_stage = None
-    if conf.stage_dir is None and isinstance(catalog, SinkCatalog):
-        # stage the rendered frame under the warehouse so the sink writes
-        # are projections, not recomputations. Path-rooted catalogs only:
-        # an IcebergCatalog's root is a table namespace — set
-        # conf.stage_dir explicitly (a staging table/location) there.
-        owned_stage = os.path.join(catalog.root, "_staging", run_id)
-        conf = replace(conf, stage_dir=owned_stage)
+    if conf.stage_dir is None:
+        if isinstance(catalog, SinkCatalog):
+            # stage the rendered frame under the warehouse so the sink
+            # writes are projections, not recomputations
+            owned_stage = os.path.join(catalog.root, "_staging", run_id)
+            conf = replace(conf, stage_dir=owned_stage)
+        else:
+            # an IcebergCatalog's root is a table namespace, not a path:
+            # cache instead (or set conf.stage_dir to a staging location)
+            conf = replace(conf, persist=True)
     tables = [*sink_names(conf), "_metrics"]
     results = dict.fromkeys(tables)
     frames = None

@@ -19,7 +19,6 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinit
 def get_spark(
     app_name: str = "transcriptpipe",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
@@ -38,7 +37,6 @@ def get_spark(
       never thrown — SURVEY.md §2.9 "backpressure/errors").
     """
     cpus = cpus or DEFAULT_CPUS
-    shuffle_partitions = shuffle_partitions or max(cpus * 2, 8)
     # shuffle/spill files on tmpfs when available: the sandbox's /tmp is a
     # single virtual disk shared by every parallelism level, which a real
     # cluster would scale with its nodes (per-executor NVMe)
@@ -46,7 +44,7 @@ def get_spark(
     b = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -169,8 +169,9 @@ def stream_coalesce(spark: SparkSession, input_path: str,
     ``conf_fields`` are ``pipeline.PipeConf`` fields by name, built into one
     ``PipeConf`` with the batch defaults (``max_doc_bytes`` 8192, both
     languages; the ``xml`` column is null unless "xml" is in ``langs``).
-    Fields only the batch chain honours raise ValueError: an ``engine``
-    other than "arrow", ``doc_batch``, ``fold_level`` and ``stage_dir``.
+    Fields only the batch chain honours raise ValueError when set: an
+    ``engine`` other than "arrow", ``doc_batch``, ``fold_level``,
+    ``stage_dir`` and ``persist``.
 
     Modes (module docstring): drain with neither ``timeout_ms`` nor
     ``watermark``; processing time with ``timeout_ms``; event time with
@@ -184,8 +185,9 @@ def stream_coalesce(spark: SparkSession, input_path: str,
     if conf.engine != "arrow":
         raise ValueError(f"the stream renders with the arrow engine, "
                          f"not {conf.engine!r}")
-    for name in ("doc_batch", "fold_level", "stage_dir"):
-        if getattr(conf, name) is not None:
+    defaults = PipeConf()
+    for name in ("doc_batch", "fold_level", "stage_dir", "persist"):
+        if getattr(conf, name) != getattr(defaults, name):
             raise ValueError(f"{name} is batch-only; the stream cannot honour it")
     raw = (
         spark.readStream.schema(schemas.TRANSCRIPTS)
