@@ -59,14 +59,31 @@ def test_distinct_runs_append(spark, tiny_df, catalog):
     assert catalog.read(spark, "raw").count() == 2 * tiny_df.count()
 
 
-def test_metrics_match_sink_counts(spark, tiny_df, catalog):
-    pipeline.run(spark, tiny_df, catalog, run_id="m1")
-    metrics = {
-        r["sink"]: r["n_rows"]
-        for r in catalog.read(spark, "_metrics").collect()
-    }
-    for name in ("json_doc", "xml_doc", "error", "raw"):
-        assert metrics[name] == catalog.total_rows(name), name
+@pytest.mark.parametrize("conf", [
+    pipeline.PipeConf(),
+    pipeline.PipeConf(langs=("json",)),
+    pipeline.PipeConf(fold_level=1),
+    pipeline.PipeConf(doc_batch=3),
+], ids=["default", "json_only", "fold_level_1", "doc_batch_3"])
+def test_metrics_match_sink_counts(spark, tiny_df, catalog, conf):
+    """Every numeric ``_metrics`` column equals the same aggregate computed
+    from the committed table itself, null where the table lacks the
+    column: one row per committed sink."""
+    res = pipeline.run(spark, tiny_df, catalog, run_id="m1", conf=conf)
+    metrics = {r["sink"]: r.asDict() for r in catalog.read(spark, "_metrics").collect()}
+    assert list(res) == [*pipeline.sink_names(conf), "_metrics"]
+    assert sorted(metrics) == sorted(pipeline.sink_names(conf))
+    for name, got in metrics.items():
+        df = catalog.read(spark, name)
+        conv, doc = "conv_id" in df.columns, "doc" in df.columns
+        want = df.agg(
+            F.count("*").alias("n_rows"),
+            (F.count_distinct("conv_id") if conv else F.lit(None)).alias("n_convs"),
+            (F.approx_count_distinct("conv_id") if conv else F.lit(None)).alias("n_convs_approx"),
+            (F.sum(F.octet_length("doc")) if doc else F.lit(None)).alias("bytes_out"),
+        ).first().asDict()
+        assert {k: got[k] for k in want} == want, name
+        assert want["n_rows"] == catalog.total_rows(name), name
 
 
 def test_relative_root_stages_and_persists_nothing(spark, tiny_df, tmp_path,
@@ -169,20 +186,25 @@ def test_caller_stage_dir_is_kept(spark, tiny_df, catalog, tmp_path):
     assert not os.path.exists(os.path.join(catalog.root, "_staging", "k"))
 
 
-# Spark jobs of one fresh committed run of the default pipeline: staging
-# write, four sink writes, _metrics. A later change that removes jobs lowers
-# this pin.
-FRESH_RUN_JOBS = 17
+# Spark jobs of one fresh committed run of the default pipeline: the
+# staging write with its two dictionary broadcasts and its exchange, four
+# sink writes, and _metrics (its write plus three exchanges: one over the
+# staged docs, two for raw's exact count_distinct). A later change that
+# removes jobs lowers this pin.
+FRESH_RUN_JOBS = 12
 
 
 def test_job_counts(spark, tiny_df, catalog, jobs):
-    """A fresh run takes at most the pinned job count; a re-run of its
-    committed run_id returns the same keys, all None, and starts no job."""
+    """A fresh run takes at most the pinned job count, and at least one
+    write job per committed table plus the staging write in the caller's
+    job group (a writer thread that lost the group would drop its jobs
+    from the count); a re-run of its committed run_id returns the same
+    keys, all None, and starts no job."""
     def run():
         return pipeline.run(spark, tiny_df, catalog, run_id="j")
 
     n_fresh, fresh = jobs(run)
-    assert 0 < n_fresh <= FRESH_RUN_JOBS
+    assert len(fresh) + 1 <= n_fresh <= FRESH_RUN_JOBS
     n_again, again = jobs(run)
     assert n_again == 0
     assert list(again) == list(fresh) and not any(again.values())
@@ -215,8 +237,10 @@ def test_fault_injection_resume(spark, tiny_df, catalog, clean, monkeypatch,
                                 table, point):
     """A run that dies inside SinkCatalog.write for ``table`` (before its
     data write, or after its data files are written but before the manifest
-    commit) resumes under the same run_id to exactly the clean run's tables:
-    one snapshot each, the earlier commits untouched, no staging left."""
+    commit) still commits every other table, since all are written in one
+    concurrent wave; the resume under the same run_id writes only
+    ``table``, and ends with exactly the clean run's tables: one snapshot
+    each, the other commits untouched, no staging left."""
     write, commit = SinkCatalog.write, SinkCatalog._commit
 
     def faulty_write(self, df, name, *a, **k):
@@ -234,12 +258,12 @@ def test_fault_injection_resume(spark, tiny_df, catalog, clean, monkeypatch,
         m.setattr(SinkCatalog, "_commit", faulty_commit)
         with pytest.raises(Injected):
             pipeline.run(spark, tiny_df, catalog, run_id="f")
-    done = TABLES[:TABLES.index(table)]
-    assert [t for t in TABLES if catalog.committed("f", t)] == list(done)
+    done = [t for t in TABLES if t != table]
+    assert [t for t in TABLES if catalog.committed("f", t)] == done
     before = {t: catalog.manifest(t) for t in done}
 
     res = pipeline.run(spark, tiny_df, catalog, run_id="f")
-    assert [t for t in TABLES if res[t] is not None] == list(TABLES[len(done):])
+    assert [t for t in TABLES if res[t] is not None] == [table]
     for t in TABLES:
         assert _rows(spark, catalog, t) == clean[t], t
         assert len(catalog.manifest(t)["snapshots"]) == 1, t

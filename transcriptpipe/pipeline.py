@@ -18,9 +18,14 @@ entry point (``build``, ``run``, ``jvm_stage_frame``, ``rendered_frame``):
 4. ``stage``     ``build`` leaves the rendered frame a lazy plan; ``run``
                  stages it once to parquet (``stage_dir``) or persists it,
                  so the sinks it commits are projections, not
-                 recomputations, and releases it when its loop ends
+                 recomputations, and releases it once every write is done
 5. ``sinks``     one frame per ``sink_names``: json_doc / xml_doc / error /
                  raw, S6 doc batching, then F8 fold re-rendering
+
+``run`` then adds ``metrics_frame`` (the projected sinks counted in one
+aggregate over the staged frame, the others over their own frames) and
+commits every table in one concurrent wave, one writer thread per table
+(aushape writes each output through its own vtable, lib/output.c:26-99).
 
 Skew (north_rule requirement): a hot conversation is bounded by
 ``max_turns_per_conv`` (aushape's max_event_size trim, format.h:60-63). The
@@ -35,9 +40,11 @@ from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
+from functools import reduce
 
-from pyspark import StorageLevel
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -199,13 +206,17 @@ def stage(rendered: DataFrame, conf: PipeConf) -> DataFrame:
 
 class SinkFrames(dict):
     """The sinks layer's result: sink frames by name, in ``sink_names``
-    order, and ``staged``, the stage-layer frame they all project. With the
-    default conf ``staged`` is a lazy plan and nothing needs releasing; a
-    caller that set ``persist`` releases it with ``staged.unpersist()``."""
+    order, and ``staged``, the stage-layer frame they all derive from. With
+    the default conf ``staged`` is a lazy plan and nothing needs releasing;
+    a caller that set ``persist`` releases it with ``staged.unpersist()``.
+    ``projected`` names the sinks that are plain projections of ``staged``
+    (one row per conversation), which ``metrics_frame`` counts in one
+    aggregate over it."""
 
     def __init__(self, staged: DataFrame):
         super().__init__()
         self.staged = staged
+        self.projected: set[str] = set()
 
 
 def sink_names(conf: PipeConf) -> list[str]:
@@ -217,14 +228,17 @@ def sink_names(conf: PipeConf) -> list[str]:
     return [f"{lang}_doc" for lang in langs] + ["error", "raw"] + logs
 
 
+# each language's doc body column in arrow_docs.DOC_SCHEMA
+DOC_BODY = {"json": "doc", "xml": "xml"}
+
+
 def doc_sink_columns(lang: str) -> list[str | Column]:
     """A language's per-event doc-sink row over an ``arrow_docs.DOC_SCHEMA``
     frame: the envelope, that language's body as ``doc``, ``trimmed`` and
     ``error``. The batch ``json_doc``/``xml_doc`` sinks and the stream sink
     (streaming.run_stream_once) both select it."""
-    body = {"json": F.col("doc"), "xml": F.col("xml").alias("doc")}[lang]
-    return ["conv_id", "doc_id", "serial", "time", "n_turns", body,
-            "trimmed", "error"]
+    return ["conv_id", "doc_id", "serial", "time", "n_turns",
+            F.col(DOC_BODY[lang]).alias("doc"), "trimmed", "error"]
 
 
 def sinks(rendered: DataFrame, transcripts: DataFrame, conf: PipeConf
@@ -238,18 +252,21 @@ def sinks(rendered: DataFrame, transcripts: DataFrame, conf: PipeConf
     for name in sink_names(conf):
         if name.endswith("_doc"):
             out[name] = rendered.select(*doc_sink_columns(name.removesuffix("_doc")))
+            out.projected.add(name)
         elif name.endswith("_log"):
             lang = name.removesuffix("_log")
             out[name] = docbatch.batch_documents(
                 out[f"{lang}_doc"], events_per_doc=conf.doc_batch, fmt=lang)
         elif name == "error":
             out[name] = route.error_sink(rendered)
+            out.projected.add(name)
         else:
             out[name] = route.raw_sink(transcripts)
     if conf.fold_level is not None:
         for name, pretty in (("json_doc", prettify_json), ("xml_doc", prettify_xml)):
             if name in out:
                 out[name] = pretty(out[name], conf.indent, conf.fold_level)
+                out.projected.discard(name)
     return out
 
 
@@ -287,23 +304,31 @@ def jvm_stage_frame(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
 
 def run(spark: SparkSession, transcripts: DataFrame, catalog, run_id: str,
         conf: PipeConf | None = None, source_snapshot: str | None = None) -> dict:
-    """End-to-end committed run: one loop over the tables it commits,
-    ``sink_names(conf)`` plus ``_metrics``. Returns {table: snapshot|None}.
+    """End-to-end committed run of the tables ``sink_names(conf)`` plus
+    ``_metrics``. Returns {table: snapshot|None} in that order.
 
     Committed set first: if every table is committed for ``run_id``, nothing
-    is built and no Spark job starts. Otherwise it builds the sinks, adds
-    ``metrics_frame`` as one more frame and writes each table through
-    ``catalog.write``, which skips a table already committed for ``run_id``.
+    is built and no Spark job starts. Otherwise it builds the sinks and
+    commits every table in one concurrent wave: one thread per table calls
+    ``catalog.write``, which skips a table already committed for
+    ``run_id``; ``metrics_frame`` is planned while the sinks are written
+    and joins the wave as the last table. Each thread inherits the caller's
+    Spark job group, local properties and tags, so every job of the run is
+    accounted to the caller. The run waits for every write to settle and
+    then raises the first failure in table order, so one failed table never
+    hides what the others committed. ``_metrics`` is not the last commit: a
+    run that dies may leave it committed beside a missing sink, and resume
+    covers that like any other missing table.
     Exactly-once: re-running a killed run's run_id re-renders and writes
     only the missing tables. Readers go through catalog.read(), which sees
     only manifest-committed files.
 
     The run renders once and owns that materialization: with a SinkCatalog
     and no ``conf.stage_dir`` it stages under ``<root>/_staging/<run_id>``
-    and deletes that when the loop ends, on the all-committed path too
-    (clearing what a crashed run left); a caller's ``stage_dir`` is used and
-    never deleted; with neither it persists the rendered frame and releases
-    it when the loop ends.
+    and deletes that once every writer has finished, on the all-committed
+    path too (clearing what a crashed run left); a caller's ``stage_dir`` is
+    used and never deleted; with neither it persists the rendered frame and
+    releases it once every writer has finished.
     """
     conf = conf or PipeConf()
     owned_stage = None
@@ -318,49 +343,95 @@ def run(spark: SparkSession, transcripts: DataFrame, catalog, run_id: str,
             # cache instead (or set conf.stage_dir to a staging location)
             conf = replace(conf, persist=True)
     tables = [*sink_names(conf), "_metrics"]
-    results = dict.fromkeys(tables)
     frames = None
     try:
-        if not all(catalog.committed(run_id, t) for t in tables):
-            frames = build(spark, transcripts, conf)
-            frames["_metrics"] = metrics_frame(frames, run_id)  # over the sinks
-            for name in tables:
-                results[name] = catalog.write(frames[name], name, run_id, source_snapshot)
+        if all(catalog.committed(run_id, t) for t in tables):
+            return dict.fromkeys(tables)
+        frames = build(spark, transcripts, conf)
+        # leaving the block waits for every write, failed or not
+        with ThreadPoolExecutor(len(tables)) as pool:
+            def submit(table, df):
+                # each wrapper copies the caller's local properties, so a
+                # writer that changes one (a job group) changes only its own
+                write = inheritable_thread_target(spark)(catalog.write)
+                return pool.submit(write, df, table, run_id, source_snapshot)
+
+            futures = {t: submit(t, frames[t]) for t in tables[:-1]}
+            # planned while the sinks are written: building its plan takes
+            # 0.1-0.2 s of driver round trips to the JVM
+            futures["_metrics"] = submit("_metrics", metrics_frame(frames, run_id))
+        return {t: f.result() for t, f in futures.items()}
     finally:
         if frames is not None:
             frames.staged.unpersist()
         if owned_stage:
             shutil.rmtree(owned_stage, ignore_errors=True)
-    return results
 
 
-def metrics_frame(sinks: dict[str, DataFrame], run_id: str) -> DataFrame:
-    """Per-sink aggregate counts (A6) as a dataframe aggregate — accumulators
-    are unreliable under task retries (SURVEY.md §4.2.4).
+def _metric_row(sink: str, n_rows: Column, n_convs: Column | None = None,
+                n_convs_approx: Column | None = None,
+                bytes_out: Column | None = None) -> Column:
+    """One ``_metrics`` row as a struct of aggregates; a column the sink
+    lacks is null."""
+    def as_long(c, name):
+        return (F.lit(None) if c is None else c).cast("long").alias(name)
+
+    return F.struct(F.lit(sink).alias("sink"), as_long(n_rows, "n_rows"),
+                    as_long(n_convs, "n_convs"),
+                    as_long(n_convs_approx, "n_convs_approx"),
+                    as_long(bytes_out, "bytes_out"))
+
+
+def _staged_row(sink: str) -> Column:
+    """A ``SinkFrames.projected`` sink's ``_metrics`` row as aggregates over
+    the staged frame, which holds one row per conversation: a doc sink's
+    conversations are its rows, the error sink's are the docs that carry an
+    error, and the HLL sketch sees the same key set as over the sink."""
+    if sink == "error":
+        n_errs = F.size(route.doc_errors())
+        return _metric_row(sink, F.coalesce(F.sum(n_errs), F.lit(0)),
+                           F.count_if(n_errs > 0),
+                           F.approx_count_distinct(F.when(n_errs > 0, F.col("conv_id"))))
+    body = DOC_BODY[sink.removesuffix("_doc")]
+    return _metric_row(sink, F.count("*"), F.count("conv_id"),
+                       F.approx_count_distinct("conv_id"),
+                       F.sum(F.octet_length(body)))
+
+
+def _frame_row(sink: str, df: DataFrame) -> Column:
+    """Any other sink's ``_metrics`` row as aggregates over its own frame."""
+    conv = "conv_id" in df.columns
+    return _metric_row(
+        sink, F.count("*"),
+        F.count_distinct("conv_id") if conv else None,
+        F.approx_count_distinct("conv_id") if conv else None,
+        F.sum(F.octet_length("doc")) if "doc" in df.columns else None)
+
+
+def metrics_frame(sinks: SinkFrames, run_id: str) -> DataFrame:
+    """Per-sink aggregate counts (A6), one row per sink, as dataframe
+    aggregates — accumulators are unreliable under task retries (SURVEY.md
+    §4.2.4). Rows come from as few scans as the sinks allow:
+
+    * every ``SinkFrames.projected`` sink (``json_doc``/``xml_doc`` without
+      a fold, ``error``): ONE global aggregate over ``sinks.staged``, so
+      ``n_convs`` is a count, not a DISTINCT;
+    * every other sink (``raw``, whose exact count_distinct over the input
+      is the one scan that cannot be avoided; the S6 logs; folded docs):
+      one aggregate over its own frame.
 
     ``n_convs_approx`` (A7) is the HLL++ sketch count — at 10^12 rows the
     exact count_distinct pays a full shuffle of the distinct keys while the
     sketch merges map-side; both are emitted so the exact column can be
     dropped at scale."""
-    parts = []
-    for name, df in sinks.items():
-        has_conv = "conv_id" in df.columns
-        agg = df.agg(
-            F.count("*").alias("n_rows"),
-            (F.count_distinct("conv_id") if has_conv else F.lit(None)).alias("n_convs"),
-            (F.approx_count_distinct("conv_id") if has_conv else F.lit(None)).alias("n_convs_approx"),
-            (F.sum(F.octet_length("doc")) if "doc" in df.columns else F.lit(None)).alias("bytes_out"),
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(name).alias("sink"),
-            F.col("n_rows").cast("long"),
-            F.col("n_convs").cast("long"),
-            F.col("n_convs_approx").cast("long"),
-            F.col("bytes_out").cast("long"),
-            F.date_format(F.current_timestamp(), TIME_FMT).alias("committed_at"),
-        )
-        parts.append(agg)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    staged_rows = [_staged_row(n) for n in sinks if n in sinks.projected]
+    groups = [(sinks.staged, staged_rows)] if staged_rows else []
+    groups += [(df, [_frame_row(n, df)]) for n, df in sinks.items()
+               if n not in sinks.projected]
+    parts = [df.agg(F.array(*rows).alias("m")).select(F.inline("m"))
+             for df, rows in groups]
+    return reduce(DataFrame.unionByName, parts).select(
+        F.lit(run_id).alias("run_id"), "sink", "n_rows", "n_convs",
+        "n_convs_approx", "bytes_out",
+        F.date_format(F.current_timestamp(), TIME_FMT).alias("committed_at"),
+    )

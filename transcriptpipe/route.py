@@ -16,7 +16,7 @@ pure function DataFrame → {sink_name: DataFrame}. Sinks:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import schemas
@@ -28,22 +28,30 @@ CONV_LEVEL_CODES = [
 ]
 
 
-def error_sink(docs: DataFrame) -> DataFrame:
-    """Row-level errors + conversation-level validation errors.
-
-    Both come off the assembled docs frame (row errors travel on the doc row
-    as ``row_errs``), so the error sink costs one narrow pass over docs —
-    the input is never re-scanned or re-parsed for routing."""
-    row_errs = docs.select(
-        "conv_id", F.explode("row_errs").alias("e")
-    ).select("conv_id", "e.turn_idx", "e.error_code", "e.text")
-    conv_errs = docs.filter(F.col("error").isin(CONV_LEVEL_CODES)).select(
-        "conv_id",
+def doc_errors() -> Column:
+    """A doc row's error-sink rows: its row errors (``row_errs``, which
+    travel on the doc row), then its conversation-level validation error.
+    ``size`` of it is the doc's error-row count, which metrics_frame sums."""
+    conv_err = F.array(F.struct(
         F.lit(None).cast("int").alias("turn_idx"),
         F.col("error").alias("error_code"),
         F.lit(None).cast("string").alias("text"),
+    ))
+    return F.concat(
+        F.coalesce("row_errs", F.array()),
+        F.when(F.col("error").isin(CONV_LEVEL_CODES), conv_err).otherwise(F.array()),
     )
-    return row_errs.unionByName(conv_errs)
+
+
+def error_sink(docs: DataFrame) -> DataFrame:
+    """Row-level errors + conversation-level validation errors, in one
+    narrow pass over the assembled docs: each doc that carries an error
+    explodes its ``doc_errors``, so the input is never re-scanned or
+    re-parsed for routing."""
+    errs = doc_errors()
+    return (docs.filter(F.size(errs) > 0)
+            .select("conv_id", F.explode(errs).alias("e"))
+            .select("conv_id", "e.turn_idx", "e.error_code", "e.text"))
 
 
 def raw_sink(transcripts: DataFrame) -> DataFrame:
