@@ -111,8 +111,9 @@ wall = time.monotonic() - t0
 # Spark status REST API (M5 evidence): find the measured run's dominant
 # stage (the post-exchange render stage carries ~all executor time) and
 # report its task-duration quantiles — max/median is the straggler ratio
-# the hot-conversation skew defense (narrow turn cap + PART_MULT conv_id
-# repartition) is supposed to bound.
+# the hot-conversation skew defense (turn cap, beyond-cap rows crossing the
+# conv_id exchange as bare markers, AQE-sized partitions with a floor of
+# two per core) is supposed to bound.
 base = spark.sparkContext.uiWebUrl + "/api/v1"
 def get(p):
     with urllib.request.urlopen(base + p, timeout=30) as r:
@@ -322,10 +323,12 @@ real 4N multi-node cluster does not have.
 
 The corpus deliberately contains hot conversations (0.1% of convs at 2,000
 turns vs ~10 median) — the skew a salted/capped design must absorb. The
-defenses are the narrow per-conversation turn cap (`max_turns_per_conv`,
-applied BEFORE the shuffle) and the `PART_MULT`-widened `conv_id`
-repartition. Evidence, from the Spark status REST API's per-task summary
-of the dominant (render) stage of one timed local[32] run:
+defenses are the per-conversation turn cap (`max_turns_per_conv`: rows
+beyond it cross the shuffle as bare `conv_id`/`turn_idx` markers) and the
+`conv_id` repartition that AQE sizes by those bytes, down to a floor of
+`spark.sql.adaptive.coalescePartitions.minPartitionNum` (two partitions
+per core in `get_spark`). Evidence, from the Spark status REST API's
+per-task summary of the dominant (render) stage of one timed local[32] run:
 
 | stage | tasks | task time min/median/max (ms) | max/median |
 |---|---|---|---|

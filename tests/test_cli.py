@@ -217,7 +217,9 @@ def test_parse_fold_grammar(capsys):
 
 
 @pytest.mark.parametrize("flag,value", [("--events-per-doc", "x"),
-                                        ("--max-turns-per-conv", "0")])
+                                        ("--max-turns-per-conv", "0"),
+                                        ("--cpus", "0"), ("--cpus", "-1"),
+                                        ("--indent", "-1")])
 def test_bad_value_is_usage_error_before_the_session(monkeypatch, capsys,
                                                      flag, value):
     """A value the run cannot honour is an argparse usage error (exit 2):

@@ -1,19 +1,22 @@
-"""The sorted render pass across Arrow batch boundaries — no Spark.
+"""The sorted render pass across Arrow batch boundaries, and the same rows
+through Spark.
 
 ``arrow_docs.render_sorted_batches`` carries the open conversation from one
 batch into the next, and ``arrow_docs.cap_rows`` is its turn cap. Cutting
 one sorted frame at every position, or into 1-row batches, must not change
 a byte of the output, and that output must equal the oracle's at the same
-cap."""
+cap. Through ``pipeline.build`` the beyond-cap rows cross the exchange as
+bare markers, and both engines must still equal the oracle."""
 
 from __future__ import annotations
 
+import json
 from datetime import datetime, timedelta
 
 import pandas as pd
 import pytest
 
-from transcriptpipe import arrow_docs, oracle
+from transcriptpipe import arrow_docs, oracle, pipeline, render, schemas
 
 CAP = 4
 T0 = datetime(2026, 3, 4)
@@ -114,3 +117,44 @@ def test_cap_rows_keeps_the_first_row_at_or_beyond_the_cap(frame):
     }
     assert arrow_docs.cap_rows(kept, CAP).equals(kept)
     assert arrow_docs.cap_rows(frame, None) is frame
+
+
+def _spark_frame(spark):
+    return spark.createDataFrame(_raw_rows(), schema=schemas.TRANSCRIPTS)
+
+
+@pytest.mark.parametrize("engine", pipeline.ENGINES)
+def test_spark_cap_matches_oracle(spark, engine):
+    """Sparse turn_idx around the cap, a conversation with only beyond-cap
+    rows, a falling ts and a row error, through the exchange and the
+    render: the doc sinks and the error sink equal the oracle's."""
+    conf = pipeline.PipeConf(max_turns_per_conv=CAP, engine=engine)
+    sinks = pipeline.build(spark, _spark_frame(spark), conf)
+    want = oracle.run_pipeline(_raw_rows(), max_turns_per_conv=CAP)
+    docs = sorted((r.asDict() for r in sinks["json_doc"].collect()),
+                  key=lambda d: d["conv_id"])
+    assert docs == want["json_doc"]
+    assert {r["conv_id"]: r["doc"] for r in sinks["xml_doc"].collect()} == {
+        d["conv_id"]: render.xml_from_doc(json.loads(d["doc"]))
+        for d in want["json_doc"]}
+
+    def key(e):
+        return e["conv_id"], e["turn_idx"] is not None, e["turn_idx"] or 0
+
+    assert (sorted((r.asDict() for r in sinks["error"].collect()), key=key)
+            == sorted(want["error"], key=key))
+
+
+def test_exchange_sends_beyond_cap_rows_as_bare_markers(spark):
+    """A row at or beyond the cap crosses the exchange with conv_id and
+    turn_idx only; a row under it keeps every column."""
+    rows = pipeline.exchange(pipeline.enrich(_spark_frame(spark), spark),
+                             CAP).collect()
+    assert len(rows) == len(_raw_rows())
+    bare = ("conv_id", "turn_idx")
+    for r in rows:
+        rest = [v for k, v in r.asDict().items() if k not in bare]
+        if r["turn_idx"] >= CAP:
+            assert rest == [None] * len(rest), r
+        else:
+            assert None not in (r["role_name"], r["text"], r["ts"]), r

@@ -34,6 +34,16 @@ def test_full_run_commits_all_sinks(spark, tiny_df, catalog):
     assert catalog.read(spark, "json_doc").count() == snap["n_rows"]
 
 
+def test_exchange_is_sized_by_its_data(spark, tiny_df, catalog):
+    """The conv_id exchange names no partition count: AQE coalesces a
+    small input's render into one task, so each doc sink's snapshot is one
+    data file, not one per fixed exchange partition."""
+    pipeline.run(spark, tiny_df, catalog, run_id="s")
+    for name in ("json_doc", "xml_doc"):
+        [snap] = catalog.manifest(name)["snapshots"]
+        assert len(snap["files"]) == 1, (name, snap["files"])
+
+
 def test_kill_and_resume_exactly_once(spark, tiny_df, catalog):
     # simulate a run killed after the first two sinks committed
     frames = pipeline.build(spark, tiny_df)

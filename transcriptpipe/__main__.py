@@ -78,13 +78,17 @@ def parse_fold(s: str) -> int:
     return lvl
 
 
-def parse_turn_cap(s: str) -> int:
-    """--max-turns-per-conv: an integer of at least 1 (PipeConf's bound),
-    checked as an argparse `type` so 0 is a usage error."""
-    n = int(s)
-    if n < 1:
-        raise argparse.ArgumentTypeError(f"must be at least 1 (got {n})")
-    return n
+def at_least(lo: int):
+    """An argparse `type`: an integer of at least ``lo``, so a smaller value
+    (--max-turns-per-conv 0, --cpus 0, --indent -1) is a usage error before
+    the session starts, not a value the run silently reinterprets."""
+    # argparse names this function in "invalid integer value: 'x'"
+    def integer(s: str) -> int:
+        n = int(s)
+        if n < lo:
+            raise argparse.ArgumentTypeError(f"must be at least {lo} (got {n})")
+        return n
+    return integer
 
 
 def default_run_id(input_path: str) -> str:
@@ -112,7 +116,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--max-doc-bytes", type=parse_size, default=8192,
                    help='trim cap per event doc: N, Nk, Nm, or "unlimited" '
                         "(reference --max-event-size grammar, min 1024)")
-    p.add_argument("--max-turns-per-conv", type=parse_turn_cap, default=2048)
+    p.add_argument("--max-turns-per-conv", type=at_least(1), default=2048)
     p.add_argument("--no-text", action="store_true",
                    help="exclude source text from docs (reference default; "
                         "--with-text inverse)")
@@ -123,7 +127,7 @@ def build_parser() -> argparse.ArgumentParser:
                         'folds everything (compact), N unfolds nesting '
                         "levels <= N (reference --fold, default: no "
                         "re-render — canonical compact)")
-    p.add_argument("--indent", type=int, default=4,
+    p.add_argument("--indent", type=at_least(0), default=4,
                    help="spaces per nesting level when folding "
                         "(reference --indent default 4)")
     p.add_argument("--engine", choices=["arrow", "sql"],
@@ -138,7 +142,9 @@ def build_parser() -> argparse.ArgumentParser:
                         "of batch (EOE-driven stateful coalesce)")
     p.add_argument("--watermark", default=None,
                    help='streaming late-data watermark, e.g. "10 minutes"')
-    p.add_argument("--cpus", type=int, default=None)
+    p.add_argument("--cpus", type=at_least(1), default=None,
+                   help="local[N] width (default: SPARK_GRAFT_CPUS, else "
+                        "every core this process may run on)")
     return p
 
 

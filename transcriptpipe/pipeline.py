@@ -6,10 +6,13 @@ entry point (``build``, ``run``, ``jvm_stage_frame``, ``rendered_frame``):
 1. ``enrich``    narrow: null text → '', role and tool names from two
                  broadcast dictionary joins (enrich.enrich; one
                  whole-stage-codegen span, no shuffle of the fact table)
-2. ``exchange``  the ONE shuffle of the fact table: flat raw turns
-                 repartitioned on conv_id, then a Tungsten
-                 sortWithinPartitions(conv_id, turn_idx) — binary and
-                 spillable, no per-group JVM object state
+2. ``exchange``  the ONE shuffle of the fact table: flat raw turns, those
+                 at or beyond the turn cap as bare (conv_id, turn_idx)
+                 markers, repartitioned on conv_id with no fixed count
+                 (AQE coalesces it by the bytes the render uses, down to
+                 the session's floor), then a
+                 Tungsten sortWithinPartitions(conv_id, turn_idx) — binary
+                 and spillable, no per-group JVM object state
 3. ``render``    engine "arrow" (default): one mapInPandas pass over the
                  sorted stream (arrow_docs + fastkernel) that tokenizes,
                  coalesces, caps, trims and renders JSON + XML per
@@ -28,12 +31,13 @@ commits every table in one concurrent wave, one writer thread per table
 (aushape writes each output through its own vtable, lib/output.c:26-99).
 
 Skew (north_rule requirement): a hot conversation is bounded by
-``max_turns_per_conv`` (aushape's max_event_size trim, format.h:60-63). The
-arrow render caps inside the sorted pass (arrow_docs.cap_rows) — rows are
-consecutive per conversation there, so the bound needs no pre-aggregation;
-the sql render caps with ``cap_turns`` before its grouped aggregation. Per
-task, the arrow render holds one in-flight conversation of at most cap + 1
-rows.
+``max_turns_per_conv`` (aushape's max_event_size trim, format.h:60-63). It
+crosses the exchange with at most ``cap`` full rows; the rest are bare
+markers. The arrow render caps inside the sorted pass (arrow_docs.cap_rows)
+— rows are consecutive per conversation there, so the bound needs no
+pre-aggregation; the sql render caps with ``cap_turns`` before its grouped
+aggregation. Per task, the arrow render holds one in-flight conversation of
+at most cap + 1 rows.
 """
 
 from __future__ import annotations
@@ -54,13 +58,6 @@ from .render import TIME_FMT, prettify_json, prettify_xml
 from .sinks import SinkCatalog
 
 ENGINES = ("arrow", "sql")
-
-# tasks per core in the exchange: waves pack tightly and a skewed
-# (hot-conversation) partition costs 1/4 core-slot, not a straggler wave.
-# Event-log measured: 47 auto partitions on 32 cores = 1.5 waves with a 14s
-# max task; 4x parallelism cuts wall ~25% (see BENCH/BASELINE.md)
-PART_MULT = 4
-
 
 @dataclass
 class PipeConf:
@@ -151,14 +148,28 @@ def check_unique_turns(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def exchange(enriched: DataFrame) -> DataFrame:
+def exchange(enriched: DataFrame, cap: int) -> DataFrame:
     """The exchange layer: the render kernel's columns, repartitioned on
     conv_id and sorted by (conv_id, turn_idx) within each partition — the
-    shape arrow_docs.render_docs_sorted consumes."""
-    n_parts = enriched.sparkSession.sparkContext.defaultParallelism * PART_MULT
+    shape arrow_docs.render_docs_sorted consumes.
+
+    A row at or beyond the turn cap ``cap`` crosses as a bare marker: only
+    conv_id and turn_idx, every other column null. The render keeps at most
+    one such row per conversation, and only to mark its doc trimmed
+    (arrow_docs.cap_rows), so but for those markers the bytes shuffled are
+    the bytes rendered. The repartition names no count: it starts at
+    ``spark.sql.shuffle.partitions`` and AQE coalesces it by those bytes,
+    so a small input renders in a few Python tasks, not a fixed multiple
+    of the cores. A large input keeps at least
+    ``spark.sql.adaptive.coalescePartitions.minPartitionNum`` partitions
+    (``get_spark`` sets it to the starting count, two per core), so a hot
+    conversation's task is not the tail of a half-empty wave."""
+    live = F.col("turn_idx") < cap
     return (
-        enriched.select(*arrow_docs.SORTED_COLS)
-        .repartition(n_parts, "conv_id")
+        enriched.select(*(c if c in ("conv_id", "turn_idx")
+                          else F.when(live, F.col(c)).alias(c)
+                          for c in arrow_docs.SORTED_COLS))
+        .repartition("conv_id")
         .sortWithinPartitions("conv_id", "turn_idx")
     )
 
@@ -177,7 +188,8 @@ def render(enriched: DataFrame, conf: PipeConf) -> DataFrame:
             with_norm=conf.with_norm,
             want_xml="xml" in conf.langs,
         )
-    return arrow_docs.render_docs_sorted(exchange(enriched), conf)
+    return arrow_docs.render_docs_sorted(
+        exchange(enriched, conf.max_turns_per_conv), conf)
 
 
 def stage(rendered: DataFrame, conf: PipeConf) -> DataFrame:
@@ -299,7 +311,7 @@ def jvm_stage_frame(spark: SparkSession, transcripts: DataFrame) -> DataFrame:
     memory-bandwidth effects: if this stage scales across core counts while
     the full pipeline does not, the gap is Python-worker/host bandwidth, not
     plan serialization."""
-    return exchange(enrich(transcripts, spark))
+    return exchange(enrich(transcripts, spark), PipeConf().max_turns_per_conv)
 
 
 def run(spark: SparkSession, transcripts: DataFrame, catalog, run_id: str,
@@ -368,44 +380,44 @@ def run(spark: SparkSession, transcripts: DataFrame, catalog, run_id: str,
             shutil.rmtree(owned_stage, ignore_errors=True)
 
 
-def _metric_row(sink: str, n_rows: Column, n_convs: Column | None = None,
-                n_convs_approx: Column | None = None,
-                bytes_out: Column | None = None) -> Column:
-    """One ``_metrics`` row as a struct of aggregates; a column the sink
-    lacks is null."""
-    def as_long(c, name):
-        return (F.lit(None) if c is None else c).cast("long").alias(name)
+def _metric_row(sink: str, n_rows: str, n_convs: str = "NULL",
+                n_convs_approx: str = "NULL", bytes_out: str = "NULL") -> str:
+    """One ``_metrics`` row as a SQL struct of aggregates; a column the sink
+    lacks is null. SQL text, not Column calls: each Column function is a
+    driver round trip to the JVM, and a run plans these while its sinks
+    are written."""
+    return (f"named_struct('sink', '{sink}', "
+            f"'n_rows', CAST({n_rows} AS BIGINT), "
+            f"'n_convs', CAST({n_convs} AS BIGINT), "
+            f"'n_convs_approx', CAST({n_convs_approx} AS BIGINT), "
+            f"'bytes_out', CAST({bytes_out} AS BIGINT))")
 
-    return F.struct(F.lit(sink).alias("sink"), as_long(n_rows, "n_rows"),
-                    as_long(n_convs, "n_convs"),
-                    as_long(n_convs_approx, "n_convs_approx"),
-                    as_long(bytes_out, "bytes_out"))
 
-
-def _staged_row(sink: str) -> Column:
+def _staged_row(sink: str) -> str:
     """A ``SinkFrames.projected`` sink's ``_metrics`` row as aggregates over
     the staged frame, which holds one row per conversation: a doc sink's
     conversations are its rows, the error sink's are the docs that carry an
     error, and the HLL sketch sees the same key set as over the sink."""
     if sink == "error":
-        n_errs = F.size(route.doc_errors())
-        return _metric_row(sink, F.coalesce(F.sum(n_errs), F.lit(0)),
-                           F.count_if(n_errs > 0),
-                           F.approx_count_distinct(F.when(n_errs > 0, F.col("conv_id"))))
+        n_errs = f"size({route.doc_errors()})"
+        return _metric_row(sink, f"coalesce(sum({n_errs}), 0)",
+                           f"count_if({n_errs} > 0)",
+                           f"approx_count_distinct(IF({n_errs} > 0, conv_id, NULL))")
     body = DOC_BODY[sink.removesuffix("_doc")]
-    return _metric_row(sink, F.count("*"), F.count("conv_id"),
-                       F.approx_count_distinct("conv_id"),
-                       F.sum(F.octet_length(body)))
+    return _metric_row(sink, "count(*)", "count(conv_id)",
+                       "approx_count_distinct(conv_id)",
+                       f"sum(octet_length({body}))")
 
 
-def _frame_row(sink: str, df: DataFrame) -> Column:
+def _frame_row(sink: str, df: DataFrame) -> str:
     """Any other sink's ``_metrics`` row as aggregates over its own frame."""
-    conv = "conv_id" in df.columns
-    return _metric_row(
-        sink, F.count("*"),
-        F.count_distinct("conv_id") if conv else None,
-        F.approx_count_distinct("conv_id") if conv else None,
-        F.sum(F.octet_length("doc")) if "doc" in df.columns else None)
+    row = {"n_rows": "count(*)"}
+    if "conv_id" in df.columns:
+        row.update(n_convs="count(DISTINCT conv_id)",
+                   n_convs_approx="approx_count_distinct(conv_id)")
+    if "doc" in df.columns:
+        row["bytes_out"] = "sum(octet_length(doc))"
+    return _metric_row(sink, **row)
 
 
 def metrics_frame(sinks: SinkFrames, run_id: str) -> DataFrame:
@@ -428,7 +440,7 @@ def metrics_frame(sinks: SinkFrames, run_id: str) -> DataFrame:
     groups = [(sinks.staged, staged_rows)] if staged_rows else []
     groups += [(df, [_frame_row(n, df)]) for n, df in sinks.items()
                if n not in sinks.projected]
-    parts = [df.agg(F.array(*rows).alias("m")).select(F.inline("m"))
+    parts = [df.selectExpr(f"inline(array({', '.join(rows)}))")
              for df, rows in groups]
     return reduce(DataFrame.unionByName, parts).select(
         F.lit(run_id).alias("run_id"), "sink", "n_rows", "n_convs",

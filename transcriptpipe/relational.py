@@ -300,10 +300,8 @@ def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192
     engine's sorted-stream shape: the shuffle moves (conv_id, turn_idx,
     role, text, tool, ts), not parsed maps)."""
     from . import parse as parse_mod
-    from .pipeline import PART_MULT
 
     has_cap = "turn_capped" in enriched.columns
-    n_parts = enriched.sparkSession.sparkContext.defaultParallelism * PART_MULT
 
     role = F.col("role_name")
     registered = role.isin(_REGISTERED)
@@ -316,7 +314,7 @@ def render_docs_relational(enriched: DataFrame, max_doc_bytes: int | None = 8192
         F.octet_length(F.to_json(F.array(F.col("text")))) - 2 + 1
     ).cast("long")
 
-    p = parse_mod.parse_turns(enriched.repartition(n_parts, "conv_id"))
+    p = parse_mod.parse_turns(enriched.repartition("conv_id"))
     # UNKNOWN_TOOL after PARSE_FAIL/INVALID_HEX (the oracle's order)
     p = p.withColumn(
         "row_error",

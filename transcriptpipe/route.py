@@ -16,8 +16,7 @@ pure function DataFrame → {sink_name: DataFrame}. Sinks:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from . import schemas
 
@@ -28,19 +27,17 @@ CONV_LEVEL_CODES = [
 ]
 
 
-def doc_errors() -> Column:
-    """A doc row's error-sink rows: its row errors (``row_errs``, which
-    travel on the doc row), then its conversation-level validation error.
-    ``size`` of it is the doc's error-row count, which metrics_frame sums."""
-    conv_err = F.array(F.struct(
-        F.lit(None).cast("int").alias("turn_idx"),
-        F.col("error").alias("error_code"),
-        F.lit(None).cast("string").alias("text"),
-    ))
-    return F.concat(
-        F.coalesce("row_errs", F.array()),
-        F.when(F.col("error").isin(CONV_LEVEL_CODES), conv_err).otherwise(F.array()),
-    )
+def doc_errors() -> str:
+    """A doc row's error-sink rows, as one SQL expression: its row errors
+    (``row_errs``, which travel on the doc row), then its
+    conversation-level validation error. ``size`` of it is the doc's
+    error-row count, which metrics_frame sums inside its own SQL
+    aggregates."""
+    codes = ", ".join(f"'{c}'" for c in CONV_LEVEL_CODES)
+    return ("concat(coalesce(row_errs, array()), "
+            f"IF(error IN ({codes}), array(named_struct("
+            "'turn_idx', CAST(NULL AS INT), 'error_code', error, "
+            "'text', CAST(NULL AS STRING))), array()))")
 
 
 def error_sink(docs: DataFrame) -> DataFrame:
@@ -49,8 +46,8 @@ def error_sink(docs: DataFrame) -> DataFrame:
     explodes its ``doc_errors``, so the input is never re-scanned or
     re-parsed for routing."""
     errs = doc_errors()
-    return (docs.filter(F.size(errs) > 0)
-            .select("conv_id", F.explode(errs).alias("e"))
+    return (docs.filter(f"size({errs}) > 0")
+            .selectExpr("conv_id", f"explode({errs}) AS e")
             .select("conv_id", "e.turn_idx", "e.error_code", "e.text"))
 
 
